@@ -1,20 +1,23 @@
-"""Pluggable similarities beyond BM25 (reference ``search/similarities/``).
+"""Pluggable similarities (reference ``search/similarities/``).
 
-Each similarity reduces to two pieces the searcher's single-scan evaluation
-plumbs through:
+Every similarity, the default BM25 included, reduces to two pieces the
+searcher plumbs through one scoring path:
 
-- ``term_params(boost, df, ttf, doc_count, sum_ttf) -> (w1, w2)`` — per-term
-  scalars resolved once on the driver from global stats (the Weight/SimScorer
-  construction step);
-- ``score(w1, w2, tfs, norms) -> float32`` — the vectorized per-posting
-  kernel run inside the Arrow unpack UDF.
+- ``term_params(boost, df, ttf, doc_count, sum_ttf) -> tuple`` — per-term
+  scalars (``n_params`` of them) resolved once on the driver from global
+  stats (the Weight/SimScorer construction step);
+- ``score(*params, tfs, norms) -> float32`` — the vectorized per-posting
+  kernel run inside the Arrow unpack UDF, each param broadcast per posting.
 
-All three kernels are monotone non-decreasing in tf and non-increasing in
+Every kernel is monotone non-decreasing in tf and non-increasing in
 document length, so block-max pruning with per-block ``(max_tf, min_norm)``
 stays sound under any of them.
 
 Float semantics mirror the reference exactly (rank-identity requirement):
 
+- ``BM25Similarity`` (the searcher's default): ``weight = f32(f32(boost) *
+  idf)`` and ``score = f32(weight * f32(tf / (tf + cache[norm])))`` — see
+  :mod:`lucene_solr_spark.functions.bm25`.
 - ``ClassicSimilarity`` (TF-IDF): ``idf = f32(ln((N+1)/(df+1)) + 1)``
   (``ClassicSimilarity.java:61-63``), ``queryWeight = f32(boost * idf)``
   (``TFIDFSimilarity.java:543``), ``score = f32(f32(f32(sqrt(tf)) *
@@ -36,10 +39,12 @@ from __future__ import annotations
 
 import numpy as np
 
+from . import bm25
 from .smallfloat import byte4_to_int
 
 __all__ = [
     "Similarity",
+    "BM25Similarity",
     "ClassicSimilarity",
     "BooleanSimilarity",
     "LMDirichletSimilarity",
@@ -105,6 +110,45 @@ class Similarity:
 
     def score(self, w1, w2, tfs, norms):
         raise NotImplementedError
+
+
+class BM25Similarity(Similarity):
+    """BM25Similarity (``search/similarities/BM25Similarity.java``), the
+    searcher's default: params ``(f32(f32(boost)·idf), avgdl)`` and the
+    float32-exact :func:`bm25.score_tf_norm` kernel over
+    :func:`bm25.norm_cache` ``(avgdl)`` — no state beyond (k1, b).
+
+    Every leaf score of this family is ``f32(w·t)`` with the unit score
+    ``t = f32(tf/(tf + cache[norm]))`` independent of the term, which is the
+    factorisation ``batch_search`` relies on."""
+
+    name = "bm25"
+
+    def __init__(self, k1: float = bm25.DEFAULT_K1, b: float = bm25.DEFAULT_B):
+        if not (k1 >= 0 and np.isfinite(k1)):
+            raise ValueError("illegal k1 value")
+        if not (0.0 <= b <= 1.0):
+            raise ValueError("b must be within [0, 1]")
+        self.k1 = float(np.float32(k1))
+        self.b = float(np.float32(b))
+
+    def scaled_boost(self, boost) -> np.float32:
+        """The float32 boost the weight multiplies with idf."""
+        return np.float32(boost)
+
+    def term_params(self, boost, df, ttf, doc_count, sum_ttf):
+        w = np.float32(self.scaled_boost(boost) * bm25.idf(df, doc_count))
+        return self.weight_params(w, doc_count, sum_ttf)
+
+    def weight_params(self, weight, doc_count, sum_ttf) -> tuple:
+        """Params that score ``f32(weight·t)`` for a precomputed weight."""
+        return (float(weight), float(bm25.avg_field_length(sum_ttf, doc_count)))
+
+    def score(self, w, avgdl, tfs, norms):
+        if len(tfs) == 0:
+            return np.empty(0, np.float32)
+        cache = bm25.norm_cache(np.float32(avgdl[0]), self.k1, self.b)
+        return bm25.score_tf_norm(tfs, norms, np.asarray(w, dtype=np.float32), cache)
 
 
 class ClassicSimilarity(Similarity):
@@ -763,7 +807,7 @@ class AxiomaticF3LOGSimilarity(_AxiomaticF3):
         return np.log((doc_count + 1.0) / float(df))
 
 
-class LegacyBM25Similarity(Similarity):
+class LegacyBM25Similarity(BM25Similarity):
     """LegacyBM25Similarity (``reference lucene/misc/src/java/org/apache/
     lucene/search/similarity/LegacyBM25Similarity.java:66-68``): classic BM25
     WITH the (k1+1) numerator — implemented exactly as the reference does, by
@@ -772,32 +816,9 @@ class LegacyBM25Similarity(Similarity):
     and ranks are identical."""
 
     name = "legacy_bm25"
-    n_params = 2
 
-    def __init__(self, k1: float = 1.2, b: float = 0.75):
-        if not (k1 >= 0 and np.isfinite(k1)):
-            raise ValueError("illegal k1 value")
-        if not (0.0 <= b <= 1.0):
-            raise ValueError("b must be within [0, 1]")
-        self.k1 = float(np.float32(k1))
-        self.b = float(np.float32(b))
-        self._cache = None
-
-    def term_params(self, boost, df, ttf, doc_count, sum_ttf):
-        from . import bm25
-
-        self._cache = bm25.norm_cache(
-            bm25.avg_field_length(sum_ttf, doc_count), self.k1, self.b
-        )
-        legacy = np.float32(boost) * (np.float32(1.0) + np.float32(self.k1))
-        w = np.float32(np.float32(legacy) * bm25.idf(df, doc_count))
-        return (float(w), 0.0)
-
-    def score(self, w1, w2, tfs, norms):
-        norm = self._cache[np.asarray(norms, dtype=np.int64) & 0xFF].astype(np.float64)
-        freq = np.asarray(tfs, dtype=np.float64)
-        t = (freq / (freq + norm)).astype(np.float32)
-        return (w1.astype(np.float32) * t).astype(np.float32)
+    def scaled_boost(self, boost) -> np.float32:
+        return np.float32(boost) * (np.float32(1.0) + np.float32(self.k1))
 
 
 class MultiSimilarity(Similarity):
@@ -810,7 +831,7 @@ class MultiSimilarity(Similarity):
         if not sims:
             raise ValueError("need at least one sub-similarity")
         self.sims = list(sims)
-        self.n_params = sum(getattr(s, "n_params", 2) for s in self.sims)
+        self.n_params = sum(s.n_params for s in self.sims)
         self.name = "multi(" + ",".join(s.name for s in self.sims) + ")"
 
     def term_params(self, boost, df, ttf, doc_count, sum_ttf):
@@ -824,7 +845,7 @@ class MultiSimilarity(Similarity):
         acc = None
         i = 0
         for s in self.sims:
-            k = getattr(s, "n_params", 2)
+            k = s.n_params
             sub = s.score(*ws[i : i + k], tfs, norms).astype(np.float32)
             acc = sub if acc is None else (acc + sub).astype(np.float32)
             i += k

@@ -580,7 +580,7 @@ def nearest_fuzzy_search(searcher, text: str, k: int = 10):
         return searcher._empty().orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     scored = None
     for slot in _leaf_slots(leaves):
-        part = searcher._scored_postings(slot).select("doc_id", "score")
+        part = searcher._scored_postings(searcher._weight_params(slot)).select("doc_id", "score")
         scored = part if scored is None else scored.unionByName(part)
     return _sum_leaf_scores(searcher, scored, k)
 
@@ -614,7 +614,7 @@ def fuzzy_like_this_search(
     scored = None
     for slot in _leaf_slots(leaves):
         if ignore_tf:
-            base = searcher._scored_postings({t: 1.0 for t in slot}).select("doc_id", "term")
+            base = searcher._matching_postings(slot).select("doc_id", "term")
             wdf = spark.createDataFrame(
                 [(t, float(w)) for t, w in slot.items()], "term string, _w float"
             )
@@ -622,7 +622,7 @@ def fuzzy_like_this_search(
                 "doc_id", F.col("_w").alias("score")
             )
         else:
-            part = searcher._scored_postings(slot).select("doc_id", "score")
+            part = searcher._scored_postings(searcher._weight_params(slot)).select("doc_id", "score")
         scored = part if scored is None else scored.unionByName(part)
     return _sum_leaf_scores(searcher, scored, k)
 

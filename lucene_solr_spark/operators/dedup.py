@@ -497,8 +497,11 @@ def duplicate_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
         sym.groupBy("src")
         .agg(F.min("dst").alias("nmin"))
         .select(F.col("src").alias("doc_id"), F.least("src", "nmin").alias("label"))
-        .persist()
+        .localCheckpoint(eager=True)
     )
+    # each round reads `labels` three times, so an un-truncated lineage
+    # triples the plan every round; localCheckpoint (as in graph.py) keeps
+    # each round's plan one round deep
     for _ in range(max_rounds):
         nb = (
             sym.join(labels, sym["src"] == labels["doc_id"])
@@ -512,7 +515,7 @@ def duplicate_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
         new_labels = (
             cand.join(jump, "label1", "left")
             .select("doc_id", F.least("label1", F.coalesce("jmp", "label1")).alias("label"))
-            .persist()
+            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.alias("n")
@@ -520,7 +523,6 @@ def duplicate_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
             .filter(F.col("n.label") != F.col("o.label"))
             .count()
         )
-        labels.unpersist()
         labels = new_labels
         if changed == 0:
             break

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..functions import bm25
 from ..functions.codec import unpack_blocks
+from ..functions.similarities import BM25Similarity
 from ..plans.query import (
     BlendedTermQuery,
     BooleanQuery,
@@ -98,13 +99,20 @@ _SCORED_SCHEMA = "term string, doc_id bigint, tf int, norm int, score float"
 _OCC_CODE = {"MUST": 0, "SHOULD": 1, "FILTER": 2, "MUST_NOT": 3}
 
 
-def _make_unpack_score(weights: dict, cache: np.ndarray, codec: str = "varint"):
+# the block columns the unpack kernel reads; selecting them first keeps the
+# positions and payloads binaries off the Arrow hop
+_BLOCK_COLS = ("term", "run_id", "block_id", "doc_id_base", "count", "doc_ids", "tfs", "norms")
+
+
+def _make_unpack_score(params, sim, codec: str = "varint"):
     """mapInPandas fn: block rows -> (term, doc_id, tf, norm, score float32).
 
     Bulk-decodes every block in the Arrow batch with two numpy varint decodes
-    (ForUtil bulk-decode analog) and scores with the float32-exact BM25
-    kernel. No per-row Python.
-    """
+    (ForUtil bulk-decode analog) and scores with ``sim.score``
+    (functions/similarities.py) — no per-row Python.  ``params`` maps term ->
+    ``Similarity.term_params`` tuple, or is one tuple for every term."""
+    if isinstance(params, dict):
+        slot_maps = [{t: p[i] for t, p in params.items()} for i in range(sim.n_params)]
 
     def fn(iterator):
         for pdf in iterator:
@@ -119,54 +127,10 @@ def _make_unpack_score(weights: dict, cache: np.ndarray, codec: str = "varint"):
                 list(pdf["norms"]),
                 codec=codec,
             )
-            w_block = pdf["term"].map(weights).to_numpy(dtype=np.float32)
-            w = np.repeat(w_block, counts)
-            t32 = (tfs.astype(np.float64) / (tfs.astype(np.float64) + cache[norms].astype(np.float64))).astype(
-                np.float32
-            )
-            yield pd.DataFrame(
-                {
-                    "term": np.repeat(pdf["term"].to_numpy(dtype=object), counts),
-                    "doc_id": doc_ids,
-                    "tf": tfs.astype(np.int32),
-                    "norm": norms.astype(np.int32),
-                    "score": (w * t32).astype(np.float32),
-                }
-            )
-        from lucene_solr_spark.memutil import trim_task_memory
-
-        trim_task_memory()
-
-    return fn
-
-
-def _make_unpack_score_sim(params: dict, sim, codec: str = "varint"):
-    """Generic-similarity variant of :func:`_make_unpack_score`:
-    ``params`` maps term -> (w1, w2) from ``Similarity.term_params`` and the
-    kernel is ``sim.score`` (functions/similarities.py). Same single-scan
-    plan shape; only the scoring arithmetic differs."""
-
-    def fn(iterator):
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            counts = pdf["count"].to_numpy(dtype=np.int64)
-            doc_ids, tfs, norms, _ = unpack_blocks(
-                pdf["doc_id_base"].to_numpy(dtype=np.int64),
-                counts,
-                list(pdf["doc_ids"]),
-                list(pdf["tfs"]),
-                list(pdf["norms"]),
-                codec=codec,
-            )
-            nslots = getattr(sim, "n_params", 2)
-            ws = [
-                np.repeat(
-                    pdf["term"].map({t: p[i] for t, p in params.items()}).to_numpy(dtype=np.float64),
-                    counts,
-                )
-                for i in range(nslots)
-            ]
+            if isinstance(params, dict):
+                ws = [np.repeat(pdf["term"].map(m).to_numpy(dtype=np.float64), counts) for m in slot_maps]
+            else:
+                ws = [np.full(len(doc_ids), p, dtype=np.float64) for p in params]
             yield pd.DataFrame(
                 {
                     "term": np.repeat(pdf["term"].to_numpy(dtype=object), counts),
@@ -215,14 +179,13 @@ class IndexSearcher:
         # pruning cost gate; 0 = always run the θ pre-pass (tests pin this)
         self.prune_min_postings = int(prune_min_postings)
         self.spark = index.postings.sparkSession
-        # IndexSearcher.setSimilarity analog (``search/IndexSearcher.java:118``
-        # defaults to BM25): None = the float32-exact BM25 engine path; a
-        # ``functions.similarities.Similarity`` swaps the per-term weight
-        # resolution and the posting-score kernel for term/boolean/dismax/
-        # synonym evaluation and block-max pruning (all kernels are monotone,
-        # so pruning stays sound). Phrase/span/multiterm rewrites keep BM25 /
-        # constant-score semantics.
-        self.similarity = similarity
+        # IndexSearcher.setSimilarity analog: None means the default
+        # BM25Similarity (``search/IndexSearcher.java:118``).  The similarity
+        # resolves per-term params and scores postings for term/boolean/
+        # dismax/synonym/fuzzy evaluation and block-max pruning (all kernels
+        # are monotone, so pruning stays sound). Phrase/span/multiterm
+        # rewrites keep BM25 / constant-score semantics.
+        self.similarity = similarity or BM25Similarity()
         # LRUQueryCache / SolrIndexSearcher.filterCache analog: hot FILTER
         # doc-sets persisted, LRU-evicted (SolrIndexSearcher.java:119-120)
         from collections import OrderedDict
@@ -279,10 +242,7 @@ class IndexSearcher:
         (the span-eval persist would otherwise leak one cached DataFrame per
         span query for the session)."""
         for df in self._span_occ_persists:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+            df.unpersist()
         self._span_occ_persists = []
 
     def set_term_blooms(self, blooms: Optional[DataFrame]) -> "IndexSearcher":
@@ -354,33 +314,59 @@ class IndexSearcher:
     def _scorer(self) -> bm25.BM25:
         return bm25.BM25(doc_count=self.index.doc_count, avgdl=self.index.avgdl)
 
-    def _leaf_w(self, b: float, term: str, stats: dict):
-        """Per-term weight under the active similarity — the Weight/SimScorer
-        construction step. BM25: float32 ``f32(b) * idf``; others:
-        ``Similarity.term_params``."""
+    def _leaf_w(self, b: float, term: str, stats: dict) -> tuple:
+        """Per-term params under the active similarity — the Weight/SimScorer
+        construction step (``Similarity.term_params``)."""
         df, ttf = stats[term]
-        if self.similarity is None:
-            return float(np.float32(np.float32(b) * bm25.idf(df, self.index.doc_count)))
+        return self._params(b, df, ttf)
+
+    def _params(self, b: float, df: int, ttf: int) -> tuple:
         return self.similarity.term_params(b, df, ttf, self.index.doc_count, self.index.sum_ttf)
+
+    def _require_bm25(self, what: str) -> None:
+        """Guard for the paths whose arithmetic holds only for the BM25
+        family: its leaf score factors as ``f32(w·t)`` with a term-free unit
+        score ``t`` (batch unit weights, explain's weight/tf split)."""
+        if not isinstance(self.similarity, BM25Similarity):
+            raise NotImplementedError(f"{what} supports the BM25 similarity family")
+
+    def _weight_params(self, weights: dict) -> dict:
+        """term -> params scoring ``f32(w·t)`` for precomputed float32 leaf
+        weights (unit weights, NearestFuzzyQuery's df=1 leaves)."""
+        self._require_bm25("precomputed leaf weights")
+        return {
+            t: self.similarity.weight_params(w, self.index.doc_count, self.index.sum_ttf)
+            for t, w in weights.items()
+        }
+
+    def _unit_params(self, terms) -> dict:
+        """Weight-1 params: the kernel then emits the unit score ``t``."""
+        return self._weight_params(dict.fromkeys(terms, 1.0))
 
     # ------------------------------------------------------------ leaf plans
     def _empty(self) -> DataFrame:
         return self.spark.createDataFrame([], "doc_id bigint, score float")
 
-    def _scored_postings(self, weights: dict) -> DataFrame:
-        """(term, doc_id, tf, norm, score) for all terms in `weights`."""
-        if not weights:
+    def _scored_postings(self, params, blocks: Optional[DataFrame] = None, sim=None) -> DataFrame:
+        """(term, doc_id, tf, norm, score) for all terms in `params` (see
+        :func:`_make_unpack_score`) under `sim` (default: the searcher's),
+        read from `blocks` when given."""
+        if not params:
             return self.spark.createDataFrame([], _SCORED_SCHEMA)
-        blocks = self._postings_for(list(weights))
-        if self.similarity is not None:
-            return blocks.mapInPandas(
-                _make_unpack_score_sim(weights, self.similarity, self.index.config.codec),
-                schema=_SCORED_SCHEMA,
-            )
-        cache = self._scorer().cache()
-        return blocks.mapInPandas(
-            _make_unpack_score(weights, cache, self.index.config.codec), schema=_SCORED_SCHEMA
+        if blocks is None:
+            blocks = self._postings_for(list(params))
+        return blocks.select(*_BLOCK_COLS).mapInPandas(
+            _make_unpack_score(params, sim or self.similarity, self.index.config.codec),
+            schema=_SCORED_SCHEMA,
         )
+
+    def _matching_postings(self, terms=(), blocks: Optional[DataFrame] = None) -> DataFrame:
+        """:meth:`_scored_postings` for callers that read only doc_id/tf/norm:
+        every row is scored by the unit BM25 kernel whatever the searcher's
+        similarity, so no term statistics are needed."""
+        if blocks is None:
+            blocks = self._postings_for(list(terms))
+        return self._scored_postings((1.0, 1.0), blocks, BM25Similarity())
 
     def _eval_term(self, q: TermQuery, boost: float, stats: dict) -> DataFrame:
         df_ttf = stats.get(q.term)
@@ -403,9 +389,7 @@ class IndexSearcher:
         mult = Counter(present)
         # blended stats: df = max over terms, ttf summed per entry
         blended_df = max(stats[t][0] for t in mult)
-        sim = self.similarity
-        dummy = {t: ((1.0,) * getattr(sim, "n_params", 2) if sim is not None else 1.0) for t in mult}
-        scored = self._scored_postings(dummy)
+        scored = self._matching_postings(mult)
         if any(m > 1 for m in mult.values()):
             mfac = F.lit(1)
             for t, m in mult.items():
@@ -415,27 +399,15 @@ class IndexSearcher:
         raw = scored.groupBy("doc_id").agg(
             F.sum("tf").cast("bigint").alias("tf"), F.first("norm").alias("norm")
         )
+        blended_ttf = sum(stats[t][1] * m for t, m in mult.items())
+        wps = self._params(boost * q.boost, blended_df, blended_ttf)
+        sim = self.similarity
 
-        if sim is None:
-            scorer = self._scorer()
-            w = np.float32(np.float32(boost * q.boost) * bm25.idf(blended_df, scorer.doc_count))
-            cache = scorer.cache()
-
-            @F.pandas_udf(T.FloatType())
-            def syn_score(tf: pd.Series, norm: pd.Series) -> pd.Series:
-                return pd.Series(bm25.score_tf_norm(tf.to_numpy(), norm.to_numpy(), w, cache))
-
-        else:
-            blended_ttf = sum(stats[t][1] * m for t, m in mult.items())
-            wps = sim.term_params(
-                boost * q.boost, blended_df, blended_ttf, self.index.doc_count, self.index.sum_ttf
-            )
-
-            @F.pandas_udf(T.FloatType())
-            def syn_score(tf: pd.Series, norm: pd.Series) -> pd.Series:
-                tfs = tf.to_numpy(dtype=np.int64)
-                ws = [np.full(tfs.shape, w) for w in wps]
-                return pd.Series(sim.score(*ws, tfs, norm.to_numpy(dtype=np.int64)))
+        @F.pandas_udf(T.FloatType())
+        def syn_score(tf: pd.Series, norm: pd.Series) -> pd.Series:
+            tfs = tf.to_numpy(dtype=np.int64)
+            ws = [np.full(tfs.shape, w) for w in wps]
+            return pd.Series(sim.score(*ws, tfs, norm.to_numpy(dtype=np.int64)))
 
         return raw.select("doc_id", syn_score("tf", "norm").alias("score"))
 
@@ -522,14 +494,7 @@ class IndexSearcher:
         for b_t, t, _, _ in sel:
             # float32 boost chain: outer boost × query boost × fuzzy boost
             total_b = float(np.float32(np.float32(boost * q.boost) * np.float32(b_t)))
-            if self.similarity is None:
-                weights[t] = float(
-                    np.float32(np.float32(total_b) * bm25.idf(blended_df, self.index.doc_count))
-                )
-            else:
-                weights[t] = self.similarity.term_params(
-                    total_b, blended_df, blended_ttf, self.index.doc_count, self.index.sum_ttf
-                )
+            weights[t] = self._params(total_b, blended_df, blended_ttf)
         # SHOULD-sum: f32 leaf scores, double accumulation, f32 cast
         # (DisjunctionSumScorer semantics, as in _eval_boolean)
         return (
@@ -550,11 +515,7 @@ class IndexSearcher:
             raise ValueError(f"multi-term expansion exceeds {MAX_CLAUSE_COUNT} terms (maxClauseCount)")
         if not expanded:
             return self._empty()
-        docs = (
-            self._scored_postings({t: 1.0 for t in expanded})
-            .select("doc_id")
-            .distinct()
-        )
+        docs = self._matching_postings(expanded).select("doc_id").distinct()
         return docs.select("doc_id", F.lit(float(boost * q.boost)).cast("float").alias("score"))
 
     def _positional_occurrences(self, uniq_terms: list) -> DataFrame:
@@ -794,8 +755,7 @@ class IndexSearcher:
             present = [t for t in q.span_terms if t in stats]
             if not present:
                 return self._empty()
-            scored = self._scored_postings({t: 0.0 for t in present})
-            docs = scored.select("doc_id").distinct()
+            docs = self._matching_postings(present).select("doc_id").distinct()
             return docs.select("doc_id", F.lit(float(boost * q.boost)).cast("float").alias("score"))
         if not self.index.config.index_positions:
             raise ValueError("span-clause SpanOrQuery needs index_positions=True")
@@ -1152,7 +1112,7 @@ class IndexSearcher:
                 "PhraseQuery needs IndexSearcher(corpus=...) for the verify pass "
                 "(or an index built with index_positions=True)"
             )
-        scored = self._scored_postings({t: 1.0 for t in set(terms)})
+        scored = self._matching_postings(set(terms))
         cand = (
             scored.groupBy("doc_id")
             .agg(F.countDistinct("term").alias("nt"), F.first("norm").alias("norm"))
@@ -1453,13 +1413,7 @@ class IndexSearcher:
         for t, tb in zip(q.blend_terms, tbs):
             if t not in stats:
                 continue
-            b = boost * q.boost * tb
-            if self.similarity is None:
-                weights[t] = float(np.float32(np.float32(b) * bm25.idf(bdf, self.index.doc_count)))
-            else:
-                weights[t] = self.similarity.term_params(
-                    b, bdf, bttf, self.index.doc_count, self.index.sum_ttf
-                )
+            weights[t] = self._params(boost * q.boost * tb, bdf, bttf)
         u = self._scored_postings(weights).select("doc_id", "score")
         if q.rewrite == "boolean":
             # DisjunctionSumScorer: double sum of float sub-scores → float
@@ -1693,44 +1647,65 @@ class IndexSearcher:
         # any of it. Results are identical either way (prune identity test).
         if sum(int(stats[t][0]) for t in present) < self.prune_min_postings:
             return None
-        sim = self.similarity
-        cache = self._scorer().cache() if sim is None else None
         weights = {t: self._leaf_w(b, t, stats) for t, b in present.items()}
+        sampled = self._theta_block_sample(weights, k)
+        if sampled is None:
+            return self._empty()
+        with_ub, max_ub, sample = sampled
+        # per-doc sums over the sample give a sound lower bound of true scores
+        samp = sample["score"].astype(np.float64).groupby(sample["doc_id"]).sum()
+        if len(samp) >= k:
+            theta = float(np.sort(samp.to_numpy())[-k])
+        else:
+            theta = -math.inf
 
-        blocks = self._postings_for(list(present))
+        # phase 2: keep only blocks that can still reach θ
+        total_max = sum(max_ub.values())
+        slack_map = {t: total_max - max_ub.get(t, 0.0) for t in present}
 
-        def _score_terms(terms_arr, tfs, norms):
-            # shared by the UB pass and the θ sample pass; every similarity
-            # kernel is monotone (↑tf, ↓length) so (max_tf, min_norm) is a
-            # sound per-block upper bound under any of them
-            tfs = np.asarray(tfs, dtype=np.int64)
-            norms = np.asarray(norms, dtype=np.int64)
-            if sim is None:
-                w = pd.Series(terms_arr).map(weights).to_numpy(dtype=np.float32)
-                return (w * bm25.score_tf_norm(tfs, norms, np.float32(1.0), cache)).astype(np.float32)
-            ws = [
-                pd.Series(terms_arr).map({t: p[i] for t, p in weights.items()}).to_numpy(dtype=np.float64)
-                for i in range(getattr(sim, "n_params", 2))
-            ]
-            return sim.score(*ws, tfs, norms)
+        @F.pandas_udf(T.FloatType())
+        def slack_udf(term: pd.Series) -> pd.Series:
+            return term.map(slack_map).astype("float32")
+
+        surv = (F.col("ub") + slack_udf("term")) >= F.lit(theta)
+        if metrics_out is not None:
+            metrics_out.update(theta=float(theta), **self._survival_counts(with_ub, surv))
+        scored = self._scored_postings(weights, with_ub.filter(surv))
+        return scored.groupBy("doc_id").agg(F.sum(F.col("score").cast("double")).cast("float").alias("score"))
+
+    def _theta_block_sample(self, params: dict, k: int):
+        """Phase 1 of both block-max θ pre-passes: each block's score upper
+        bound ``ub`` from its ``(max_tf, min_norm)`` summary under `params`
+        (sound for every similarity: the kernels are monotone, ↑tf / ↓length),
+        then the top ``max(2, k)`` blocks per term (a few KB) unpacked and
+        exactly scored on the driver.
+
+        Returns ``(with_ub, max_ub, sample)`` — the terms' block rows with the
+        ``ub`` column, term -> best block ub, and the sampled postings as a
+        pandas ``(term, doc_id, score)`` frame — or None when no block exists."""
+        from pyspark.sql.window import Window
+
+        sim = self.similarity
+        slot_maps = [{t: p[i] for t, p in params.items()} for i in range(sim.n_params)]
+
+        def score_terms(terms_arr, tfs, norms):
+            terms_s = pd.Series(terms_arr)
+            ws = [terms_s.map(m).to_numpy(dtype=np.float64) for m in slot_maps]
+            return sim.score(*ws, np.asarray(tfs, dtype=np.int64), np.asarray(norms, dtype=np.int64))
 
         @F.pandas_udf(T.FloatType())
         def ub_udf(term: pd.Series, max_tf: pd.Series, min_norm: pd.Series) -> pd.Series:
-            return pd.Series(_score_terms(term, max_tf.to_numpy(), min_norm.to_numpy()).astype(np.float32))
+            return pd.Series(score_terms(term, max_tf.to_numpy(), min_norm.to_numpy()).astype(np.float32))
 
-        with_ub = blocks.withColumn("ub", ub_udf("term", "max_tf", "min_norm"))
-
-        # phase 1: sample the top blocks per term (tiny), exact-score -> θ
-        from pyspark.sql.window import Window
-
+        with_ub = self._postings_for(list(params)).withColumn("ub", ub_udf("term", "max_tf", "min_norm"))
         wnd = Window.partitionBy("term").orderBy(F.desc("ub"), F.asc("run_id"), F.asc("block_id"))
         sample_pdf = (
             with_ub.withColumn("rn", F.row_number().over(wnd)).filter(F.col("rn") <= max(2, k)).toPandas()
         )
         if sample_pdf.empty:
-            return self._empty()
+            return None
         max_ub = sample_pdf.groupby("term")["ub"].max().to_dict()
-        doc_ids, tfs, norms, blk = unpack_blocks(
+        doc_ids, tfs, norms, _ = unpack_blocks(
             sample_pdf["doc_id_base"].to_numpy(dtype=np.int64),
             sample_pdf["count"].to_numpy(dtype=np.int64),
             list(sample_pdf["doc_ids"]),
@@ -1739,50 +1714,21 @@ class IndexSearcher:
             codec=self.index.config.codec,
         )
         terms_post = np.repeat(sample_pdf["term"].to_numpy(dtype=object), sample_pdf["count"].to_numpy())
-        s = _score_terms(terms_post, tfs, norms)
-        # per-doc sums over the sample give a sound lower bound of true scores
-        samp = pd.DataFrame({"doc_id": doc_ids, "s": s.astype(np.float64)}).groupby("doc_id")["s"].sum()
-        if len(samp) >= k:
-            theta = float(np.sort(samp.to_numpy())[-k])
-        else:
-            theta = -math.inf
+        sample = pd.DataFrame({"term": terms_post, "doc_id": doc_ids, "score": score_terms(terms_post, tfs, norms)})
+        return with_ub, max_ub, sample
 
-        # phase 2: keep only blocks that can still reach θ
-        total_max = sum(max_ub.values())
-        slack = {t: total_max - max_ub.get(t, 0.0) for t in present}
-        slack_map = dict(slack)
-
-        @F.pandas_udf(T.FloatType())
-        def slack_udf(term: pd.Series) -> pd.Series:
-            return term.map(slack_map).astype("float32")
-
-        if metrics_out is not None:
-            # pruning observability (the ImpactsDISI skip-rate analog): one
-            # extra aggregation over block summaries, never over payloads
-            surv = (F.col("ub") + slack_udf("term")) >= F.lit(theta)
-            mrow = with_ub.select(
-                F.count("*").alias("blocks"),
-                F.sum(surv.cast("int")).alias("surv_blocks"),
-                F.sum("count").alias("postings"),
-                F.sum(F.when(surv, F.col("count")).otherwise(0)).alias("surv_postings"),
-            ).first()
-            metrics_out.update(
-                theta=float(theta),
-                blocks=int(mrow["blocks"]),
-                surviving_blocks=int(mrow["surv_blocks"]),
-                postings=int(mrow["postings"]),
-                surviving_postings=int(mrow["surv_postings"]),
-            )
-        survivors = with_ub.filter((F.col("ub") + slack_udf("term")) >= F.lit(theta))
-        unpack_fn = (
-            _make_unpack_score_sim(weights, sim, self.index.config.codec)
-            if sim is not None
-            else _make_unpack_score(weights, cache, self.index.config.codec)
-        )
-        scored = survivors.select("term", "run_id", "block_id", "doc_id_base", "count", "doc_ids", "tfs", "norms").mapInPandas(
-            unpack_fn, schema=_SCORED_SCHEMA
-        )
-        return scored.groupBy("doc_id").agg(F.sum(F.col("score").cast("double")).cast("float").alias("score"))
+    @staticmethod
+    def _survival_counts(with_ub: DataFrame, surv) -> dict:
+        """Blocks and postings read vs surviving the θ cut `surv` (the
+        ImpactsDISI skip-rate analog): one aggregation over block summaries,
+        never over payloads."""
+        row = with_ub.select(
+            F.count("*").alias("blocks"),
+            F.sum(surv.cast("int")).alias("surviving_blocks"),
+            F.sum("count").alias("postings"),
+            F.sum(F.when(surv, F.col("count")).otherwise(0)).alias("surviving_postings"),
+        ).first()
+        return {name: int(row[name] or 0) for name in row.asDict()}
 
     def prune_metrics(self, query: Query, k: int = 10) -> dict:
         """Block-max pruning observability for a term / pure-OR query: run
@@ -2021,7 +1967,7 @@ class IndexSearcher:
             return self.spark.createDataFrame([], "collation string, hits long")
         candidates = list(itertools.islice(itertools.product(*options), max_tries))
         vocab = sorted({w for c in candidates for w in c})
-        scored = self._scored_postings({w: 0.0 for w in vocab})
+        scored = self._matching_postings(vocab)
         flags = scored.groupBy("doc_id").agg(
             *[F.max((F.col("term") == w).cast("int")).alias(f"__w{i}") for i, w in enumerate(vocab)]
         )
@@ -3113,49 +3059,15 @@ class IndexSearcher:
         k = k + self._deletes_count()
         if k > 256:
             return None, {}
-        cache = self._scorer().cache()
-
-        @F.pandas_udf(T.FloatType())
-        def unit_ub_udf(max_tf: pd.Series, min_norm: pd.Series) -> pd.Series:
-            tfs = max_tf.to_numpy(dtype=np.int64)
-            norms = min_norm.to_numpy(dtype=np.int64)
-            return pd.Series(
-                bm25.score_tf_norm(tfs, norms, np.float32(1.0), cache).astype(np.float32)
-            )
-
-        blocks = self._postings_for(terms_needed)
-        with_ub = blocks.withColumn("_ub", unit_ub_udf("max_tf", "min_norm"))
-
+        unit = self._unit_params(terms_needed)
         # phase 1: top blocks per term (tiny — block summaries only), exact
         # unit scores from the sampled payloads
-        from pyspark.sql.window import Window
-
-        wnd = Window.partitionBy("term").orderBy(F.desc("_ub"), F.asc("run_id"), F.asc("block_id"))
-        sample_pdf = (
-            with_ub.withColumn("rn", F.row_number().over(wnd))
-            .filter(F.col("rn") <= max(2, k))
-            .toPandas()
-        )
-        if sample_pdf.empty:
+        sampled = self._theta_block_sample(unit, k)
+        if sampled is None:
             return None, {}
-        umax = sample_pdf.groupby("term")["_ub"].max().to_dict()
-        _, tfs, norms, _ = unpack_blocks(
-            sample_pdf["doc_id_base"].to_numpy(dtype=np.int64),
-            sample_pdf["count"].to_numpy(dtype=np.int64),
-            list(sample_pdf["doc_ids"]),
-            list(sample_pdf["tfs"]),
-            list(sample_pdf["norms"]),
-            codec=self.index.config.codec,
-        )
-        terms_post = np.repeat(
-            sample_pdf["term"].to_numpy(dtype=object), sample_pdf["count"].to_numpy()
-        )
-        unit_scores = bm25.score_tf_norm(
-            np.asarray(tfs, dtype=np.int64), np.asarray(norms, dtype=np.int64),
-            np.float32(1.0), cache,
-        )
+        with_ub, umax, sample = sampled
         kth_unit: dict = {}
-        for t, grp in pd.DataFrame({"t": terms_post, "s": unit_scores}).groupby("t")["s"]:
+        for t, grp in sample.groupby("term")["score"]:
             v = np.sort(grp.to_numpy())
             if len(v) >= k:
                 kth_unit[t] = float(v[-k])
@@ -3202,41 +3114,29 @@ class IndexSearcher:
         theta_t = {
             t: thr - 1e-4 for t, thr in cand.items() if t not in blocked and thr != math.inf
         }
-        if not any(v > 0.0 for v in theta_t.values()):
+        prunable = any(v > 0.0 for v in theta_t.values())
+        if prunable:
+            theta_map = {t: theta_t.get(t, -math.inf) for t in terms_needed}
+
+            @F.pandas_udf(T.DoubleType())
+            def theta_udf(term: pd.Series) -> pd.Series:
+                return term.map(theta_map).astype("float64")
+
+            surv = F.col("ub").cast("double") >= theta_udf("term")
+        else:
             # no block can be skipped (some query needs every one), but the
             # per-clause posting filter may still cut the exchange
-            return None, clause_theta
-
-        theta_map = {t: theta_t.get(t, -math.inf) for t in terms_needed}
-
-        @F.pandas_udf(T.DoubleType())
-        def theta_udf(term: pd.Series) -> pd.Series:
-            return term.map(theta_map).astype("float64")
-
-        surv_cond = F.col("_ub").cast("double") >= theta_udf("term")
+            surv = F.lit(True)
         if metrics_out is not None:
-            mrow = with_ub.select(
-                F.count("*").alias("blocks"),
-                F.sum(surv_cond.cast("int")).alias("surv_blocks"),
-                F.sum("count").alias("postings"),
-                F.sum(F.when(surv_cond, F.col("count")).otherwise(0)).alias("surv_postings"),
-            ).first()
             metrics_out.update(
-                blocks=int(mrow["blocks"]),
-                surviving_blocks=int(mrow["surv_blocks"]),
-                postings=int(mrow["postings"]),
-                surviving_postings=int(mrow["surv_postings"]),
+                **self._survival_counts(with_ub, surv),
                 finite_thetas=sum(1 for v in theta_t.values() if v > 0.0),
                 finite_clause_thetas=len(clause_theta),
                 terms=len(terms_needed),
             )
-        survivors = with_ub.filter(surv_cond).select(
-            "term", "run_id", "block_id", "doc_id_base", "count", "doc_ids", "tfs", "norms"
-        )
-        unit = {t: 1.0 for t in terms_needed}
-        return survivors.mapInPandas(
-            _make_unpack_score(unit, cache, self.index.config.codec), schema=_SCORED_SCHEMA
-        ), clause_theta
+        if not prunable:
+            return None, clause_theta
+        return self._scored_postings(unit, with_ub.filter(surv)), clause_theta
 
     def batch_prune_metrics(self, queries: dict, k: int = 10) -> dict:
         """Observability for the batch block-max pruning: how many block rows
@@ -3263,7 +3163,7 @@ class IndexSearcher:
         # unpack) while this filter still removes most exchange rows.
         terms_needed = sorted({t for _, t, _, _ in clause_rows})
         scored = (
-            res if res is not None else self._scored_postings({t: 1.0 for t in terms_needed})
+            res if res is not None else self._scored_postings(self._unit_params(terms_needed))
         ).select("term", "score")
         cl = self.spark.createDataFrame(
             [(t, clause_theta.get((qc, t))) for qc, t, _occ, _w in clause_rows],
@@ -3300,7 +3200,10 @@ class IndexSearcher:
         queries (the Solr queryResultCache observation), and every duplicate
         multiplies the (qc, doc) exchange volume for free — so queries with
         the same normalized clause signature are planned once and their
-        query_ids fan back out on the k-row result join."""
+        query_ids fan back out on the k-row result join.  The clause weights
+        factor the leaf score as ``f32(w·t)``, which holds for the BM25
+        similarity family only."""
+        self._require_bm25("batch_search")
         all_terms: set = set()
         for q in queries.values():
             all_terms |= q.terms()
@@ -3345,7 +3248,7 @@ class IndexSearcher:
             for occur, t, b in leaves:
                 if t not in stats:
                     continue
-                w = self._leaf_w(b, t, stats) if occur in ("MUST", "SHOULD") else 0.0
+                w = self._leaf_w(b, t, stats)[0] if occur in ("MUST", "SHOULD") else 0.0
                 rows.append((t, _OCC_CODE[occur], float(w)))
             sig = (tuple(sorted(rows)), n_req, int(mm))
             if sig in sig_to_qc:
@@ -3382,8 +3285,6 @@ class IndexSearcher:
         (query, doc_id%32), so one head query can't serialize the batch).
         Query ids travel the hot exchanges as dense ints; strings are
         restored on the k·|queries| result rows."""
-        if self.similarity is not None:
-            raise NotImplementedError("batch_search is BM25-only")
         from pyspark.sql.window import Window
 
         clause_rows, meta_rows, stats = self._batch_clause_table(queries)
@@ -3405,9 +3306,8 @@ class IndexSearcher:
         # to the exhaustive scan below the cost gate — bit-identical results
         # either way (pinned by the prune-identity test).
         pruned, clause_theta = self._batch_pruned_postings(clause_rows, meta_rows, stats, k)
-        unit = {t: 1.0 for t in terms_needed}
         scored = (
-            pruned if pruned is not None else self._scored_postings(unit)
+            pruned if pruned is not None else self._scored_postings(self._unit_params(terms_needed))
         ).select("term", "doc_id", "score")
         # clause table rides the broadcast with its per-clause posting
         # threshold: a (posting, clause) pair whose unit score is below the
@@ -3750,11 +3650,7 @@ class IndexSearcher:
         matched = self._evaluate(query, 1.0, stats).select("doc_id")
         # candidate terms pruned by background df BEFORE unpacking any blocks
         cand = self.index.terms.filter(F.col("df") >= min_df).select("term")
-        blocks = self.index.postings.join(F.broadcast(cand), "term")
-        unpacked = blocks.mapInPandas(
-            _make_unpack_score({}, np.zeros(256, np.float32), self.index.config.codec),
-            schema=_SCORED_SCHEMA,
-        )
+        unpacked = self._matching_postings(blocks=self.index.postings.join(F.broadcast(cand), "term"))
         fg = (
             unpacked.join(matched, "doc_id", "left_semi")
             .groupBy("term")
@@ -3813,9 +3709,11 @@ class IndexSearcher:
         lucene/core/src/java/org/apache/lucene/search/IndexSearcher.java``,
         ``BM25Similarity.java`` explain): a nested
         ``{value, description, details}`` breakdown of the document's score
-        under the default BM25 path.  Supported for TermQuery and
+        under the BM25 similarity family.  Supported for TermQuery and
         all-term BooleanQuery / DisjunctionMaxQuery shapes; the per-doc
         posting lookup is one pushed-predicate scan, never a full decode."""
+        self._require_bm25("explain")
+        sim = self.similarity
         doc_id = int(doc_id)
 
         def _leaf_expl(term: str, boost: float):
@@ -3823,30 +3721,31 @@ class IndexSearcher:
             if term not in stats:
                 return {"value": 0.0, "description": f"no matching term '{term}'", "details": []}
             df_, _ttf = stats[term]
+            params = self._leaf_w(boost, term, stats)
             row = (
-                self._scored_postings({term: self._leaf_w(boost, term, stats)})
+                self._scored_postings({term: params})
                 .filter(F.col("doc_id") == doc_id)
                 .collect()
             )
             if not row:
                 return {"value": 0.0, "description": f"no match on doc {doc_id} for '{term}'", "details": []}
             r = row[0]
-            scorer = self._scorer()
-            idf_v = float(bm25.idf(df_, scorer.doc_count))
-            cache = scorer.cache()
+            n_docs = self.index.doc_count
+            idf_v = float(bm25.idf(df_, n_docs))
+            cache = bm25.norm_cache(np.float32(params[1]), sim.k1, sim.b)
             t32 = float(np.float32(r["tf"] / (r["tf"] + np.float64(cache[r["norm"]]))))
             return {
                 "value": float(r["score"]),
                 "description": f"score(term='{term}' doc={doc_id}), product of:",
                 "details": [
                     {
-                        "value": float(np.float32(np.float32(boost) * idf_v)),
+                        "value": params[0],
                         "description": "weight = boost * idf",
                         "details": [
-                            {"value": boost, "description": "boost", "details": []},
+                            {"value": float(sim.scaled_boost(boost)), "description": "boost", "details": []},
                             {
                                 "value": idf_v,
-                                "description": f"idf = ln(1+(N-n+0.5)/(n+0.5)), n={df_}, N={scorer.doc_count}",
+                                "description": f"idf = ln(1+(N-n+0.5)/(n+0.5)), n={df_}, N={n_docs}",
                                 "details": [],
                             },
                         ],
@@ -3922,10 +3821,7 @@ class IndexSearcher:
         are ``floor(float32_value · 2^20)`` — the repo's
         quantize-before-compare contract, so a DuckDB oracle can replay the
         BM25 decomposition bit-for-bit."""
-        if self.similarity is not None:
-            # _leaf_w returns a Similarity.term_params tuple there, and the
-            # weight/score split below is BM25-specific
-            raise NotImplementedError("explain_rows supports the default BM25 path")
+        self._require_bm25("explain_rows")
         leaves: list[tuple[str, float]] = []
 
         def _collect(qr, b: float):
@@ -3949,7 +3845,7 @@ class IndexSearcher:
         stats = self._term_stats({t for t, _ in leaves})
         weights = {t: self._leaf_w(b, t, stats) for t, b in leaves if t in stats}
         meta = self.spark.createDataFrame(
-            [(t, int(stats[t][0]), float(w)) for t, w in weights.items()],
+            [(t, int(stats[t][0]), p[0]) for t, p in weights.items()],
             "term string, df long, weight float",
         )
         q20 = lambda c: F.floor(c.cast("double") * F.lit(1 << 20)).cast("long")  # noqa: E731

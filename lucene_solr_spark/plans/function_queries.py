@@ -123,7 +123,7 @@ class FunctionContext:
         key = f"_fq_tf_{term}"
         if key not in self.joins:
             tf_df = (
-                self.searcher._scored_postings({term: 1.0})
+                self.searcher._matching_postings([term])
                 .select("doc_id", F.col("tf").alias(key))
             )
             self.joins[key] = tf_df

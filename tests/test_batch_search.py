@@ -181,15 +181,25 @@ def test_batch_prune_exhaustive_bit_identity(spark):
         "filt": BooleanQuery.build(should=[TermQuery("head")], filter=[TermQuery("mid")]),
         "not": BooleanQuery.build(must=[TermQuery("mid")], must_not=[TermQuery("tail0")]),
     }
-    got = _batch_rows(sp, queries, 10)
-    want = _batch_rows(sx, queries, 10)
-    assert got == want
-    by_q = {}
-    for qid, rank, d, sc in got:
-        by_q.setdefault(qid, []).append((rank, d, sc))
-    for qid, q in queries.items():
-        expect = [(i + 1, d, sc) for i, (d, sc) in enumerate(sp.search(q, 10).collect())]
-        assert by_q.get(qid, []) == expect, qid
+    from lucene_solr_spark.functions.similarities import LegacyBM25Similarity
+    from lucene_solr_spark.operators.searcher import IndexSearcher
+
+    # the batch unit-weight factorisation f32(w·t) holds for the whole BM25
+    # family, so LegacyBM25 batches must match its single searches too
+    legacy = [
+        IndexSearcher(s.index, prune_min_postings=s.prune_min_postings, similarity=LegacyBM25Similarity())
+        for s in (sp, sx)
+    ]
+    for pruned, exhaustive in ((sp, sx), legacy):
+        got = _batch_rows(pruned, queries, 10)
+        want = _batch_rows(exhaustive, queries, 10)
+        assert got == want
+        by_q = {}
+        for qid, rank, d, sc in got:
+            by_q.setdefault(qid, []).append((rank, d, sc))
+        for qid, q in queries.items():
+            expect = [(i + 1, d, sc) for i, (d, sc) in enumerate(pruned.search(q, 10).collect())]
+            assert by_q.get(qid, []) == expect, (type(pruned.similarity).__name__, qid)
 
 
 def test_batch_prune_metrics_skip_rate(spark):
@@ -257,6 +267,11 @@ def test_batch_clause_theta_survives_conjunctions(spark):
     assert clause_theta.get((head_qc, "head"), 0.0) > 0.0  # posting filter live
     and_qc = next(qc for qc, qids, _, _ in meta_rows if qids == ["and"])
     assert (and_qc, "head") not in clause_theta  # conjunction never filtered
+    # the metrics report the clause-pair cut even though no block is skipped
+    m = sp.batch_prune_metrics(queries, k=10)
+    assert m["pruning_applied"] is True
+    assert m["block_skip_rate"] == 0.0
+    assert m["clause_pair_skip_rate"] > 0.0, m
     assert _batch_rows(sp, queries, 10) == _batch_rows(sx, queries, 10)
     for qid, q in queries.items():
         expect = [(i + 1, d, sc) for i, (d, sc) in enumerate(sp.search(q, 10).collect())]

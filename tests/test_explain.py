@@ -82,3 +82,30 @@ def test_explain_rows_matches_per_doc_explain(searcher):
             assert r["weight_q"] == int(np.floor(np.float64(np.float32(w)) * (1 << 20)))
         # no extra leaves beyond the matching terms
         assert {t for d, t in rows if d == doc_id} == set(leaves)
+
+
+def test_explain_requires_bm25_family(searcher):
+    """explain/explain_rows split a score into BM25's weight × tf: under
+    another similarity both refuse rather than wrap a foreign score in a
+    BM25 breakdown; LegacyBM25 (a BM25-family member) explains its own
+    scaled scores."""
+    from lucene_solr_spark.functions.similarities import (
+        ClassicSimilarity,
+        LegacyBM25Similarity,
+    )
+    from lucene_solr_spark.operators.searcher import IndexSearcher
+
+    hot = _hot2(searcher)[0]
+    classic = IndexSearcher(searcher.index, searcher.corpus, similarity=ClassicSimilarity())
+    doc_id = searcher.search(TermQuery(hot), 1).collect()[0][0]
+    with pytest.raises(NotImplementedError):
+        classic.explain(TermQuery(hot), doc_id)
+    with pytest.raises(NotImplementedError):
+        classic.explain_rows(TermQuery(hot), [doc_id])
+
+    legacy = IndexSearcher(searcher.index, searcher.corpus, similarity=LegacyBM25Similarity())
+    for doc_id, score in legacy.search(TermQuery(hot), 3).collect():
+        e = legacy.explain(TermQuery(hot), doc_id)
+        assert e["value"] == score
+        w, tf = e["details"]
+        assert np.float32(np.float32(w["value"]) * np.float32(tf["value"])) == np.float32(score)

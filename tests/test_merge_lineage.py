@@ -102,7 +102,9 @@ def test_force_merge_to_one_run_with_salting(searcher, index8, queries):
 
 def test_salted_merge_rank_identity(searcher, index8, queries):
     ids = [r.run_id for r in run_manifest(index8)]
-    merged_postings = merge_runs(index8, ids, new_run_id=7_000_000_000, salt_block_budget=64)
+    # merge_runs is lazy: persist so every search below reads one merge
+    # instead of re-running the repack per Spark job
+    merged_postings = merge_runs(index8, ids, new_run_id=7_000_000_000, salt_block_budget=64).persist()
     from dataclasses import replace
 
     from pyspark.sql import functions as F
@@ -117,6 +119,7 @@ def test_salted_merge_rank_identity(searcher, index8, queries):
     s2 = IndexSearcher(idx2, searcher.corpus)
     for q in queries:
         assert _topk(s2, q) == _topk(searcher, q)
+    merged_postings.unpersist()
 
 
 # --------------------------------------------------- resumable build (Spark)

@@ -14,6 +14,7 @@ import pytest
 
 from lucene_solr_spark.functions.analysis import standard_analyzer
 from lucene_solr_spark.functions.similarities import (
+    BM25Similarity,
     BooleanSimilarity,
     ClassicSimilarity,
     DFRInL2Similarity,
@@ -22,7 +23,15 @@ from lucene_solr_spark.functions.similarities import (
 )
 from lucene_solr_spark.functions.smallfloat import byte4_to_int, int_to_byte4
 from lucene_solr_spark.operators.searcher import IndexSearcher
-from lucene_solr_spark.plans.query import BooleanQuery, SynonymQuery, TermQuery
+from lucene_solr_spark.plans.query import (
+    BlendedTermQuery,
+    BooleanQuery,
+    FuzzyQuery,
+    PrefixQuery,
+    SynonymQuery,
+    TermQuery,
+    WildcardQuery,
+)
 
 
 @pytest.fixture(scope="module")
@@ -94,6 +103,15 @@ def test_classic_term_and_bool(index8, spark_corpus, corpus_stats):
     for prune in (True, False):
         got = s.search(q, 10, prune=prune).collect()
         assert _brute_topk(e2) == [(d, sc) for d, sc in got]
+
+    # constant-score multiterm rewrites read only the postings: the default
+    # searcher's doc set, every score the query boost, under any similarity
+    default = IndexSearcher(index8, spark_corpus)
+    for mq in (PrefixQuery(hot[0][:2]), WildcardQuery("?" + hot[1][1:])):
+        got = s.search(mq, n_docs).collect()
+        want = default.search(mq, n_docs).collect()
+        assert got and [d for d, _ in got] == [d for d, _ in want], mq
+        assert all(sc == 1.0 for _, sc in got), mq
 
 
 def test_boolean_similarity_constant(index8, spark_corpus, corpus_stats):
@@ -183,12 +201,37 @@ def test_synonym_under_similarity(index8, spark_corpus, corpus_stats):
     assert _brute_topk(expect) == [(d, sc) for d, sc in got]
 
 
-def test_default_bm25_unaffected(index8, spark_corpus, corpus_stats):
+def test_default_bm25_unaffected(index8, spark_corpus, corpus_stats, oracle):
+    """BM25 is the default Similarity: the default searcher, similarity=None
+    and an explicit BM25Similarity() agree bit for bit on every BM25-scored
+    shape (θ pre-pass forced on the latter two), and with the oracle where
+    it models the shape."""
     _, df, _, _, _, _ = corpus_stats
-    hot = _hot_terms(df)[0]
+    hot = _hot_terms(df, n=4)
     default = IndexSearcher(index8, spark_corpus)
     explicit_none = IndexSearcher(index8, spark_corpus, prune_min_postings=0, similarity=None)
-    assert default.search(TermQuery(hot), 10).collect() == explicit_none.search(TermQuery(hot), 10).collect()
+    explicit_bm25 = IndexSearcher(
+        index8, spark_corpus, prune_min_postings=0, similarity=BM25Similarity()
+    )
+    or3 = BooleanQuery.build(should=[TermQuery(t) for t in hot[:3]])
+    cases = [
+        (TermQuery(hot[0]), True),
+        (or3, True),
+        (SynonymQuery((hot[1], hot[2])), True),
+        (FuzzyQuery(hot[3]), False),
+        (BlendedTermQuery(blend_terms=(hot[1], hot[3]), term_boosts=(1.0, 2.0)), False),
+    ]
+    for q, in_oracle in cases:
+        got = default.search(q, 10).collect()
+        assert got, q
+        for s in (explicit_none, explicit_bm25):
+            other = s.search(q, 10).collect()
+            assert [d for d, _ in other] == [d for d, _ in got], q
+            assert [np.float32(sc).tobytes() for _, sc in other] == [
+                np.float32(sc).tobytes() for _, sc in got
+            ], q
+        if in_oracle:
+            assert got == oracle.search(q, 10), q
 
 
 def _dfi_chi2_score(tf, ttf_t, norm_byte, sttf):
