@@ -1184,79 +1184,31 @@ class IndexSearcher:
             return q.term, boost * q.boost
         return None
 
-    def _eval_boolean_terms_single_scan(
-        self, must, should, must_not, mm: int, boost: float, stats: dict
+    def _eval_boolean_single_scan(
+        self, must, should, must_not, mm: int, boost: float, stats: dict,
+        blocks: Optional[DataFrame] = None,
     ) -> Optional[DataFrame]:
-        """Single-postings-scan boolean evaluation when every MUST / SHOULD /
-        MUST_NOT clause is a (possibly boosted) TermQuery with distinct terms.
+        """Single-postings-scan evaluation when every MUST / SHOULD / MUST_NOT
+        clause is a (possibly boosted) TermQuery or an un-boosted one-level
+        BooleanQuery group of them, all terms distinct — flat term booleans,
+        the CommonTermsQuery rewrite and ``(a OR b) AND (c OR d)`` shapes.
 
         The reference walks one postings iterator per clause in lock-step
         (``Boolean2ScorerSupplier``, ``ConjunctionDISI``); the naive Spark
         translation scans the postings table once per clause and unions.
-        This plan instead scans ONCE for all clauses' terms and computes every
-        clause's contribution with conditional aggregates in ONE
-        groupBy(doc_id) — one shuffle regardless of clause count, which is
-        also the right plan at 10^12 docs (k scans of the postings table
-        would read the index k times).
+        This plan scans ONCE for all clauses' terms and computes every unit's
+        count and double-sum with conditional aggregates in ONE
+        groupBy(doc_id) — one shuffle regardless of clause count.  A unit is
+        either all flat term clauses of one occur (ungrouped: its terms add
+        straight into the top-level double sum) or one nested group, whose
+        score rounds to float32 at the group boundary (its BooleanScorer
+        returns float); the top level sums in double and casts once more
+        (BooleanWeight) — bit-identical to evaluating each clause separately.
 
-        Float semantics identical to the general path: per-term f32 leaf
-        scores, double accumulation, f32 final cast."""
-        leaves = []
-        for group, qs in (("MUST", must), ("SHOULD", should), ("MUST_NOT", must_not)):
-            for sub in qs:
-                ft = self._flat_term(sub, 1.0 if group == "MUST_NOT" else boost)
-                if ft is None:
-                    return None
-                leaves.append((group, ft[0], ft[1]))
-        terms = [t for _, t, _ in leaves]
-        if len(set(terms)) != len(terms):
-            return None  # duplicate term across clauses: clause-per-row semantics differ
-
-        must_terms = [t for g, t, _ in leaves if g == "MUST" and t in stats]
-        if len(must_terms) < len(must):
-            return self._empty()  # a required term is absent from the index
-        should_terms = [t for g, t, _ in leaves if g == "SHOULD" and t in stats]
-        not_terms = [t for g, t, _ in leaves if g == "MUST_NOT" and t in stats]
-        if not must_terms and not should_terms:
-            return self._empty()
-
-        weights = {}
-        for g, t, b in leaves:
-            if t not in stats:
-                continue
-            # MUST_NOT terms ride the same scan for the anti-check; their
-            # score contribution is masked out in the aggregate below
-            weights[t] = self._leaf_w(b, t, stats)
-        scored = self._scored_postings(weights)
-
-        scoring = must_terms + should_terms
-        aggs = [
-            F.sum(F.when(F.col("term").isin(scoring), F.col("score").cast("double"))).alias("dscore"),
-            F.sum(F.when(F.col("term").isin(must_terms), 1).otherwise(0)).alias("nm"),
-            F.sum(F.when(F.col("term").isin(should_terms), 1).otherwise(0)).alias("ns"),
-            F.max(F.when(F.col("term").isin(not_terms), 1).otherwise(0)).alias("nn"),
-        ]
-        agg = scored.groupBy("doc_id").agg(*aggs)
-        cond = (F.col("nm") == len(must_terms)) & (F.col("nn") == 0)
-        if mm > 0:
-            cond = cond & (F.col("ns") >= mm)
-        return agg.filter(cond).select("doc_id", F.col("dscore").cast("float").alias("score"))
-
-    def _eval_boolean_nested_single_scan(
-        self, must, should, must_not, mm: int, boost: float, stats: dict
-    ) -> Optional[DataFrame]:
-        """Single-postings-scan evaluation when clauses are flat terms OR
-        un-boosted one-level BooleanQuery groups of flat terms — the
-        CommonTermsQuery rewrite and ``(a OR b) AND (c OR d)`` shapes.
-
-        Per-unit conditional aggregates over ONE scan give each group its
-        count and double-sum; the projection applies the reference float
-        chain — each group's score rounds to float32 at the group boundary
-        (its BooleanScorer returns float), the top level sums those in
-        double and casts once more (BooleanWeight) — so nesting is
-        bit-identical to evaluating each group separately, at one shuffle
-        instead of one per group."""
-        units = []  # (occur, [(term, boost)], is_must_group, group_mm, is_singleton)
+        ``blocks`` (the θ pre-pass survivors, see :meth:`search`) replaces
+        the full postings scan; nothing else differs."""
+        flat: dict = {"MUST": [], "SHOULD": [], "MUST_NOT": []}
+        groups = []  # (occur, [(term, boost)], is_must_group, group_mm)
 
         def flatten_group(g: BooleanQuery):
             if g.by_occur("MUST_NOT") or g.by_occur("FILTER"):
@@ -1272,13 +1224,12 @@ class IndexSearcher:
                 leaves.append(ft)
             return leaves, bool(g_must), (0 if g_must else max(1, g.minimum_should_match))
 
-        any_group = False
         for occur, qs in (("MUST", must), ("SHOULD", should), ("MUST_NOT", must_not)):
             b = boost if occur != "MUST_NOT" else 1.0
             for sub in qs:
                 ft = self._flat_term(sub, b)
                 if ft is not None:
-                    units.append((occur, [ft], False, 1, True))
+                    flat[occur].append(ft)
                     continue
                 if not isinstance(sub, BooleanQuery):
                     return None
@@ -1286,17 +1237,21 @@ class IndexSearcher:
                 if fg is None:
                     return None
                 leaves, is_must_group, g_mm = fg
-                units.append((occur, [(t, bb * b) for t, bb in leaves], is_must_group, g_mm, False))
-                any_group = True
-        if not any_group:
-            return None  # the flat fast path owns this shape
-        all_terms = [t for _, leaves, _, _, _ in units for t, _ in leaves]
+                groups.append((occur, [(t, bb * b) for t, bb in leaves], is_must_group, g_mm))
+        all_terms = [t for leaves in flat.values() for t, _ in leaves]
+        all_terms += [t for _, leaves, _, _ in groups for t, _ in leaves]
         if len(set(all_terms)) != len(all_terms):
-            return None
+            return None  # duplicate term across clauses: clause-per-row semantics differ
 
-        # resolve present terms; absent terms make MUST groups unmatchable
-        resolved = []
-        for occur, leaves, is_must_group, g_mm, is_singleton in units:
+        # resolve present terms; absent terms make MUST units unmatchable
+        if any(t not in stats for t, _ in flat["MUST"]):
+            return self._empty()
+        units = []  # (occur, present [(term, boost)], is_flat, is_must_group, group_mm)
+        for occur, leaves in flat.items():
+            present = [(t, bb) for t, bb in leaves if t in stats]
+            if present:
+                units.append((occur, present, True, occur == "MUST", 0))
+        for occur, leaves, is_must_group, g_mm in groups:
             present = [(t, bb) for t, bb in leaves if t in stats]
             dead = (is_must_group and len(present) < len(leaves)) or (
                 not is_must_group and len(present) < max(1, g_mm)
@@ -1305,14 +1260,16 @@ class IndexSearcher:
                 if occur == "MUST":
                     return self._empty()
                 continue  # unmatchable SHOULD / MUST_NOT unit: drop entirely
-            resolved.append((occur, present, is_must_group, g_mm))
-        if not any(occ in ("MUST", "SHOULD") for occ, *_ in resolved):
+            units.append((occur, present, False, is_must_group, g_mm))
+        if not any(occ in ("MUST", "SHOULD") for occ, *_ in units):
             return self._empty()
 
-        weights = {t: self._leaf_w(bb, t, stats) for _, present, _, _ in resolved for t, bb in present}
-        scored = self._scored_postings(weights)
+        # MUST_NOT terms ride the same scan for the anti-check; their score
+        # contribution is masked out in the projection below
+        weights = {t: self._leaf_w(bb, t, stats) for _, present, *_ in units for t, bb in present}
+        scored = self._scored_postings(weights, blocks)
         aggs = []
-        for i, (_, present, _, _) in enumerate(resolved):
+        for i, (_, present, *_) in enumerate(units):
             terms_i = [t for t, _ in present]
             aggs.append(
                 F.sum(F.when(F.col("term").isin(terms_i), F.col("score").cast("double"))).alias(f"s{i}")
@@ -1320,31 +1277,34 @@ class IndexSearcher:
             aggs.append(F.count(F.when(F.col("term").isin(terms_i), F.lit(1))).alias(f"c{i}"))
         agg = scored.groupBy("doc_id").agg(*aggs)
 
-        matched = []
-        for i, (occur, present, is_must_group, g_mm) in enumerate(resolved):
-            if is_must_group:
-                matched.append(F.col(f"c{i}") == len(present))
-            else:
-                matched.append(F.col(f"c{i}") >= max(1, g_mm))
         cond = F.lit(True)
         ns = F.lit(0)
         score = F.lit(0.0)
-        for i, (occur, *_rest) in enumerate(resolved):
+        for i, (occur, present, is_flat, is_must_group, g_mm) in enumerate(units):
+            c = F.col(f"c{i}")
+            if is_flat and occur == "SHOULD":
+                # each matching flat SHOULD term is one matched clause
+                ns = ns + c
+                score = score + F.coalesce(F.col(f"s{i}"), F.lit(0.0))
+                continue
+            matched = (c == len(present)) if is_must_group else (c >= max(1, g_mm))
             if occur == "MUST":
-                cond = cond & matched[i]
+                cond = cond & matched
             elif occur == "MUST_NOT":
-                cond = cond & ~matched[i]
+                cond = cond & ~matched
             if occur in ("MUST", "SHOULD"):
                 # group boundary: float32 round of the group's double sum
-                g32 = F.col(f"s{i}").cast("float").cast("double")
-                score = score + F.when(matched[i], g32).otherwise(F.lit(0.0))
+                s = F.col(f"s{i}") if is_flat else F.col(f"s{i}").cast("float").cast("double")
+                score = score + F.when(matched, s).otherwise(F.lit(0.0))
             if occur == "SHOULD":
-                ns = ns + F.when(matched[i], F.lit(1)).otherwise(F.lit(0))
+                ns = ns + F.when(matched, F.lit(1)).otherwise(F.lit(0))
         if mm > 0:
             cond = cond & (ns >= mm)
         return agg.filter(cond).select("doc_id", score.cast("float").alias("score"))
 
-    def _eval_boolean(self, q: BooleanQuery, boost: float, stats: dict) -> DataFrame:
+    def _eval_boolean(
+        self, q: BooleanQuery, boost: float, stats: dict, blocks: Optional[DataFrame] = None
+    ) -> DataFrame:
         must = q.by_occur("MUST")
         should = q.by_occur("SHOULD")
         must_not = q.by_occur("MUST_NOT")
@@ -1354,23 +1314,26 @@ class IndexSearcher:
             mm = max(1, mm)
         if not must and not should and not filters:
             return self._empty()  # pure MUST_NOT matches nothing
+        filter_ids = [self.cached_filter(sub) for sub in filters]
+        # FILTER is a required clause, so beside it SHOULD stays optional
+        # (ReqOptSumScorer): a doc matching the filters alone scores 0
+        filter_base = bool(filters) and not must and mm <= 0
 
-        if must or should:
-            fast = self._eval_boolean_terms_single_scan(must, should, must_not, mm, boost, stats)
-            if fast is None:
-                fast = self._eval_boolean_nested_single_scan(must, should, must_not, mm, boost, stats)
-            if fast is not None:
-                for sub in filters:
-                    fast = fast.join(self.cached_filter(sub), "doc_id", "left_semi")
-                return fast
-
-        parts = []
-        for sub in must:
-            parts.append(self._evaluate(sub, boost, stats).select("doc_id", "score", F.lit(1).alias("is_must"), F.lit(0).alias("is_should")))
-        for sub in should:
-            parts.append(self._evaluate(sub, boost, stats).select("doc_id", "score", F.lit(0).alias("is_must"), F.lit(1).alias("is_should")))
-
-        if parts:
+        out = None
+        if (must or should) and not filter_base:
+            out = self._eval_boolean_single_scan(must, should, must_not, mm, boost, stats, blocks)
+        if out is None:
+            parts = []
+            for sub in must:
+                parts.append(self._evaluate(sub, boost, stats).select("doc_id", "score", F.lit(1).alias("is_must"), F.lit(0).alias("is_should")))
+            for sub in should:
+                parts.append(self._evaluate(sub, boost, stats).select("doc_id", "score", F.lit(0).alias("is_must"), F.lit(1).alias("is_should")))
+            if filter_base:
+                parts.append(filter_ids[0].select(
+                    "doc_id", F.lit(0.0).cast("float").alias("score"), F.lit(0).alias("is_must"), F.lit(0).alias("is_should")
+                ))
+            if not parts:
+                return self._empty()  # FILTER-only with mm > 0: no SHOULD can meet it
             u = parts[0]
             for p in parts[1:]:
                 u = u.unionByName(p)
@@ -1383,17 +1346,10 @@ class IndexSearcher:
             if mm > 0:
                 cond = cond & (F.col("ns") >= mm)
             out = agg.filter(cond).select("doc_id", F.col("dscore").cast("float").alias("score"))
-        else:
-            # FILTER-only query: match with score 0
-            out = self._evaluate(filters[0], 1.0, stats).select("doc_id").distinct().select(
-                "doc_id", F.lit(0.0).cast("float").alias("score")
-            )
-            filters = filters[1:]
-
-        for sub in filters:
-            out = out.join(self.cached_filter(sub), "doc_id", "left_semi")
-        for sub in must_not:
-            out = out.join(self._evaluate(sub, 1.0, stats).select("doc_id").distinct(), "doc_id", "left_anti")
+            for sub in must_not:
+                out = out.join(self._evaluate(sub, 1.0, stats).select("doc_id").distinct(), "doc_id", "left_anti")
+        for ids in filter_ids:
+            out = out.join(ids, "doc_id", "left_semi")
         return out
 
     def _eval_blended(self, q, boost: float, stats: dict) -> DataFrame:
@@ -1434,7 +1390,7 @@ class IndexSearcher:
             return self._empty()
         tie = float(q.tie_breaker)
         # single-scan fast path for all-term disjuncts (same plan rationale
-        # as _eval_boolean_terms_single_scan)
+        # as _eval_boolean_single_scan)
         leaves = [self._flat_term(d, boost) for d in q.disjuncts]
         if all(l is not None for l in leaves) and len({t for t, _ in leaves}) == len(leaves):
             weights = {t: self._leaf_w(b, t, stats) for t, b in leaves if t in stats}
@@ -1605,7 +1561,7 @@ class IndexSearcher:
         if self.corpus is None:
             raise ValueError("CoveringQuery requires a searcher bound to a corpus")
         # single-scan fast path for all-term clauses (same plan rationale as
-        # _eval_boolean_terms_single_scan: one postings scan, one shuffle)
+        # _eval_boolean_single_scan: one postings scan, one shuffle)
         leaves = [self._flat_term(sub, boost) for sub in q.queries]
         if all(l is not None for l in leaves) and len({t for t, _ in leaves}) == len(leaves):
             weights = {t: self._leaf_w(b, t, stats) for t, b in leaves if t in stats}
@@ -1632,49 +1588,8 @@ class IndexSearcher:
         )
 
     # -------------------------------------------------------- pruned paths
-    def _pruned_or_terms(
-        self, term_boosts: dict, k: int, stats: dict, metrics_out: Optional[dict] = None
-    ) -> Optional[DataFrame]:
-        """Two-pass block-max evaluation of a pure term disjunction
-        (single TermQuery == 1-term disjunction). Returns None when pruning
-        is not applicable/beneficial."""
-        present = {t: b for t, b in term_boosts.items() if t in stats}
-        if not present:
-            return self._empty()
-        # cost gate (the IndexOrDocValuesQuery idea applied to pruning): the
-        # θ pre-pass costs one extra job + driver collect; below this many
-        # postings, bulk-decoding everything is cheaper than planning to skip
-        # any of it. Results are identical either way (prune identity test).
-        if sum(int(stats[t][0]) for t in present) < self.prune_min_postings:
-            return None
-        weights = {t: self._leaf_w(b, t, stats) for t, b in present.items()}
-        sampled = self._theta_block_sample(weights, k)
-        if sampled is None:
-            return self._empty()
-        with_ub, max_ub, sample = sampled
-        # per-doc sums over the sample give a sound lower bound of true scores
-        samp = sample["score"].astype(np.float64).groupby(sample["doc_id"]).sum()
-        if len(samp) >= k:
-            theta = float(np.sort(samp.to_numpy())[-k])
-        else:
-            theta = -math.inf
-
-        # phase 2: keep only blocks that can still reach θ
-        total_max = sum(max_ub.values())
-        slack_map = {t: total_max - max_ub.get(t, 0.0) for t in present}
-
-        @F.pandas_udf(T.FloatType())
-        def slack_udf(term: pd.Series) -> pd.Series:
-            return term.map(slack_map).astype("float32")
-
-        surv = (F.col("ub") + slack_udf("term")) >= F.lit(theta)
-        if metrics_out is not None:
-            metrics_out.update(theta=float(theta), **self._survival_counts(with_ub, surv))
-        scored = self._scored_postings(weights, with_ub.filter(surv))
-        return scored.groupBy("doc_id").agg(F.sum(F.col("score").cast("double")).cast("float").alias("score"))
-
     def _theta_block_sample(self, params: dict, k: int):
-        """Phase 1 of both block-max θ pre-passes: each block's score upper
+        """Phases 1-2 of the block-max θ pre-pass: each block's score upper
         bound ``ub`` from its ``(max_tf, min_norm)`` summary under `params`
         (sound for every similarity: the kernels are monotone, ↑tf / ↓length),
         then the top ``max(2, k)`` blocks per term (a few KB) unpacked and
@@ -1730,72 +1645,81 @@ class IndexSearcher:
         ).first()
         return {name: int(row[name] or 0) for name in row.asDict()}
 
-    def prune_metrics(self, query: Query, k: int = 10) -> dict:
-        """Block-max pruning observability for a term / pure-OR query: run
-        the two-pass evaluation and report how many block rows (and their
-        postings) survived the θ cut — the measurable counterpart of the
-        reference's ImpactsDISI block skipping (``ImpactsDISI.java:94-126``).
-        Returns ``pruning_applied=False`` when the cost gate chose the
-        exhaustive scan (below ``prune_min_postings``)."""
-        term_boosts = self._as_pure_or(query)
-        if term_boosts is None:
-            raise ValueError("prune metrics apply to TermQuery / pure SHOULD-of-terms queries")
-        stats = self._term_stats(set(term_boosts))
+    def _single_clause_group(self, query: Query, stats: dict) -> Optional[tuple]:
+        """One query as a one-group clause table for the shared θ pre-pass
+        (:meth:`_batch_pruned_postings`): ``(clause_rows, meta_rows,
+        params)`` with the query's own leaf params and clause scale 1, so
+        single-search pruning holds for every (monotone) similarity.  None
+        when the query is not flat terms; a repeated term (one param set per
+        term) yields no rows, i.e. no pruning."""
+        flat = self._flat_clauses(query)
+        if flat is None:
+            return None
+        leaves, n_req, mm = flat
+        present = [(o, t, b) for o, t, b in leaves if t in stats]
+        if len({t for _, t, _ in leaves}) < len(leaves):
+            present = []
+        rows = [
+            (0, t, _OCC_CODE[o], 1.0 if o in ("MUST", "SHOULD") and b > 0 else 0.0)
+            for o, t, b in present
+        ]
+        params = {t: self._leaf_w(b, t, stats) for _, t, b in present}
+        return rows, [(0, [], n_req, mm)], params
+
+    def _prune_report(self, clause_rows, meta_rows, stats: dict, k: int, params=None) -> tuple:
+        """The metrics body shared by :meth:`prune_metrics` and
+        :meth:`batch_prune_metrics`: runs the θ pre-pass the search would run
+        and returns ``(metrics, blocks, clause_theta)``."""
         out: dict = {}
-        res = self._pruned_or_terms(term_boosts, k, stats, metrics_out=out)
-        if res is None or "blocks" not in out:
-            return {"pruning_applied": False}
+        blocks, clause_theta = self._batch_pruned_postings(
+            clause_rows, meta_rows, stats, k, params, metrics_out=out
+        )
+        if blocks is None and not clause_theta:
+            return {"pruning_applied": False}, None, {}
         out["pruning_applied"] = True
         out["block_skip_rate"] = round(1.0 - out["surviving_blocks"] / max(out["blocks"], 1), 4)
         out["posting_skip_rate"] = round(
             1.0 - out["surviving_postings"] / max(out["postings"], 1), 4
         )
-        return out
+        return out, blocks, clause_theta
 
-    @staticmethod
-    def _as_pure_or(q: Query) -> Optional[dict]:
-        """term -> boost map if q is a TermQuery / pure SHOULD-of-terms."""
-        if isinstance(q, TermQuery):
-            return {q.term: q.boost}
-        if isinstance(q, BooleanQuery) and q.minimum_should_match <= 1:
-            terms = {}
-            for c in q.clauses:
-                if c.occur != "SHOULD" or not isinstance(c.query, TermQuery):
-                    return None
-                if c.query.term in terms:
-                    return None
-                terms[c.query.term] = c.query.boost
-            return terms or None
-        return None
+    def prune_metrics(self, query: Query, k: int = 10) -> dict:
+        """Block-max pruning observability for a flat term query: run the θ
+        pre-pass :meth:`search` runs and report θ and how many block rows
+        (and their postings) survived the cut — the measurable counterpart
+        of the reference's ImpactsDISI block skipping
+        (``ImpactsDISI.java:94-126``).  ``pruning_applied=False`` when
+        search() scans exhaustively (cost gate, delete cap, or a query no
+        θ can cut)."""
+        stats = self._term_stats(query.terms())
+        group = self._single_clause_group(query, stats)
+        if group is None:
+            raise ValueError("prune metrics apply to a term or a flat boolean of terms")
+        rows, meta, params = group
+        return self._prune_report(rows, meta, stats, k, params)[0]
 
     # --------------------------------------------------------------- search
     def search(self, query: Query, k: int = 10, prune: bool = True, exclude_doc_ids=()) -> TopDocs:
-        """Top-k search; identical results with prune on or off (tested)."""
+        """Top-k search; identical results with prune on or off (tested).
+
+        With ``prune``, a term or flat term boolean first runs the shared θ
+        pre-pass; the exclusions bound k like pending deletes do (an
+        excluded doc sampled into θ could otherwise hold a top-k slot), and
+        the surviving blocks feed the same single-scan evaluator."""
         # release positional-occurrence caches persisted by earlier span
         # queries (bounded memory per searcher; see _persist_span_occ)
         self.release_span_caches()
         query = self._rewrite_span_multiterm(query)
         stats = self._term_stats(query.terms())
-        scored = None
-        if prune:
-            as_or = self._as_pure_or(query)
-            if as_or is not None:
-                # exclusions are applied after scoring; θ from the pre-pass
-                # stays a sound lower bound only if excluded docs can't hold
-                # top-k slots, so shrink k's bound by the exclusion count.
-                # Pending (unexpunged) deletes are the same hazard: a deleted
-                # doc sampled into the θ estimate can push θ above the best
-                # LIVE scores and prune the blocks holding them — enlarge the
-                # bound by the delete count so θ clears every deleted slot
-                # (pinned by test_prune_identity_with_deletes).
-                k_bound = k + len(exclude_doc_ids) + self._deletes_count()
-                # the θ sample depth scales with the bound — past this many
-                # pending deletes the pre-pass would cost more than it saves;
-                # run exhaustive until expunge_deletes reclaims them
-                if k_bound <= 256:
-                    scored = self._pruned_or_terms(as_or, k_bound, stats)
-        if scored is None:
+        group = self._single_clause_group(query, stats) if prune else None
+        blocks = None
+        if group is not None:
+            rows, meta, params = group
+            blocks, _ = self._batch_pruned_postings(rows, meta, stats, k + len(exclude_doc_ids), params)
+        if blocks is None:
             scored = self._evaluate(query, 1.0, stats)
+        else:
+            scored = self._eval_boolean(*self._as_boolean(query), stats, blocks)
         if exclude_doc_ids:
             scored = scored.filter(~F.col("doc_id").isin([int(d) for d in exclude_doc_ids]))
         if self.index.deletes is not None:
@@ -2992,122 +2916,141 @@ class IndexSearcher:
 
     def _batch_pruned_postings(
         self, clause_rows: list, meta_rows: list, stats: dict, k: int,
-        metrics_out: Optional[dict] = None,
-    ) -> Optional[DataFrame]:
-        """Block-max θ pruning for :meth:`batch_search` — the batched
-        analog of the single-query two-pass evaluation (``_pruned_or_terms``,
-        reference ``ImpactsDISI.java:94-126``): without it the batch path
-        unpacks and scores EVERY posting of the batch's term union, the one
-        plan that stays linear in corpus postings at scale.
+        params: Optional[dict] = None, metrics_out: Optional[dict] = None,
+    ) -> tuple:
+        """The block-max θ pre-pass (reference ``ImpactsDISI.java:94-126``)
+        of both :meth:`batch_search` and :meth:`search`: without it every
+        posting of the query terms is unpacked and scored, the one plan that
+        stays linear in corpus postings at scale.
 
-        Scheme (unit-score space, since the batch unpack emits unit scores):
-        1. per-block unit upper bound from (max_tf, min_norm) — sound for
-           BM25's monotone kernel;
+        ``clause_rows`` ``(qc, term, occ, w)`` and ``meta_rows`` ``(qc,
+        qids, n_req, mm)`` are the clause groups; a clause scores
+        ``f32(w)·s`` where ``s`` is the posting's score under ``params``
+        (default: unit params — the batch, whose ``w`` is the leaf weight;
+        a single search passes its own leaf params and ``w`` = 1).  ``k`` is
+        the caller's bound (k plus exclusions); pending deletes widen it
+        here.
+
+        Scheme:
+        1. per-block upper bound ``ub`` from (max_tf, min_norm) — sound for
+           every monotone kernel;
         2. sample the top ``max(2, k)`` blocks per term, exact-unpack them
-           driver-side, and take each term's k-th best unit score;
-        3. per query q, a SOUND lower bound on its k-th best matching score:
-           θ_q = max over q's *safe* terms t of f32(w_qt)·kth_unit(t).  A
-           term is safe when its presence alone guarantees the doc matches
-           q — all SHOULD terms when the query is a pure disjunction
-           (no required clauses, mm<=1, no MUST_NOT), or the single
-           required term when it is the only required clause and mm<=0.
-           Conjunctions / mm>1 / MUST_NOT queries get θ_q = -inf (their
-           k-th matching score can be arbitrarily low — never prune on
-           their account);
-        4. per term t, the unit-space survival threshold
-           θ_t = min over queries q∋t of (θ_q − slack_qt)/w_qt where
-           slack_qt = Σ over q's OTHER scoring clauses of f32(w)·umax —
-           any posting of a potential top-k doc of q contributes
-           ≥ θ_q − slack_qt, so a block with ub_unit < θ_t cannot hold one.
-           Terms carried by any FILTER/MUST_NOT clause, zero-weight clause,
-           or θ_q = -inf query are never pruned (their postings decide
-           MATCHING, not just score);
-        5. filter blocks ``ub >= θ_t`` and unpack only the survivors.
+           driver-side;
+        3. per group q, a SOUND lower bound θ_q on its k-th best matching
+           score: the k-th largest per-doc sum over the sample of q's *safe*
+           clauses.  All SHOULD clauses are safe when q is a pure
+           disjunction (no required clause, mm<=1, no MUST_NOT), and the
+           single required clause when it is the only one, a MUST, and
+           mm<=0 — a doc holding a safe clause matches q and scores at
+           least its sampled sum.  Conjunctions / mm>1 / MUST_NOT / FILTER
+           groups get θ_q = -inf (their k-th matching score can be
+           arbitrarily low — never prune on their account).  When no group
+           has a safe clause, the sample job is skipped;
+        4. per term t, the survival threshold θ_t = min over groups q∋t of
+           (θ_q − slack_qt)/w_qt where slack_qt = Σ over q's OTHER scoring
+           clauses of f32(w)·umax — any posting of a potential top-k doc of
+           q contributes ≥ θ_q − slack_qt, so a block with ub < θ_t cannot
+           hold one.  Terms carried by any FILTER/MUST_NOT clause,
+           zero-weight clause, or θ_q = -inf group are never pruned (their
+           postings decide MATCHING, not just score);
+        5. keep the blocks with ``ub >= θ_t``.
 
         Besides the block filter, the per-clause thresholds are returned AS
-        a map ``(qc, term) -> θ`` for posting-level filtering after the
-        clause join: a posting with unit score < (θ_q − slack_qt)/w_qt
+        a map ``(qc, term) -> θ`` for the batch's posting-level filtering
+        after the clause join: a posting scoring below (θ_q − slack_qt)/w_qt
         cannot belong to a top-k doc OF THAT QUERY, so the (posting, clause)
         pair can be dropped even when another query (e.g. a conjunction
-        sharing the term, whose θ_q is -inf) still needs the block.  This is
-        the step the per-term min collapses: ONE conjunction in the batch
-        forces every shared term's blocks to unpack, but it must not force
-        every other query to carry them through the exchange.  Dropping a
-        pair is sound for matching too: a doc losing its only required/
+        sharing the term) still needs the block.  This is the step the
+        per-term min collapses: ONE conjunction in the batch forces every
+        shared term's blocks to unpack, but it must not force every other
+        query to carry them through the exchange.  Dropping a pair (or a
+        block) is sound for matching too: a doc losing its only required/
         should row vanishes from that query entirely (it could not be
         top-k), and a doc keeping partial rows scores strictly below the
         true k-th (θ_q ≤ kth and the margin makes the cut strict), so it
         can neither enter nor tie into the top-k.
 
-        Returns ``(survivors, clause_theta)``: the (term, doc_id, score)
-        unit-scored block survivors (None = run the exhaustive scan) and
-        the per-clause posting thresholds (empty when the cost gate skipped
-        the analysis).  Results are bit-identical either way (pinned by
-        test_batch_search prune identity); a 1e-4 absolute margin on every
-        threshold absorbs the f32/f64 rounding between the f64 threshold
-        math and the f32 engine scores."""
-        import math
+        Returns ``(blocks, clause_theta)``: the surviving block rows (None =
+        run the exhaustive scan) and the per-clause posting thresholds
+        (empty when the cost gate skipped the analysis).  Results are
+        bit-identical either way (pinned by the prune-identity tests); a
+        1e-4 absolute margin on every threshold absorbs the f32/f64
+        rounding between the f64 threshold math and the f32 engine
+        scores."""
         from collections import defaultdict
 
         terms_needed = sorted({t for _, t, _, _ in clause_rows})
-        if sum(int(stats[t][0]) for t in terms_needed if t in stats) < self.prune_min_postings:
+        if not terms_needed or sum(int(stats[t][0]) for t in terms_needed) < self.prune_min_postings:
             return None, {}
-        # pending deletes are the same θ hazard as in search(): a deleted doc
-        # in the per-term sample inflates kth_unit above the best LIVE
-        # scores.  Enlarge k by the delete count (past the cap, run
-        # exhaustive until expunge reclaims them).
+        # pending deletes: a deleted doc in the sample inflates θ above the
+        # best LIVE scores and would prune the blocks holding them.  Enlarge
+        # k by the delete count; past the cap the sample would cost more
+        # than it saves — run exhaustive until expunge reclaims them
         k = k + self._deletes_count()
         if k > 256:
             return None, {}
-        unit = self._unit_params(terms_needed)
-        # phase 1: top blocks per term (tiny — block summaries only), exact
-        # unit scores from the sampled payloads
-        sampled = self._theta_block_sample(unit, k)
-        if sampled is None:
-            return None, {}
-        with_ub, umax, sample = sampled
-        kth_unit: dict = {}
-        for t, grp in sample.groupby("term")["score"]:
-            v = np.sort(grp.to_numpy())
-            if len(v) >= k:
-                kth_unit[t] = float(v[-k])
 
-        # phases 3-4: per-query θ, then per-term unit thresholds (driver-side
-        # arithmetic over the clause table — no data touched)
         by_q: dict = defaultdict(list)
         for qc, t, occ, w in clause_rows:
-            by_q[qc].append((t, occ, w))
+            by_q[qc].append((t, occ, float(np.float32(w))))
         meta_by_q = {qc: (n_req, mm) for qc, _, n_req, mm in meta_rows}
         M, S = _OCC_CODE["MUST"], _OCC_CODE["SHOULD"]
         FL, MN = _OCC_CODE["FILTER"], _OCC_CODE["MUST_NOT"]
-        cand: dict = {}
-        blocked: set = set()
-        clause_theta: dict = {}  # (qc, term) -> posting-level unit threshold
+        proof: dict = {}  # qc -> (scoring clauses, the required term or None)
         for qc, leaves in by_q.items():
             n_req, mm = meta_by_q[qc]
-            shoulds = [(t, w) for t, o, w in leaves if o == S]
-            reqs = [(t, w) for t, o, w in leaves if o in (M, FL)]
-            has_not = any(o == MN for _, o, _ in leaves)
-            safe: list = []
-            if not has_not:
-                if n_req == 0 and mm <= 1:
-                    safe = shoulds
-                elif n_req == 1 and mm <= 0 and len(reqs) == 1:
-                    safe = reqs
-            theta_q = -math.inf
-            for t, w in safe:
-                if t in kth_unit:
-                    theta_q = max(theta_q, float(np.float32(w)) * kth_unit[t] if w > 0 else 0.0)
-            ubs = [
-                (float(np.float32(w)) * umax.get(t, 0.0)) if (o in (M, S) and w > 0) else 0.0
-                for t, o, w in leaves
-            ]
+            if any(o == MN for _, o, _ in leaves):
+                continue
+            scoring = [(t, w) for t, o, w in leaves if o in (M, S) and w > 0]
+            musts = [t for t, o, w in leaves if o == M and w > 0]
+            if n_req == 0 and mm <= 1:
+                proof[qc] = (scoring, None)
+            elif n_req == 1 and mm <= 0 and len(musts) == 1:
+                proof[qc] = (scoring, musts[0])
+        if not any(scoring for scoring, _ in proof.values()):
+            return None, {}  # no group can get a finite θ: skip the sample
+
+        # phases 1-2: top blocks per term (tiny — block summaries only),
+        # exact scores from the sampled payloads
+        sampled = self._theta_block_sample(params or self._unit_params(terms_needed), k)
+        if sampled is None:
+            return None, {}
+        with_ub, umax, sample = sampled
+        by_term = {
+            t: (g["doc_id"].to_numpy(), g["score"].to_numpy(dtype=np.float64))
+            for t, g in sample.groupby("term")
+        }
+
+        def kth_doc_sum(scoring, req) -> float:
+            """k-th largest sampled per-doc sum over the docs the sample
+            proves match (any scoring clause, or the required term)."""
+            hit = [(by_term[t][0], by_term[t][1] * w) for t, w in scoring if t in by_term]
+            if not hit or (req is not None and req not in by_term):
+                return -math.inf
+            docs, inv = np.unique(np.concatenate([d for d, _ in hit]), return_inverse=True)
+            sums = np.bincount(inv, weights=np.concatenate([v for _, v in hit]))
+            if req is not None:
+                sums = sums[np.isin(docs, by_term[req][0])]
+            if len(sums) < k:
+                return -math.inf
+            return float(np.partition(sums, len(sums) - k)[len(sums) - k])
+
+        # phases 3-4: per-group θ, then per-term thresholds (driver-side
+        # arithmetic over the clause table — no data touched)
+        cand: dict = {}
+        blocked: set = set()
+        clause_theta: dict = {}  # (qc, term) -> posting-level threshold
+        thetas = []
+        for qc, leaves in by_q.items():
+            theta_q = kth_doc_sum(*proof.get(qc, ((), None)))
+            thetas.append(theta_q)
+            ubs = [w * umax.get(t, 0.0) if (o in (M, S) and w > 0) else 0.0 for t, o, w in leaves]
             total_ub = sum(ubs)
             for (t, o, w), u in zip(leaves, ubs):
                 if o in (FL, MN) or w <= 0 or theta_q == -math.inf:
                     blocked.add(t)
                     continue
-                thr = (theta_q - (total_ub - u)) / float(np.float32(w))
+                thr = (theta_q - (total_ub - u)) / w
                 cand[t] = min(cand.get(t, math.inf), thr)
                 if thr - 1e-4 > 0.0:
                     clause_theta[(qc, t)] = thr - 1e-4
@@ -3125,46 +3068,33 @@ class IndexSearcher:
             surv = F.col("ub").cast("double") >= theta_udf("term")
         else:
             # no block can be skipped (some query needs every one), but the
-            # per-clause posting filter may still cut the exchange
+            # per-clause posting filter may still cut the batch's exchange
             surv = F.lit(True)
         if metrics_out is not None:
             metrics_out.update(
+                theta=max(thetas),
                 **self._survival_counts(with_ub, surv),
                 finite_thetas=sum(1 for v in theta_t.values() if v > 0.0),
                 finite_clause_thetas=len(clause_theta),
                 terms=len(terms_needed),
             )
-        if not prunable:
-            return None, clause_theta
-        return self._scored_postings(unit, with_ub.filter(surv)), clause_theta
+        return (with_ub.filter(surv) if prunable else None), clause_theta
 
     def batch_prune_metrics(self, queries: dict, k: int = 10) -> dict:
-        """Observability for the batch block-max pruning: how many block rows
-        (and postings) of the batch term union survive the θ cut — the batch
-        counterpart of :meth:`prune_metrics`.  ``pruning_applied=False`` when
-        the cost gate / threshold analysis chose the exhaustive scan."""
+        """Observability for the batch block-max pruning: the
+        :meth:`prune_metrics` report over the batch's clause table, plus
+        the clause-pair cut.  ``pruning_applied=False`` when the cost gate /
+        threshold analysis chose the exhaustive scan."""
         clause_rows, meta_rows, stats = self._batch_clause_table(queries)
-        out: dict = {}
-        res, clause_theta = (
-            self._batch_pruned_postings(clause_rows, meta_rows, stats, k, metrics_out=out)
-            if clause_rows
-            else (None, {})
-        )
-        if (res is None and not clause_theta) or "blocks" not in out:
-            return {"pruning_applied": False}
-        out["pruning_applied"] = True
-        out["block_skip_rate"] = round(1.0 - out["surviving_blocks"] / max(out["blocks"], 1), 4)
-        out["posting_skip_rate"] = round(
-            1.0 - out["surviving_postings"] / max(out["postings"], 1), 4
-        )
+        out, blocks, clause_theta = self._prune_report(clause_rows, meta_rows, stats, k)
+        if not out["pruning_applied"]:
+            return out
         # clause-pair skip: the per-clause posting θ (the exchange-volume
         # cut) measured on the actual scored stream × clause fan-out.  One
         # conjunction in the batch can zero the BLOCK skip (every block must
         # unpack) while this filter still removes most exchange rows.
         terms_needed = sorted({t for _, t, _, _ in clause_rows})
-        scored = (
-            res if res is not None else self._scored_postings(self._unit_params(terms_needed))
-        ).select("term", "score")
+        scored = self._scored_postings(self._unit_params(terms_needed), blocks).select("term", "score")
         cl = self.spark.createDataFrame(
             [(t, clause_theta.get((qc, t))) for qc, t, _occ, _w in clause_rows],
             "term string, theta double",
@@ -3188,6 +3118,39 @@ class IndexSearcher:
             1.0 - pair_row["surv"] / max(pair_row["pairs"], 1), 4
         )
         return out
+
+    @staticmethod
+    def _as_boolean(q: Query) -> tuple:
+        """``(BooleanQuery, boost)`` view of a (BoostQuery-wrapped) term or
+        boolean — a term is a one-MUST boolean; other shapes give ``(None,
+        boost)``."""
+        boost = 1.0
+        while isinstance(q, BoostQuery):
+            boost *= q.boost
+            q = q.query
+        if isinstance(q, TermQuery):
+            q = BooleanQuery.build(must=[q])
+        return (q if isinstance(q, BooleanQuery) else None), boost
+
+    def _flat_clauses(self, q: Query) -> Optional[tuple]:
+        """``(leaves, n_req, mm)`` for a term or a flat boolean of (possibly
+        boosted) terms — the shape the clause-table θ analysis covers — with
+        leaves ``(occur, term, boost)`` (FILTER/MUST_NOT boosts are 1) and
+        ``mm`` normalized as in :meth:`_eval_boolean`; None otherwise."""
+        q, boost = self._as_boolean(q)
+        if q is None:
+            return None
+        mm = q.minimum_should_match
+        if not q.by_occur("MUST") and not q.by_occur("FILTER"):
+            mm = max(1, mm)
+        leaves = []
+        for occur in ("MUST", "SHOULD", "FILTER", "MUST_NOT"):
+            for sub in q.by_occur(occur):
+                ft = self._flat_term(sub, boost if occur in ("MUST", "SHOULD") else 1.0)
+                if ft is None:
+                    return None
+                leaves.append((occur, *ft))
+        return leaves, sum(1 for o, _, _ in leaves if o in ("MUST", "FILTER")), int(mm)
 
     def _batch_clause_table(self, queries: dict) -> tuple:
         """Normalize a batch query dict into the flat clause/meta tables the
@@ -3213,33 +3176,11 @@ class IndexSearcher:
         meta_rows: list = []  # (qc, [qids], n_req, mm)
         sig_to_qc: dict = {}
         for qid, q in queries.items():
-            boost = 1.0
-            while isinstance(q, BoostQuery):
-                boost *= q.boost
-                q = q.query
-            if isinstance(q, TermQuery):
-                must, should, filt, must_not, mm = [q], [], [], [], 0
-            elif isinstance(q, BooleanQuery):
-                must, should, filt, must_not = (
-                    q.by_occur("MUST"), q.by_occur("SHOULD"), q.by_occur("FILTER"), q.by_occur("MUST_NOT")
-                )
-                mm = q.minimum_should_match
-                if not must and not filt:  # same rule as _eval_boolean
-                    mm = max(1, mm)
-            else:
-                raise NotImplementedError(f"batch_search: {type(q).__name__}")
-            leaves = []
-            for occur, qs in (
-                ("MUST", must), ("SHOULD", should), ("FILTER", filt), ("MUST_NOT", must_not)
-            ):
-                for sub in qs:
-                    ft = self._flat_term(sub, boost if occur in ("MUST", "SHOULD") else 1.0)
-                    if ft is None:
-                        raise NotImplementedError("batch_search: non-term clause")
-                    leaves.append((occur, ft[0], ft[1]))
-            required = ("MUST", "FILTER")
-            n_req = sum(1 for o, t, _ in leaves if o in required)
-            present_req = sum(1 for o, t, _ in leaves if o in required and t in stats)
+            flat = self._flat_clauses(q)
+            if flat is None:
+                raise NotImplementedError(f"batch_search: {type(q).__name__} is not flat terms")
+            leaves, n_req, mm = flat
+            present_req = sum(1 for o, t, _ in leaves if o in ("MUST", "FILTER") and t in stats)
             if present_req < n_req or not any(
                 o in ("MUST", "SHOULD", "FILTER") and t in stats for o, t, _ in leaves
             ):
@@ -3250,14 +3191,14 @@ class IndexSearcher:
                     continue
                 w = self._leaf_w(b, t, stats)[0] if occur in ("MUST", "SHOULD") else 0.0
                 rows.append((t, _OCC_CODE[occur], float(w)))
-            sig = (tuple(sorted(rows)), n_req, int(mm))
+            sig = (tuple(sorted(rows)), n_req, mm)
             if sig in sig_to_qc:
                 meta_rows[sig_to_qc[sig]][1].append(str(qid))
                 continue
             qc = len(meta_rows)  # dense int code; strings restored at the end
             sig_to_qc[sig] = qc
             clause_rows.extend((qc, t, occ, w) for t, occ, w in rows)
-            meta_rows.append((qc, [str(qid)], n_req, int(mm)))
+            meta_rows.append((qc, [str(qid)], n_req, mm))
         return clause_rows, meta_rows, stats
 
     def batch_search(self, queries: dict, k: int = 10) -> DataFrame:
@@ -3305,10 +3246,8 @@ class IndexSearcher:
         # blocks no query in the batch can promote into its top-k; falls back
         # to the exhaustive scan below the cost gate — bit-identical results
         # either way (pinned by the prune-identity test).
-        pruned, clause_theta = self._batch_pruned_postings(clause_rows, meta_rows, stats, k)
-        scored = (
-            pruned if pruned is not None else self._scored_postings(self._unit_params(terms_needed))
-        ).select("term", "doc_id", "score")
+        blocks, clause_theta = self._batch_pruned_postings(clause_rows, meta_rows, stats, k)
+        scored = self._scored_postings(self._unit_params(terms_needed), blocks).select("term", "doc_id", "score")
         # clause table rides the broadcast with its per-clause posting
         # threshold: a (posting, clause) pair whose unit score is below the
         # clause's θ cannot put its doc in THAT query's top-k (see

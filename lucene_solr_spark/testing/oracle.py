@@ -193,15 +193,15 @@ class OracleEngine:
             for d, s in sh.items():
                 scores[d] += float(s)
                 n_should[d] += 1
-        if must or should:
-            out = {
-                d: np.float32(v)
-                for d, v in scores.items()
-                if n_must[d] == len(must) and (mm <= 0 or n_should[d] >= mm)
-            }
-        else:
-            out = {d: np.float32(0.0) for d in filters[0]}
-            filters = filters[1:]
+        cands = set(scores)
+        if filters and not must and mm <= 0:
+            # FILTER is required, so SHOULD stays optional: filter-only docs score 0
+            cands |= set(filters[0])
+        out = {
+            d: np.float32(scores.get(d, 0.0))
+            for d in cands
+            if n_must[d] == len(must) and (mm <= 0 or n_should[d] >= mm)
+        }
         for f in filters:
             out = {d: v for d, v in out.items() if d in f}
         for mn in must_not:

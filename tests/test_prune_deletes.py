@@ -71,3 +71,17 @@ def test_deletes_count_cache_invalidates(hot_block_deleted, spark):
     finally:
         s.index.deletes = prev
         assert s._deletes_count() == 128
+
+
+def test_prune_metrics_theta_is_delete_aware(hot_block_deleted):
+    """prune_metrics reports the pre-pass search() runs: k widened by the
+    pending deletes, so its θ never exceeds the 10th LIVE score."""
+    s = hot_block_deleted
+    live = s.search(TermQuery("hot"), 10, prune=False).collect()
+    assert s.prune_metrics(TermQuery("hot"), 10)["theta"] <= live[-1][1]
+
+
+def test_prune_metrics_respects_delete_cap(hot_block_deleted):
+    """200 + 128 pending deletes is past the 256 sample cap: search() scans
+    exhaustively, and prune_metrics must say so."""
+    assert hot_block_deleted.prune_metrics(TermQuery("hot"), 200) == {"pruning_applied": False}
