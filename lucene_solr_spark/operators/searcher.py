@@ -10,14 +10,19 @@ TakeOrderedAndProject — per-partition heap + driver merge, the exact shape of
 java/org/apache/lucene/search/TopDocs.java:75-90``), and stored fields are
 fetched only for winners via a broadcast semi-join (PURPOSE_GET_FIELDS).
 
-Scorer-to-plan mapping (``search/Boolean2ScorerSupplier.java:93-188``):
+Scorer-to-plan mapping (``search/Boolean2ScorerSupplier.java:93-188``): a
+compound query reads all its term leaves in ONE postings scan, tags each row
+with its clause unit, and runs ONE groupBy(doc_id) with a sum and a count
+per unit (``_clause_rows``); the scorers become predicates over those:
 
-- MUST/FILTER conjunction  -> matched-clause-count filter after a doc_id agg
+- MUST conjunction          -> unit count == clause count
   (BlockMaxConjunctionScorer analog);
-- SHOULD disjunction        -> union + groupBy(doc_id).sum (WANDScorer
-  analog; two-pass block-max pruning below);
-- MUST_NOT                  -> left-anti join (ReqExclScorer analog);
-- minimumNumberShouldMatch  -> HAVING count >= mm (MinShouldMatchSumScorer).
+- SHOULD disjunction        -> summed scores (WANDScorer analog; two-pass
+  block-max pruning below);
+- MUST_NOT                  -> unit count == 0 (ReqExclScorer analog);
+- FILTER                    -> semi-join on a cached doc set;
+- minimumNumberShouldMatch  -> matched SHOULD count >= mm
+  (MinShouldMatchSumScorer).
 
 Block-max pruning (``search/ImpactsDISI.java:94-126``, ``WANDScorer.java``,
 ``MaxScoreCache.java:64``) is re-expressed shuffle-free as two passes:
@@ -1184,170 +1189,153 @@ class IndexSearcher:
             return q.term, boost * q.boost
         return None
 
-    def _eval_boolean_single_scan(
-        self, must, should, must_not, mm: int, boost: float, stats: dict,
-        blocks: Optional[DataFrame] = None,
-    ) -> Optional[DataFrame]:
-        """Single-postings-scan evaluation when every MUST / SHOULD / MUST_NOT
-        clause is a (possibly boosted) TermQuery or an un-boosted one-level
-        BooleanQuery group of them, all terms distinct — flat term booleans,
-        the CommonTermsQuery rewrite and ``(a OR b) AND (c OR d)`` shapes.
+    def _term_group(self, q: Query, boost: float) -> Optional[tuple]:
+        """``(leaves, need)`` for a (boosted) one-level BooleanQuery whose
+        clauses are all (boosted) terms of ONE occur, MUST or SHOULD — the
+        CommonTermsQuery groups and ``(a OR b) AND (c OR d)`` shapes.  The
+        group matches a doc holding ``need`` of its leaves and scores the
+        float32 round of their double sum (its BooleanScorer returns
+        float).  A MUST group with ``mm > 0`` has no optional clause to
+        meet it, so it matches nothing.  None for every other shape."""
+        while isinstance(q, BoostQuery):
+            boost *= q.boost
+            q = q.query
+        if not isinstance(q, BooleanQuery) or {c.occur for c in q.clauses} not in ({"MUST"}, {"SHOULD"}):
+            return None
+        leaves = [self._flat_term(c.query, boost) for c in q.clauses]
+        if None in leaves:
+            return None
+        mm = q.minimum_should_match
+        if q.clauses[0].occur == "MUST":
+            return leaves, len(leaves) + 1 if mm > 0 else len(leaves)
+        return leaves, max(1, mm)
 
-        The reference walks one postings iterator per clause in lock-step
-        (``Boolean2ScorerSupplier``, ``ConjunctionDISI``); the naive Spark
-        translation scans the postings table once per clause and unions.
-        This plan scans ONCE for all clauses' terms and computes every unit's
-        count and double-sum with conditional aggregates in ONE
-        groupBy(doc_id) — one shuffle regardless of clause count.  A unit is
-        either all flat term clauses of one occur (ungrouped: its terms add
-        straight into the top-level double sum) or one nested group, whose
-        score rounds to float32 at the group boundary (its BooleanScorer
-        returns float); the top level sums in double and casts once more
-        (BooleanWeight) — bit-identical to evaluating each clause separately.
+    def _clause_rows(self, units: list, stats: dict, blocks: Optional[DataFrame] = None) -> DataFrame:
+        """``(doc_id, score, c)`` rows of a compound query's clause units —
+        the one postings read behind :meth:`_eval_boolean`,
+        :meth:`_eval_dismax` and :meth:`_eval_covering`.
 
-        ``blocks`` (the θ pre-pass survivors, see :meth:`search`) replaces
-        the full postings scan; nothing else differs."""
-        flat: dict = {"MUST": [], "SHOULD": [], "MUST_NOT": []}
-        groups = []  # (occur, [(term, boost)], is_must_group, group_mm)
-
-        def flatten_group(g: BooleanQuery):
-            if g.by_occur("MUST_NOT") or g.by_occur("FILTER"):
-                return None
-            g_must, g_should = g.by_occur("MUST"), g.by_occur("SHOULD")
-            if (g_must and g_should) or not (g_must or g_should):
-                return None
-            leaves = []
-            for s_ in g_must or g_should:
-                ft = self._flat_term(s_, 1.0)
-                if ft is None:
-                    return None
-                leaves.append(ft)
-            return leaves, bool(g_must), (0 if g_must else max(1, g.minimum_should_match))
-
-        for occur, qs in (("MUST", must), ("SHOULD", should), ("MUST_NOT", must_not)):
-            b = boost if occur != "MUST_NOT" else 1.0
-            for sub in qs:
-                ft = self._flat_term(sub, b)
-                if ft is not None:
-                    flat[occur].append(ft)
-                    continue
-                if not isinstance(sub, BooleanQuery):
-                    return None
-                fg = flatten_group(sub)
-                if fg is None:
-                    return None
-                leaves, is_must_group, g_mm = fg
-                groups.append((occur, [(t, bb * b) for t, bb in leaves], is_must_group, g_mm))
-        all_terms = [t for leaves in flat.values() for t, _ in leaves]
-        all_terms += [t for _, leaves, _, _ in groups for t, _ in leaves]
-        if len(set(all_terms)) != len(all_terms):
-            return None  # duplicate term across clauses: clause-per-row semantics differ
-
-        # resolve present terms; absent terms make MUST units unmatchable
-        if any(t not in stats for t, _ in flat["MUST"]):
-            return self._empty()
-        units = []  # (occur, present [(term, boost)], is_flat, is_must_group, group_mm)
-        for occur, leaves in flat.items():
-            present = [(t, bb) for t, bb in leaves if t in stats]
-            if present:
-                units.append((occur, present, True, occur == "MUST", 0))
-        for occur, leaves, is_must_group, g_mm in groups:
-            present = [(t, bb) for t, bb in leaves if t in stats]
-            dead = (is_must_group and len(present) < len(leaves)) or (
-                not is_must_group and len(present) < max(1, g_mm)
-            )
-            if dead:
-                if occur == "MUST":
-                    return self._empty()
-                continue  # unmatchable SHOULD / MUST_NOT unit: drop entirely
-            units.append((occur, present, False, is_must_group, g_mm))
-        if not any(occ in ("MUST", "SHOULD") for occ, *_ in units):
-            return self._empty()
-
-        # MUST_NOT terms ride the same scan for the anti-check; their score
-        # contribution is masked out in the projection below
-        weights = {t: self._leaf_w(bb, t, stats) for _, present, *_ in units for t, bb in present}
-        scored = self._scored_postings(weights, blocks)
-        aggs = []
-        for i, (_, present, *_) in enumerate(units):
-            terms_i = [t for t, _ in present]
-            aggs.append(
-                F.sum(F.when(F.col("term").isin(terms_i), F.col("score").cast("double"))).alias(f"s{i}")
-            )
-            aggs.append(F.count(F.when(F.col("term").isin(terms_i), F.lit(1))).alias(f"c{i}"))
-        agg = scored.groupBy("doc_id").agg(*aggs)
-
-        cond = F.lit(True)
-        ns = F.lit(0)
-        score = F.lit(0.0)
-        for i, (occur, present, is_flat, is_must_group, g_mm) in enumerate(units):
-            c = F.col(f"c{i}")
-            if is_flat and occur == "SHOULD":
-                # each matching flat SHOULD term is one matched clause
-                ns = ns + c
-                score = score + F.coalesce(F.col(f"s{i}"), F.lit(0.0))
+        Unit ``c`` is a list of ``(term, boost)`` leaves or an already
+        evaluated ``(doc_id, score)`` frame, unioned in.  The reference walks
+        one postings iterator per clause in lock-step (``ConjunctionDISI``);
+        here the leaf terms of ALL units share one postings scan (read from
+        ``blocks``, the θ pre-pass survivors, when given) and each posting
+        row fans out to every unit leaf holding its term, so a repeated
+        clause matches once per clause.  A term already in the scan under
+        another weight gets its own scan, unioned in the same way."""
+        scans: list = []  # (term -> params, term -> [unit per leaf])
+        parts = []
+        for c, unit in enumerate(units):
+            if isinstance(unit, DataFrame):
+                parts.append(unit.select("doc_id", "score", F.lit(c).alias("c")))
                 continue
-            matched = (c == len(present)) if is_must_group else (c >= max(1, g_mm))
-            if occur == "MUST":
-                cond = cond & matched
-            elif occur == "MUST_NOT":
-                cond = cond & ~matched
-            if occur in ("MUST", "SHOULD"):
-                # group boundary: float32 round of the group's double sum
-                s = F.col(f"s{i}") if is_flat else F.col(f"s{i}").cast("float").cast("double")
-                score = score + F.when(matched, s).otherwise(F.lit(0.0))
-            if occur == "SHOULD":
-                ns = ns + F.when(matched, F.lit(1)).otherwise(F.lit(0))
-        if mm > 0:
-            cond = cond & (ns >= mm)
-        return agg.filter(cond).select("doc_id", score.cast("float").alias("score"))
+            for t, b in unit:
+                if t not in stats:
+                    continue
+                p = self._leaf_w(b, t, stats)
+                for params, tags in scans:
+                    if params.get(t, p) == p:
+                        break
+                else:
+                    params, tags = {}, {}
+                    scans.append((params, tags))
+                params[t] = p
+                tags.setdefault(t, []).append(c)
+        for params, tags in scans:
+            fan_out = F.create_map(
+                *[x for t, cs in tags.items() for x in (F.lit(t), F.array(*map(F.lit, cs)))]
+            )
+            src = None if blocks is None else blocks.filter(F.col("term").isin(list(params)))
+            parts.append(
+                self._scored_postings(params, src).select(
+                    "doc_id", "score", F.explode(fan_out[F.col("term")]).alias("c")
+                )
+            )
+        if not parts:
+            return self.spark.createDataFrame([], "doc_id bigint, score float, c int")
+        out = parts[0]
+        for part in parts[1:]:
+            out = out.unionByName(part)
+        return out
+
+    @staticmethod
+    def _unit_sums(ids) -> list:
+        """Per-unit double sum ``s{i}`` and row count ``n{i}`` aggregates over
+        :meth:`_clause_rows` rows — conditional aggregates, so every unit's
+        totals come out of ONE groupBy(doc_id), one shuffle."""
+        out = []
+        for i in ids:
+            on = F.col("c") == i
+            out.append(F.sum(F.when(on, F.col("score").cast("double"))).alias(f"s{i}"))
+            out.append(F.count(F.when(on, F.lit(1))).alias(f"n{i}"))
+        return out
 
     def _eval_boolean(
         self, q: BooleanQuery, boost: float, stats: dict, blocks: Optional[DataFrame] = None
     ) -> DataFrame:
-        must = q.by_occur("MUST")
-        should = q.by_occur("SHOULD")
-        must_not = q.by_occur("MUST_NOT")
-        filters = q.by_occur("FILTER")
+        """BooleanWeight (``Boolean2ScorerSupplier.java:93-188``) over clause
+        units: ONE :meth:`_clause_rows` read, ONE groupBy(doc_id) with a sum
+        and a count per unit, and the clause rules as column predicates.
+
+        A unit is all flat term clauses of one occur (each term one clause;
+        their scores add straight into the top-level double sum), a
+        one-level term group (:meth:`_term_group`, float32-rounded at its
+        boundary) or any other clause's evaluated frame.  The top level sums
+        in double and casts once — bit-identical to evaluating each clause
+        separately.  FILTERs are cached doc-set semi-joins; beside optional
+        SHOULD clauses (no MUST, mm 0) the filter docs join as a zero-score
+        unit, since FILTER is required and SHOULD stays optional
+        (ReqOptSumScorer scores a filter-only doc 0).  ``blocks`` (the θ
+        pre-pass survivors, see :meth:`search`) replaces the full postings
+        scan; nothing else differs."""
+        must, filters = q.by_occur("MUST"), q.by_occur("FILTER")
         mm = q.minimum_should_match
         if not must and not filters:
             mm = max(1, mm)
-        if not must and not should and not filters:
-            return self._empty()  # pure MUST_NOT matches nothing
-        filter_ids = [self.cached_filter(sub) for sub in filters]
-        # FILTER is a required clause, so beside it SHOULD stays optional
-        # (ReqOptSumScorer): a doc matching the filters alone scores 0
         filter_base = bool(filters) and not must and mm <= 0
+        if not (must or q.by_occur("SHOULD") or filter_base):
+            return self._empty()  # pure MUST_NOT, or FILTERs with mm > 0 and no SHOULD
+        filter_ids = [self.cached_filter(sub) for sub in filters]
+        units, rules = [], []  # rules[i] = (occur, need, rounded); rounded None: flat terms
+        for occur in ("MUST", "SHOULD", "MUST_NOT"):
+            b = boost if occur != "MUST_NOT" else 1.0
+            flat = []
+            for sub in q.by_occur(occur):
+                ft = self._flat_term(sub, b)
+                group = None if ft else self._term_group(sub, b)
+                if ft:
+                    flat.append(ft)
+                elif group:
+                    units.append(group[0])
+                    rules.append((occur, group[1], True))
+                else:
+                    units.append(self._evaluate(sub, b, stats))
+                    rules.append((occur, 1, False))
+            if flat:
+                units.append(flat)
+                rules.append((occur, len(flat) if occur == "MUST" else 1, None))
+        if filter_base:
+            units.append(filter_ids[0].select("doc_id", F.lit(0.0).cast("float").alias("score")))
+            rules.append(("FILTER", 1, False))
+        agg = self._clause_rows(units, stats, blocks).groupBy("doc_id").agg(*self._unit_sums(range(len(units))))
 
-        out = None
-        if (must or should) and not filter_base:
-            out = self._eval_boolean_single_scan(must, should, must_not, mm, boost, stats, blocks)
-        if out is None:
-            parts = []
-            for sub in must:
-                parts.append(self._evaluate(sub, boost, stats).select("doc_id", "score", F.lit(1).alias("is_must"), F.lit(0).alias("is_should")))
-            for sub in should:
-                parts.append(self._evaluate(sub, boost, stats).select("doc_id", "score", F.lit(0).alias("is_must"), F.lit(1).alias("is_should")))
-            if filter_base:
-                parts.append(filter_ids[0].select(
-                    "doc_id", F.lit(0.0).cast("float").alias("score"), F.lit(0).alias("is_must"), F.lit(0).alias("is_should")
-                ))
-            if not parts:
-                return self._empty()  # FILTER-only with mm > 0: no SHOULD can meet it
-            u = parts[0]
-            for p in parts[1:]:
-                u = u.unionByName(p)
-            agg = u.groupBy("doc_id").agg(
-                F.sum(F.col("score").cast("double")).alias("dscore"),
-                F.sum("is_must").alias("nm"),
-                F.sum("is_should").alias("ns"),
-            )
-            cond = F.col("nm") == len(must)
-            if mm > 0:
-                cond = cond & (F.col("ns") >= mm)
-            out = agg.filter(cond).select("doc_id", F.col("dscore").cast("float").alias("score"))
-            for sub in must_not:
-                out = out.join(self._evaluate(sub, 1.0, stats).select("doc_id").distinct(), "doc_id", "left_anti")
+        cond, ns, score = F.lit(True), F.lit(0), F.lit(0.0)
+        for i, (occur, need, rounded) in enumerate(rules):
+            n, s = F.col(f"n{i}"), F.col(f"s{i}")
+            hit = n >= need
+            if occur == "MUST":
+                cond = cond & hit
+            elif occur == "MUST_NOT":
+                cond = cond & ~hit
+            elif occur == "SHOULD":
+                # each matching flat SHOULD term is one matched clause
+                ns = ns + (n if rounded is None else F.when(hit, 1).otherwise(0))
+            if occur in ("MUST", "SHOULD"):
+                # group boundary: float32 round of the group's double sum
+                score = score + F.when(hit, s.cast("float").cast("double") if rounded else s).otherwise(0.0)
+        if mm > 0:
+            cond = cond & (ns >= mm)
+        out = agg.filter(cond).select("doc_id", score.cast("float").alias("score"))
         for ids in filter_ids:
             out = out.join(ids, "doc_id", "left_semi")
         return out
@@ -1385,27 +1373,40 @@ class IndexSearcher:
             "doc_id", (F.col("m") + F.lit(tie) * (F.col("s") - F.col("m"))).cast("float").alias("score")
         )
 
+    def _disjunct_scores(self, subs, boost: float, stats: dict) -> DataFrame:
+        """``(doc_id, m, s, n)``: the max, double sum and count of a doc's
+        matching clause scores (the DisjunctionMax and Covering scorers)
+        from ONE :meth:`_clause_rows` read and one groupBy(doc_id).  A term
+        or frame clause holds at most one row per doc; a one-level term
+        group (:meth:`_term_group`) gets its own sum and count and joins as
+        its float32-rounded score where it matches."""
+        units, groups = [], {}  # groups: unit -> leaves needed
+        for i, sub in enumerate(subs):
+            ft = self._flat_term(sub, boost)
+            group = None if ft else self._term_group(sub, boost)
+            if ft:
+                units.append([ft])
+            elif group:
+                units.append(group[0])
+                groups[i] = group[1]
+            else:
+                units.append(self._evaluate(sub, boost, stats))
+        single = F.when(~F.col("c").isin(list(groups)), F.col("score").cast("double"))
+        agg = self._clause_rows(units, stats).groupBy("doc_id").agg(
+            F.max(single).alias("m"), F.sum(single).alias("s"), F.count(single).alias("n"),
+            *self._unit_sums(groups),
+        )
+        m, s, n = F.col("m"), F.coalesce(F.col("s"), F.lit(0.0)), F.col("n")
+        for i, need in groups.items():
+            v = F.when(F.col(f"n{i}") >= need, F.col(f"s{i}").cast("float").cast("double"))
+            m, s, n = F.greatest(m, v), s + F.coalesce(v, F.lit(0.0)), n + v.isNotNull().cast("int")
+        return agg.select("doc_id", m.alias("m"), s.alias("s"), n.alias("n")).filter(F.col("n") > 0)
+
     def _eval_dismax(self, q: DisjunctionMaxQuery, boost: float, stats: dict) -> DataFrame:
         if not q.disjuncts:
             return self._empty()
         tie = float(q.tie_breaker)
-        # single-scan fast path for all-term disjuncts (same plan rationale
-        # as _eval_boolean_single_scan)
-        leaves = [self._flat_term(d, boost) for d in q.disjuncts]
-        if all(l is not None for l in leaves) and len({t for t, _ in leaves}) == len(leaves):
-            weights = {t: self._leaf_w(b, t, stats) for t, b in leaves if t in stats}
-            if not weights:
-                return self._empty()
-            u = self._scored_postings(weights).select("doc_id", "score")
-        else:
-            parts = [self._evaluate(d, boost, stats).select("doc_id", "score") for d in q.disjuncts]
-            u = parts[0]
-            for p in parts[1:]:
-                u = u.unionByName(p)
-        agg = u.groupBy("doc_id").agg(
-            F.max(F.col("score").cast("double")).alias("m"), F.sum(F.col("score").cast("double")).alias("s")
-        )
-        return agg.select(
+        return self._disjunct_scores(q.disjuncts, boost, stats).select(
             "doc_id", (F.col("m") + F.lit(tie) * (F.col("s") - F.col("m"))).cast("float").alias("score")
         )
 
@@ -1560,31 +1561,15 @@ class IndexSearcher:
             raise ValueError("too many clauses")
         if self.corpus is None:
             raise ValueError("CoveringQuery requires a searcher bound to a corpus")
-        # single-scan fast path for all-term clauses (same plan rationale as
-        # _eval_boolean_single_scan: one postings scan, one shuffle)
-        leaves = [self._flat_term(sub, boost) for sub in q.queries]
-        if all(l is not None for l in leaves) and len({t for t, _ in leaves}) == len(leaves):
-            weights = {t: self._leaf_w(b, t, stats) for t, b in leaves if t in stats}
-            if not weights:
-                return self._empty()
-            u = self._scored_postings(weights).select("doc_id", "score")
-        else:
-            parts = [self._evaluate(sub, boost, stats).select("doc_id", "score") for sub in q.queries]
-            u = parts[0]
-            for p in parts[1:]:
-                u = u.unionByName(p)
-        agg = u.groupBy("doc_id").agg(
-            F.sum(F.col("score").cast("double")).alias("dscore"),
-            F.count(F.lit(1)).alias("n_match"),
-        )
+        agg = self._disjunct_scores(q.queries, boost, stats)
         mm = self.corpus.select(
             F.col(self.index.config.id_col).cast("long").alias("doc_id"),
             F.expr(q.min_match_expr).cast("long").alias("mm"),
         ).filter(F.col("mm").isNotNull())
         return (
             agg.join(mm, "doc_id")
-            .filter(F.col("n_match") >= F.greatest(F.lit(1), F.col("mm")))
-            .select("doc_id", F.col("dscore").cast("float").alias("score"))
+            .filter(F.col("n") >= F.greatest(F.lit(1), F.col("mm")))
+            .select("doc_id", F.col("s").cast("float").alias("score"))
         )
 
     # -------------------------------------------------------- pruned paths
@@ -3649,8 +3634,9 @@ class IndexSearcher:
         ``BM25Similarity.java`` explain): a nested
         ``{value, description, details}`` breakdown of the document's score
         under the BM25 similarity family.  Supported for TermQuery and
-        all-term BooleanQuery / DisjunctionMaxQuery shapes; the per-doc
-        posting lookup is one pushed-predicate scan, never a full decode."""
+        all-term BooleanQuery / DisjunctionMaxQuery shapes.  A compound
+        query's match and value come from its own evaluation restricted to
+        the doc, so the breakdown can never disagree with :meth:`search`."""
         self._require_bm25("explain")
         sim = self.similarity
         doc_id = int(doc_id)
@@ -3705,50 +3691,36 @@ class IndexSearcher:
         if isinstance(query, TermQuery):
             return _leaf_expl(query.term, float(query.boost))
         if isinstance(query, BooleanQuery):
-            details, total, must_missing = [], 0.0, False
+            details, reasons = [], []
             for c in query.clauses:
-                sub = c.query
-                b = 1.0
-                while isinstance(sub, BoostQuery):
-                    b *= sub.boost
-                    sub = sub.query
-                if not isinstance(sub, TermQuery):
+                ft = self._flat_term(c.query, 1.0)
+                if ft is None:
                     raise NotImplementedError("explain supports all-term booleans")
-                e = _leaf_expl(sub.term, float(b * sub.boost))
-                matched = bool(e["details"])  # posting exists for this doc
-                if c.occur == "MUST_NOT":
-                    if matched:
-                        return {
-                            "value": 0.0,
-                            "description": f"doc {doc_id} excluded by MUST_NOT '{sub.term}'",
-                            "details": [e],
-                        }
-                    continue
-                if c.occur == "MUST" and not e["details"]:
-                    must_missing = True
-                if c.occur != "FILTER" and e["details"]:
-                    total += np.float64(e["value"])
+                e = _leaf_expl(*ft)
+                if c.occur in ("MUST", "FILTER") and not e["details"]:
+                    reasons.append(f"no match on required clause [{c.occur}] '{ft[0]}'")
+                elif c.occur == "MUST_NOT" and e["details"]:
+                    reasons.append(f"match on prohibited clause [MUST_NOT] '{ft[0]}'")
+                elif c.occur in ("MUST", "SHOULD") and e["details"]:
                     details.append({**e, "description": f"[{c.occur}] " + e["description"]})
-            if must_missing:
-                return {"value": 0.0, "description": f"doc {doc_id} fails a MUST clause", "details": details}
-            return {
-                "value": float(np.float32(total)),
-                "description": f"sum of clause scores for doc {doc_id}:",
-                "details": details,
-            }
-        if isinstance(query, DisjunctionMaxQuery):
-            subs = [self.explain(d, doc_id) for d in query.disjuncts]
-            hit = [s for s in subs if s["details"]]
-            if not hit:
-                return {"value": 0.0, "description": f"no disjunct matches doc {doc_id}", "details": subs}
-            m = max(np.float64(s["value"]) for s in hit)
-            total = float(np.float32(m + query.tie_breaker * (sum(np.float64(s["value"]) for s in hit) - m)))
-            return {
-                "value": total,
-                "description": f"max plus {query.tie_breaker} times others of:",
-                "details": hit,
-            }
-        raise NotImplementedError(type(query).__name__)
+            description = f"sum of clause scores for doc {doc_id}:"
+            miss = "; ".join(reasons) or "too few optional clauses match (minimum_should_match)"
+        elif isinstance(query, DisjunctionMaxQuery):
+            details = [e for e in (self.explain(d, doc_id) for d in query.disjuncts) if e["details"]]
+            description = f"max plus {query.tie_breaker} times others of:"
+            miss = "no disjunct matches"
+        else:
+            raise NotImplementedError(type(query).__name__)
+        # match and value are the search's own (BooleanWeight rules and all);
+        # the leaves above only itemize it
+        hit = (
+            self._evaluate(query, 1.0, self._term_stats(query.terms()))
+            .filter(F.col("doc_id") == doc_id)
+            .collect()
+        )
+        if not hit:
+            return {"value": 0.0, "description": f"doc {doc_id} does not match: {miss}", "details": details}
+        return {"value": float(hit[0]["score"]), "description": description, "details": details}
 
     def explain_rows(self, query: Query, doc_ids: list[int]) -> DataFrame:
         """Vectorized :meth:`explain` for a doc SET: flattens the per-clause

@@ -115,8 +115,9 @@ def test_covering_per_doc_minimum(searcher, oracle, fixture_corpus_pdf):
 
 
 def test_covering_slow_path_with_group_clause(searcher, oracle):
-    """A non-term clause (boolean group) forces the general union path;
-    results must agree with per-clause oracle evaluation."""
+    """A boolean group clause joins the covering scan as its own clause unit
+    (float32-rounded group score, one match); results must agree with
+    per-clause oracle evaluation."""
     hot, rare = _hot_and_rare(oracle)
     grp = BooleanQuery.build(should=[TermQuery(hot[1]), TermQuery(rare)])
     q = CoveringQuery((TermQuery(hot[0]), grp), "1")

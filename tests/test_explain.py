@@ -52,6 +52,28 @@ def test_explain_must_not_exclusion(searcher):
     assert e["value"] == 0.0 and "MUST_NOT" in e["description"]
 
 
+def test_explain_follows_filter_and_min_should_match(searcher):
+    """explain() takes a boolean's match from the search itself: a doc that
+    misses a FILTER, or holds fewer SHOULD terms than minimum_should_match,
+    explains as 0 — it is not among the search's hits either."""
+    rows = searcher.index.terms.orderBy(F.desc("df"), F.asc("term")).limit(3).collect()
+    a, b, c = (r["term"] for r in rows)
+    only_a = BooleanQuery.build(must=[TermQuery(a)], must_not=[TermQuery(b), TermQuery(c)])
+    doc = searcher.search(only_a, 1).collect()[0][0]
+    filtered = BooleanQuery.build(must=[TermQuery(a)], filter=[TermQuery(b)])
+    two_of_three = BooleanQuery.build(
+        should=[TermQuery(a), TermQuery(b), TermQuery(c)], minimum_should_match=2
+    )
+    for q in (filtered, two_of_three):
+        hits = dict(searcher.search(q, 100000).collect())
+        assert doc not in hits
+        e = searcher.explain(q, doc)
+        assert e["value"] == 0.0 and "does not match" in e["description"], e
+        top, score = next(iter(hits.items()))
+        assert searcher.explain(q, top)["value"] == score
+    assert "[FILTER]" in searcher.explain(filtered, doc)["description"]
+
+
 def test_explain_dismax(searcher):
     h1, h2 = _hot2(searcher)
     q = DisjunctionMaxQuery((TermQuery(h1), TermQuery(h2)), tie_breaker=0.4)

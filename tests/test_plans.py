@@ -81,16 +81,21 @@ def test_covering_single_scan(spark, index8, spark_corpus, tmp_path_factory):
     """All-term CoveringQuery: one postings decode + the tiny mm join."""
     from lucene_solr_spark.operators.indexer import InvertedIndex
     from lucene_solr_spark.operators.searcher import IndexSearcher
-    from lucene_solr_spark.plans.query import CoveringQuery
+    from lucene_solr_spark.plans.query import BooleanQuery, CoveringQuery
 
     path = str(tmp_path_factory.mktemp("cv_index"))
     index8.write(path)
     s = IndexSearcher(InvertedIndex.read(spark, path, index8.config), spark_corpus)
     cq = CoveringQuery((TermQuery("the"), TermQuery("of")), "1")
-    plan = _plan(s._evaluate(cq, 1.0, s._term_stats(cq.terms())))
-    # exactly one postings decode; the corpus-side add_ids MapInPandas (the
-    # fixture's doc-id assignment) is not a postings scan
-    assert plan.count("MapInPandas fn(term") == 1, plan
+    # a group clause joins the same decode (its leaves are clause units)
+    grouped = CoveringQuery(
+        (BooleanQuery.build(should=[TermQuery("the"), TermQuery("qeli")]), TermQuery("of")), "1"
+    )
+    for q in (cq, grouped):
+        plan = _plan(s._evaluate(q, 1.0, s._term_stats(q.terms())))
+        # exactly one postings decode; the corpus-side add_ids MapInPandas
+        # (the fixture's doc-id assignment) is not a postings scan
+        assert plan.count("MapInPandas fn(term") == 1, plan
 
 
 def test_boolean_and_dismax_single_scan(spark, index8, tmp_path_factory):
@@ -100,7 +105,7 @@ def test_boolean_and_dismax_single_scan(spark, index8, tmp_path_factory):
     scale.  Asserted on a committed index so the plan shows real scans."""
     from lucene_solr_spark.operators.indexer import InvertedIndex
     from lucene_solr_spark.operators.searcher import IndexSearcher
-    from lucene_solr_spark.plans.query import BooleanQuery, DisjunctionMaxQuery
+    from lucene_solr_spark.plans.query import BooleanQuery, DisjunctionMaxQuery, MatchAllQuery
 
     path = str(tmp_path_factory.mktemp("ss_index"))
     index8.write(path)
@@ -130,6 +135,20 @@ def test_boolean_and_dismax_single_scan(spark, index8, tmp_path_factory):
     plan = _plan(s._evaluate(nested, 1.0, s._term_stats(nested.terms())))
     assert plan.count("MapInPandas") == 1, plan
     assert plan.count("Scan parquet") == 1, plan
+
+    # mixed shapes read every term leaf in that same one decode: a clause
+    # with no postings, a repeated term, a group inside a dismax
+    mixed = (
+        BooleanQuery.build(must=[TermQuery("the"), TermQuery("and")], should=[MatchAllQuery()]),
+        BooleanQuery.build(must=[TermQuery("the")], should=[TermQuery("the"), TermQuery("of")]),
+        DisjunctionMaxQuery(
+            (BooleanQuery.build(should=[TermQuery("the"), TermQuery("qeli")]), TermQuery("of")),
+            tie_breaker=0.5,
+        ),
+    )
+    for q in mixed:
+        plan = _plan(s._evaluate(q, 1.0, s._term_stats(q.terms())))
+        assert plan.count("MapInPandas fn(term") == 1, plan
 
 
 

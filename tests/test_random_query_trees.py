@@ -4,7 +4,7 @@ optimized-vs-naive diffing).
 
 Hypothesis generates arbitrary boolean/dismax/synonym/boost trees over the
 fixture vocabulary (including absent terms, duplicate clauses, nested groups,
-minShouldMatch edge cases); the distributed engine with pruning ON must match
+FILTER clauses, MUST_NOT subtrees, minShouldMatch edge cases); the distributed engine with pruning ON must match
 the scalar oracle on doc ids AND float32 scores for every tree."""
 
 import pytest
@@ -41,16 +41,17 @@ def _tree(vocab, depth=2):
         return base
     sub = _tree(vocab, depth - 1)
 
-    def mk_bool(must, should, must_not, mm):
+    def mk_bool(must, should, must_not, filter_, mm):
         return BooleanQuery.build(
-            must=must, should=should, must_not=must_not, minimum_should_match=mm
+            must=must, should=should, must_not=must_not, filter=filter_, minimum_should_match=mm
         )
 
     boolean = st.builds(
         mk_bool,
         st.lists(sub, max_size=2),
         st.lists(sub, max_size=3),
-        st.lists(leaf, max_size=1),
+        st.lists(sub, max_size=1),
+        st.lists(sub, max_size=1),
         st.integers(min_value=0, max_value=3),
     )
     dismax = st.builds(
@@ -81,6 +82,19 @@ def test_random_tree_matches_oracle(data, searcher, oracle, vocab):
     expect = oracle.search(q, 10)
     got = searcher.search(q, 10, prune=True).collect()
     assert [(d, s) for d, s in expect] == got, q
+
+
+def test_must_group_with_mm_matches_nothing(searcher, oracle, vocab):
+    """A one-level group of MUST terms with minimum_should_match > 0 has no
+    optional clause that could meet mm, so it matches nothing (Lucene's
+    BooleanWeight, OracleEngine) — alone as a SHOULD clause and beside a
+    MUST term, where it must add no score."""
+    inner = BooleanQuery.build(must=[TermQuery(vocab[0])], minimum_should_match=1)
+    alone = BooleanQuery.build(should=[inner])
+    beside = BooleanQuery.build(must=[TermQuery(vocab[1])], should=[inner])
+    assert oracle.search(alone, 10) == []
+    for q in (alone, beside):
+        assert searcher.search(q, 10).collect() == [(d, s) for d, s in oracle.search(q, 10)], q
 
 
 @pytest.fixture(scope="module")
