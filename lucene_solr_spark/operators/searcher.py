@@ -36,6 +36,12 @@ A pruned block provably contains no top-k doc: any doc in it has total score
 < θ while every true top-k doc scores >= θ with all its blocks intact — so
 results are identical to the exhaustive path (tested).
 
+Below the pruning gate, a flat term query whose postings fit a fixed budget
+skips the distributed plan altogether: one job pulls its blocks and the
+driver scores and ranks them with numpy (``_flat_group_scores``, the same
+clause rules θ is estimated with), since at that size the job, the Python
+hop and the exchange cost far more than the engine work.
+
 Float semantics for rank-identity: leaf scores are float32
 (BM25Similarity.java:222-226), clause sums accumulate in double and cast back
 to float32, ties break (score desc, doc_id asc) (HitQueue.java:76-80).
@@ -44,13 +50,16 @@ to float32, ties break (score desc, doc_id asc) (HitQueue.java:76-80).
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions import bm25
 from ..functions.codec import unpack_blocks
@@ -95,6 +104,14 @@ MAX_CLAUSE_COUNT = 1024  # BooleanQuery.maxClauseCount analog
 # saves (one extra Spark job vs ~ms of bulk decode); at 10^12-turn scale hot
 # terms are far above it and pruning engages exactly where it matters
 _MIN_PRUNE_POSTINGS = 200_000
+# a flat term query below the pre-pass gate whose postings fit this budget
+# is answered on the driver from ONE pull of its blocks (~1-2 MB unpacked):
+# no scoring job, Python hop or exchange
+_DRIVER_MAX_POSTINGS = 1 << 16
+# k + exclusions + pending deletes past this cap: the θ sample would cost
+# more than it saves and the deleted ids stay off the driver, so neither
+# the pre-pass nor the driver path runs
+_MAX_PRUNE_K = 256
 from .indexer import InvertedIndex
 
 _SCORED_SCHEMA = "term string, doc_id bigint, tf int, norm int, score float"
@@ -107,6 +124,50 @@ _OCC_CODE = {"MUST": 0, "SHOULD": 1, "FILTER": 2, "MUST_NOT": 3}
 # the block columns the unpack kernel reads; selecting them first keeps the
 # positions and payloads binaries off the Arrow hop
 _BLOCK_COLS = ("term", "run_id", "block_id", "doc_id_base", "count", "doc_ids", "tfs", "norms")
+
+
+def _unpack_postings(pdf: pd.DataFrame, codec: str) -> tuple:
+    """``(term, doc_id, tf, norm)`` arrays of every posting in the block rows
+    ``pdf`` — two numpy varint decodes per batch (ForUtil bulk-decode
+    analog), no per-row Python."""
+    counts = pdf["count"].to_numpy(dtype=np.int64)
+    doc_ids, tfs, norms, _ = unpack_blocks(
+        pdf["doc_id_base"].to_numpy(dtype=np.int64),
+        counts,
+        list(pdf["doc_ids"]),
+        list(pdf["tfs"]),
+        list(pdf["norms"]),
+        codec=codec,
+    )
+    return np.repeat(pdf["term"].to_numpy(dtype=object), counts), doc_ids, tfs, norms
+
+
+def _flat_group_scores(hits: list, n_req: int, mm: int) -> tuple:
+    """The flat clause-group rules of :meth:`IndexSearcher._eval_boolean`
+    in numpy: ``hits`` holds one ``(occur code, doc_ids, scores)`` per
+    clause leaf, so a repeated term counts once per clause (FILTER and
+    MUST_NOT leaves carry zero scores).  A doc matches when it holds all
+    ``n_req`` MUST/FILTER leaves, no MUST_NOT leaf and, for ``mm > 0``,
+    at least ``mm`` SHOULD leaves; a FILTER-only match beside optional
+    SHOULD clauses scores 0.  Returns the matching ``(doc_ids, double
+    sums)``; the caller casts the sums to float32 once.
+
+    Both the driver top-k of :meth:`IndexSearcher.search` and the θ
+    estimate of :meth:`IndexSearcher._batch_pruned_postings` (over the
+    sampled blocks) evaluate through it."""
+    if not hits:
+        return np.empty(0, dtype=np.int64), np.empty(0)
+    docs, inv = np.unique(np.concatenate([d for _, d, _ in hits]), return_inverse=True)
+    occ = np.concatenate([np.full(len(d), o) for o, d, _ in hits])
+
+    def per_doc(weights):
+        return np.bincount(inv, weights=weights, minlength=len(docs))
+
+    M, S, FL, MN = (_OCC_CODE[o] for o in ("MUST", "SHOULD", "FILTER", "MUST_NOT"))
+    ok = (per_doc((occ == M) | (occ == FL)) == n_req) & (per_doc(occ == MN) == 0)
+    if mm > 0:
+        ok &= per_doc(occ == S) >= mm
+    return docs[ok], per_doc(np.concatenate([s for _, _, s in hits]))[ok]
 
 
 def _make_unpack_score(params, sim, codec: str = "varint"):
@@ -123,22 +184,15 @@ def _make_unpack_score(params, sim, codec: str = "varint"):
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            counts = pdf["count"].to_numpy(dtype=np.int64)
-            doc_ids, tfs, norms, _ = unpack_blocks(
-                pdf["doc_id_base"].to_numpy(dtype=np.int64),
-                counts,
-                list(pdf["doc_ids"]),
-                list(pdf["tfs"]),
-                list(pdf["norms"]),
-                codec=codec,
-            )
+            terms, doc_ids, tfs, norms = _unpack_postings(pdf, codec)
             if isinstance(params, dict):
+                counts = pdf["count"].to_numpy(dtype=np.int64)
                 ws = [np.repeat(pdf["term"].map(m).to_numpy(dtype=np.float64), counts) for m in slot_maps]
             else:
                 ws = [np.full(len(doc_ids), p, dtype=np.float64) for p in params]
             yield pd.DataFrame(
                 {
-                    "term": np.repeat(pdf["term"].to_numpy(dtype=object), counts),
+                    "term": terms,
                     "doc_id": doc_ids,
                     "tf": tfs.astype(np.int32),
                     "norm": norms.astype(np.int32),
@@ -213,22 +267,52 @@ class IndexSearcher:
         # span-query positional-occurrence persists, released on the next
         # search() (see _persist_span_occ) so they can't accumulate forever
         self._span_occ_persists: list = []
-        # pending-deletes count, cached per deletes DataFrame identity (used
-        # to keep the θ pre-pass sound while deletes are unexpunged)
+        # pending deletes (count, ids up to the cap), cached per deletes
+        # DataFrame identity (they keep the θ pre-pass sound and are dropped
+        # on the driver path while deletes are unexpunged)
         self._del_count_cache: Optional[tuple] = None
 
-    def _deletes_count(self) -> int:
-        """Number of pending deleted doc_ids (0 when none).  Cached per
-        deletes-DataFrame identity — delete_by_query reassigns the frame, so
-        identity is a correct invalidation key."""
+    def _pending_deletes(self) -> tuple:
+        """``(count, doc_ids)`` of the pending deletes; the ids are collected
+        only up to ``_MAX_PRUNE_K``, past which no pruned or driver path
+        runs.  One job per deletes frame, cached by its identity —
+        delete_by_query reassigns the frame, so identity is a correct
+        invalidation key."""
         d = self.index.deletes
         if d is None:
-            return 0
-        if self._del_count_cache is not None and self._del_count_cache[0] == id(d):
-            return self._del_count_cache[1]
-        n = int(d.count())
-        self._del_count_cache = (id(d), n)
-        return n
+            return 0, ()
+        if self._del_count_cache is None or self._del_count_cache[0] is not d:
+            ids = [r[0] for r in d.select("doc_id").limit(_MAX_PRUNE_K + 1).collect()]
+            n = len(ids) if len(ids) <= _MAX_PRUNE_K else int(d.count())
+            self._del_count_cache = (d, (n, ids))
+        return self._del_count_cache[1]
+
+    def _deletes_count(self) -> int:
+        """Number of pending deleted doc_ids (0 when none)."""
+        return self._pending_deletes()[0]
+
+    @contextmanager
+    def _job_description(self, text: str):
+        """Label the Spark jobs run inside (``setJobDescription``), then
+        restore the caller's label."""
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(text)
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
+
+    def _local_frame(self, rows: list, schema: str) -> DataFrame:
+        """A small driver-built frame that plans as a ``LocalTableScan`` and
+        costs no Spark job: the rows travel as one Arrow table (a list
+        ``createDataFrame`` plans as ``Scan ExistingRDD`` and runs a job at
+        every collect).  None stays NULL."""
+        struct = T.DataType.fromDDL(schema)
+        table = pa.Table.from_pylist(
+            [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+        )
+        return self.spark.createDataFrame(table, struct)
 
     def _persist_span_occ(self, occ: DataFrame) -> DataFrame:
         """Persist a positional-occurrence scan shared by several span
@@ -350,14 +434,14 @@ class IndexSearcher:
 
     # ------------------------------------------------------------ leaf plans
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id bigint, score float")
+        return self._local_frame([], "doc_id bigint, score float")
 
     def _scored_postings(self, params, blocks: Optional[DataFrame] = None, sim=None) -> DataFrame:
         """(term, doc_id, tf, norm, score) for all terms in `params` (see
         :func:`_make_unpack_score`) under `sim` (default: the searcher's),
         read from `blocks` when given."""
         if not params:
-            return self.spark.createDataFrame([], _SCORED_SCHEMA)
+            return self._local_frame([], _SCORED_SCHEMA)
         if blocks is None:
             blocks = self._postings_for(list(params))
         return blocks.select(*_BLOCK_COLS).mapInPandas(
@@ -1252,7 +1336,7 @@ class IndexSearcher:
                 )
             )
         if not parts:
-            return self.spark.createDataFrame([], "doc_id bigint, score float, c int")
+            return self._local_frame([], "doc_id bigint, score float, c int")
         out = parts[0]
         for part in parts[1:]:
             out = out.unionByName(part)
@@ -1605,15 +1689,7 @@ class IndexSearcher:
         if sample_pdf.empty:
             return None
         max_ub = sample_pdf.groupby("term")["ub"].max().to_dict()
-        doc_ids, tfs, norms, _ = unpack_blocks(
-            sample_pdf["doc_id_base"].to_numpy(dtype=np.int64),
-            sample_pdf["count"].to_numpy(dtype=np.int64),
-            list(sample_pdf["doc_ids"]),
-            list(sample_pdf["tfs"]),
-            list(sample_pdf["norms"]),
-            codec=self.index.config.codec,
-        )
-        terms_post = np.repeat(sample_pdf["term"].to_numpy(dtype=object), sample_pdf["count"].to_numpy())
+        terms_post, doc_ids, tfs, norms = _unpack_postings(sample_pdf, self.index.config.codec)
         sample = pd.DataFrame({"term": terms_post, "doc_id": doc_ids, "score": score_terms(terms_post, tfs, norms)})
         return with_ub, max_ub, sample
 
@@ -1630,16 +1706,14 @@ class IndexSearcher:
         ).first()
         return {name: int(row[name] or 0) for name in row.asDict()}
 
-    def _single_clause_group(self, query: Query, stats: dict) -> Optional[tuple]:
-        """One query as a one-group clause table for the shared θ pre-pass
+    def _single_clause_group(self, flat: tuple, stats: dict) -> tuple:
+        """One flat term query (:meth:`_flat_clauses` ``flat``) as a
+        one-group clause table for the shared θ pre-pass
         (:meth:`_batch_pruned_postings`): ``(clause_rows, meta_rows,
         params)`` with the query's own leaf params and clause scale 1, so
-        single-search pruning holds for every (monotone) similarity.  None
-        when the query is not flat terms; a repeated term (one param set per
-        term) yields no rows, i.e. no pruning."""
-        flat = self._flat_clauses(query)
-        if flat is None:
-            return None
+        single-search pruning holds for every (monotone) similarity.  A
+        repeated term (one param set per term) yields no rows, i.e. no
+        pruning."""
         leaves, n_req, mm = flat
         present = [(o, t, b) for o, t, b in leaves if t in stats]
         if len({t for _, t, _ in leaves}) < len(leaves):
@@ -1676,40 +1750,97 @@ class IndexSearcher:
         (``ImpactsDISI.java:94-126``).  ``pruning_applied=False`` when
         search() scans exhaustively (cost gate, delete cap, or a query no
         θ can cut)."""
-        stats = self._term_stats(query.terms())
-        group = self._single_clause_group(query, stats)
-        if group is None:
+        flat = self._flat_clauses(query)
+        if flat is None:
             raise ValueError("prune metrics apply to a term or a flat boolean of terms")
-        rows, meta, params = group
+        stats = self._term_stats(query.terms())
+        rows, meta, params = self._single_clause_group(flat, stats)
         return self._prune_report(rows, meta, stats, k, params)[0]
+
+    def _driver_top_k(self, flat: tuple, stats: dict, k: int, exclude) -> Optional[DataFrame]:
+        """The exact top-k of a small flat term query (:meth:`_flat_clauses`
+        ``flat``), evaluated on the driver: ONE job pulls the terms' block
+        rows, numpy unpacks them, scores each leaf under its own params
+        (every similarity) and applies :func:`_flat_group_scores`;
+        exclusions and pending deletes are dropped here.  The ≤k-row answer
+        is a :meth:`_local_frame`, so ``fetch``/``highlight``/``rescore``
+        work unchanged.  None — run the distributed plan — when the θ
+        pre-pass applies (Σdf at the cost gate), Σdf exceeds
+        ``_DRIVER_MAX_POSTINGS`` (driver memory stays bounded by the
+        budget, never by the corpus), or k + exclusions + pending deletes
+        exceeds ``_MAX_PRUNE_K``."""
+        leaves, n_req, mm = flat
+        terms = sorted({t for _, t, _ in leaves if t in stats})
+        n_post = sum(stats[t][0] for t in terms)
+        if n_post >= self.prune_min_postings or n_post > _DRIVER_MAX_POSTINGS:
+            return None
+        n_deleted, deleted = self._pending_deletes()
+        if k + len(exclude) + n_deleted > _MAX_PRUNE_K:
+            return None
+        if not self._may_match(flat, stats):
+            return self._empty()
+        with self._job_description("search: driver postings pull"):
+            pdf = self._postings_for(terms).select(*_BLOCK_COLS).toPandas()
+        post_terms, doc_ids, tfs, norms = _unpack_postings(pdf, self.index.config.codec)
+        hits = []
+        for occ, t, b in leaves:
+            if t not in stats:
+                continue
+            on = post_terms == t
+            tf, norm = tfs[on], norms[on]
+            scores = np.zeros(len(tf))
+            if occ in ("MUST", "SHOULD"):
+                ws = [np.full(len(tf), p, dtype=np.float64) for p in self._leaf_w(b, t, stats)]
+                scores = self.similarity.score(*ws, tf, norm)
+            hits.append((_OCC_CODE[occ], doc_ids[on], scores))
+        docs, sums = _flat_group_scores(hits, n_req, mm)
+        scores = sums.astype(np.float32)
+        live = ~np.isin(docs, [int(d) for d in exclude] + list(deleted))
+        docs, scores = docs[live], scores[live]
+        top = np.lexsort((docs, -scores))[:k]
+        return self._local_frame(
+            list(zip(docs[top].tolist(), scores[top].tolist())), "doc_id bigint, score float"
+        )
 
     # --------------------------------------------------------------- search
     def search(self, query: Query, k: int = 10, prune: bool = True, exclude_doc_ids=()) -> TopDocs:
-        """Top-k search; identical results with prune on or off (tested).
+        """Top-k search; identical results on every path (tested).
 
-        With ``prune``, a term or flat term boolean first runs the shared θ
-        pre-pass; the exclusions bound k like pending deletes do (an
-        excluded doc sampled into θ could otherwise hold a top-k slot), and
-        the surviving blocks feed the same single-scan evaluator."""
+        With ``prune``, a term or flat term boolean takes the first path
+        that applies, in this order:
+
+        1. the θ pre-pass, when its postings reach the cost gate
+           ``prune_min_postings``: the surviving blocks feed the same
+           single-scan evaluator; the exclusions bound k like pending
+           deletes do (an excluded doc sampled into θ could otherwise hold
+           a top-k slot);
+        2. the driver path (:meth:`_driver_top_k`), when its postings fit
+           ``_DRIVER_MAX_POSTINGS``: one pull of the blocks, numpy scoring,
+           no scoring job or exchange;
+        3. the distributed evaluator — every other query, and every query
+           with ``prune=False`` (the reference arm)."""
         # release positional-occurrence caches persisted by earlier span
         # queries (bounded memory per searcher; see _persist_span_occ)
         self.release_span_caches()
         query = self._rewrite_span_multiterm(query)
-        stats = self._term_stats(query.terms())
-        group = self._single_clause_group(query, stats) if prune else None
-        blocks = None
-        if group is not None:
-            rows, meta, params = group
-            blocks, _ = self._batch_pruned_postings(rows, meta, stats, k + len(exclude_doc_ids), params)
-        if blocks is None:
-            scored = self._evaluate(query, 1.0, stats)
-        else:
-            scored = self._eval_boolean(*self._as_boolean(query), stats, blocks)
-        if exclude_doc_ids:
-            scored = scored.filter(~F.col("doc_id").isin([int(d) for d in exclude_doc_ids]))
-        if self.index.deletes is not None:
-            scored = scored.join(self.index.deletes.select("doc_id"), "doc_id", "left_anti")
-        ranked = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        with self._job_description("search: term stats"):
+            stats = self._term_stats(query.terms())
+        flat = self._flat_clauses(query) if prune else None
+        ranked = None if flat is None else self._driver_top_k(flat, stats, k, exclude_doc_ids)
+        if ranked is None:
+            blocks = None
+            if flat is not None:
+                rows, meta, params = self._single_clause_group(flat, stats)
+                blocks, _ = self._batch_pruned_postings(rows, meta, stats, k + len(exclude_doc_ids), params)
+            if blocks is None:
+                scored = self._evaluate(query, 1.0, stats)
+            else:
+                scored = self._eval_boolean(*self._as_boolean(query), stats, blocks)
+            if exclude_doc_ids:
+                scored = scored.filter(~F.col("doc_id").isin([int(d) for d in exclude_doc_ids]))
+            if self.index.deletes is not None:
+                scored = scored.join(self.index.deletes.select("doc_id"), "doc_id", "left_anti")
+            ranked = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         return TopDocs(df=ranked, k=k)
 
     def delete_by_query(self, query: Query) -> None:
@@ -2972,7 +3103,7 @@ class IndexSearcher:
         # k by the delete count; past the cap the sample would cost more
         # than it saves — run exhaustive until expunge reclaims them
         k = k + self._deletes_count()
-        if k > 256:
+        if k > _MAX_PRUNE_K:
             return None, {}
 
         by_q: dict = defaultdict(list)
@@ -2981,18 +3112,17 @@ class IndexSearcher:
         meta_by_q = {qc: (n_req, mm) for qc, _, n_req, mm in meta_rows}
         M, S = _OCC_CODE["MUST"], _OCC_CODE["SHOULD"]
         FL, MN = _OCC_CODE["FILTER"], _OCC_CODE["MUST_NOT"]
-        proof: dict = {}  # qc -> (scoring clauses, the required term or None)
+        proof: dict = {}  # qc -> its scoring clauses, when they prove a match
         for qc, leaves in by_q.items():
             n_req, mm = meta_by_q[qc]
             if any(o == MN for _, o, _ in leaves):
                 continue
-            scoring = [(t, w) for t, o, w in leaves if o in (M, S) and w > 0]
-            musts = [t for t, o, w in leaves if o == M and w > 0]
-            if n_req == 0 and mm <= 1:
-                proof[qc] = (scoring, None)
-            elif n_req == 1 and mm <= 0 and len(musts) == 1:
-                proof[qc] = (scoring, musts[0])
-        if not any(scoring for scoring, _ in proof.values()):
+            scoring = [(t, o, w) for t, o, w in leaves if o in (M, S) and w > 0]
+            if (n_req == 0 and mm <= 1) or (
+                n_req == 1 and mm <= 0 and sum(o == M for _, o, _ in scoring) == 1
+            ):
+                proof[qc] = scoring
+        if not any(proof.values()):
             return None, {}  # no group can get a finite θ: skip the sample
 
         # phases 1-2: top blocks per term (tiny — block summaries only),
@@ -3006,28 +3136,20 @@ class IndexSearcher:
             for t, g in sample.groupby("term")
         }
 
-        def kth_doc_sum(scoring, req) -> float:
-            """k-th largest sampled per-doc sum over the docs the sample
-            proves match (any scoring clause, or the required term)."""
-            hit = [(by_term[t][0], by_term[t][1] * w) for t, w in scoring if t in by_term]
-            if not hit or (req is not None and req not in by_term):
-                return -math.inf
-            docs, inv = np.unique(np.concatenate([d for d, _ in hit]), return_inverse=True)
-            sums = np.bincount(inv, weights=np.concatenate([v for _, v in hit]))
-            if req is not None:
-                sums = sums[np.isin(docs, by_term[req][0])]
-            if len(sums) < k:
-                return -math.inf
-            return float(np.partition(sums, len(sums) - k)[len(sums) - k])
-
-        # phases 3-4: per-group θ, then per-term thresholds (driver-side
-        # arithmetic over the clause table — no data touched)
+        # phases 3-4: per-group θ — the k-th largest sampled per-doc sum over
+        # the docs the sample proves match, i.e. the group's own rules over
+        # its scoring clauses' sampled rows — then per-term thresholds
+        # (driver-side arithmetic over the clause table — no data touched)
         cand: dict = {}
         blocked: set = set()
         clause_theta: dict = {}  # (qc, term) -> posting-level threshold
         thetas = []
         for qc, leaves in by_q.items():
-            theta_q = kth_doc_sum(*proof.get(qc, ((), None)))
+            hits = [(o, by_term[t][0], by_term[t][1] * w) for t, o, w in proof.get(qc, ()) if t in by_term]
+            _, sums = _flat_group_scores(hits, *meta_by_q[qc])
+            theta_q = -math.inf
+            if 0 < k <= len(sums):
+                theta_q = float(np.partition(sums, len(sums) - k)[len(sums) - k])
             thetas.append(theta_q)
             ubs = [w * umax.get(t, 0.0) if (o in (M, S) and w > 0) else 0.0 for t, o, w in leaves]
             total_ub = sum(ubs)
@@ -3080,7 +3202,7 @@ class IndexSearcher:
         # unpack) while this filter still removes most exchange rows.
         terms_needed = sorted({t for _, t, _, _ in clause_rows})
         scored = self._scored_postings(self._unit_params(terms_needed), blocks).select("term", "score")
-        cl = self.spark.createDataFrame(
+        cl = self._local_frame(
             [(t, clause_theta.get((qc, t))) for qc, t, _occ, _w in clause_rows],
             "term string, theta double",
         )
@@ -3137,6 +3259,17 @@ class IndexSearcher:
                 leaves.append((occur, *ft))
         return leaves, sum(1 for o, _, _ in leaves if o in ("MUST", "FILTER")), int(mm)
 
+    @staticmethod
+    def _may_match(flat: tuple, stats: dict) -> bool:
+        """False when a :meth:`_flat_clauses` query provably matches nothing:
+        a required term is absent, or no MUST/SHOULD/FILTER term is
+        present."""
+        leaves, n_req, _ = flat
+        present_req = sum(1 for o, t, _ in leaves if o in ("MUST", "FILTER") and t in stats)
+        return present_req >= n_req and any(
+            o in ("MUST", "SHOULD", "FILTER") and t in stats for o, t, _ in leaves
+        )
+
     def _batch_clause_table(self, queries: dict) -> tuple:
         """Normalize a batch query dict into the flat clause/meta tables the
         batch plan ships (shared by batch_search and batch_prune_metrics).
@@ -3164,12 +3297,9 @@ class IndexSearcher:
             flat = self._flat_clauses(q)
             if flat is None:
                 raise NotImplementedError(f"batch_search: {type(q).__name__} is not flat terms")
+            if not self._may_match(flat, stats):
+                continue
             leaves, n_req, mm = flat
-            present_req = sum(1 for o, t, _ in leaves if o in ("MUST", "FILTER") and t in stats)
-            if present_req < n_req or not any(
-                o in ("MUST", "SHOULD", "FILTER") and t in stats for o, t, _ in leaves
-            ):
-                continue  # a required term is absent / nothing can match: no hits
             rows = []
             for occur, t, b in leaves:
                 if t not in stats:
@@ -3216,12 +3346,12 @@ class IndexSearcher:
         clause_rows, meta_rows, stats = self._batch_clause_table(queries)
         out_schema = "query_id string, rank int, doc_id long, score float"
         if not clause_rows:
-            return self.spark.createDataFrame([], out_schema)
+            return self._local_frame([], out_schema)
 
-        meta = self.spark.createDataFrame(
+        meta = self._local_frame(
             [(qc, n_req, mm) for qc, _, n_req, mm in meta_rows], "qc int, n_req int, mm int"
         )
-        qid_map = self.spark.createDataFrame(
+        qid_map = self._local_frame(
             [(qc, qid) for qc, qids, _, _ in meta_rows for qid in qids],
             "qc int, query_id string",
         )
@@ -3239,7 +3369,7 @@ class IndexSearcher:
         # _batch_pruned_postings), so it is cut map-side, before the
         # exchange — this is what keeps one conjunction in the batch from
         # forcing every other query to carry a shared term's full postings
-        clauses = self.spark.createDataFrame(
+        clauses = self._local_frame(
             [
                 (qc, t, occ, w, clause_theta.get((qc, t)))
                 for qc, t, occ, w in clause_rows

@@ -138,7 +138,8 @@ def _zipf_texts():
 
 @pytest.fixture(scope="module")
 def zipf_index(spark):
-    """The zipf corpus indexed once for the module; each test binds its own
+    """The zipf corpus indexed once for the module and persisted (searches
+    read the cached index, not a rebuild); each test binds its own
     IndexSearcher (and so its own cost gate) over it."""
     import pandas as pd
     from pyspark.sql import functions as F
@@ -152,7 +153,12 @@ def zipf_index(spark):
         "doc_id",
         F.row_number().over(Window.orderBy("conv_id", "turn_idx")).cast("long") - 1,
     )
-    return build_index(df, IndexConfig(n_partitions=8))
+    idx = build_index(df, IndexConfig(n_partitions=8)).persist()
+    for frame in (idx.postings, idx.docs, idx.terms):
+        frame.count()
+    yield idx
+    for frame in (idx.postings, idx.docs, idx.terms):
+        frame.unpersist()
 
 
 def _zipf_searcher(zipf_index, prune_min_postings):
@@ -362,21 +368,46 @@ def _flat_bool_queries():
     return st.one_of(boolean, st.builds(BoostQuery, boolean, st.just(2.5)))
 
 
-def test_flat_boolean_four_arms(zipf_index, zipf_oracle):
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_flat_boolean_four_arms(spark, zipf_index, zipf_oracle, monkeypatch):
     """Differential check where θ actually cuts: every flat term boolean
     (boosts, FILTER, MUST_NOT, mm 0-3, duplicate and absent terms) must
     give the same doc ids and float32 scores from pruned search (gate 0),
-    exhaustive search, batch_search (one batch of every query checked) and
-    the scalar oracle — and, under LM-Dirichlet, from pruned and
-    exhaustive single search."""
+    exhaustive search, the driver path (default gate; the postings budget
+    lowered so that drawn queries fall on both sides of it), batch_search
+    (one batch of every query checked) and the scalar oracle — with random
+    ``exclude_doc_ids`` on the single searches, and on searchers holding
+    pending deletes below and above the 256 cap — and, under LM-Dirichlet,
+    from pruned, driver and exhaustive single search."""
+    import dataclasses
+
     from hypothesis import HealthCheck, example, given, settings
+    from hypothesis import strategies as st
 
     from lucene_solr_spark.functions.similarities import LMDirichletSimilarity
+    from lucene_solr_spark.operators import searcher as searcher_mod
     from lucene_solr_spark.operators.searcher import IndexSearcher
 
+    # head (df 1,500) + pad (df 1,440) is above the budget; head + mid and
+    # every tail term are below
+    monkeypatch.setattr(searcher_mod, "_DRIVER_MAX_POSTINGS", 2000)
     sp = _zipf_searcher(zipf_index, prune_min_postings=0)
+    sd = IndexSearcher(zipf_index)
     lm = IndexSearcher(zipf_index, prune_min_postings=0, similarity=LMDirichletSimilarity())
+    lmd = IndexSearcher(zipf_index, similarity=LMDirichletSimilarity())
+    # 5 hot-pocket docs (k + 5 <= 256: driver path) and 300 docs (past the
+    # cap: the distributed plan)
+    with_deletes = [
+        (set(ids), IndexSearcher(dataclasses.replace(
+            zipf_index, deletes=spark.createDataFrame([(i,) for i in ids], "doc_id long")
+        )))
+        for ids in (range(0, 60, 12), range(300))
+    ]
     drawn: dict = {}
+    distributed: set = set()  # did the driver-arm query plan a postings decode?
 
     @settings(
         max_examples=6,
@@ -384,21 +415,90 @@ def test_flat_boolean_four_arms(zipf_index, zipf_oracle):
         derandomize=True,
         suppress_health_check=[HealthCheck.too_slow],
     )
-    @given(q=_flat_bool_queries())
+    @given(q=_flat_bool_queries(), ex_ranks=st.lists(st.integers(0, 14), max_size=3))
     # FILTER is required, so SHOULD beside it is optional: filter-only docs
     # match with score 0 (and with mm > 0 a FILTER-only query matches none)
-    @example(q=BooleanQuery.build(should=[TermQuery("tail3")], filter=[TermQuery("mid")]))
-    @example(q=BooleanQuery.build(filter=[TermQuery("tail3")], minimum_should_match=1))
-    def check(q):
-        want = zipf_oracle.search(q, 10)
-        assert sp.search(q, 10, prune=True).collect() == want, q
-        assert sp.search(q, 10, prune=False).collect() == want, q
-        assert lm.search(q, 10, prune=True).collect() == lm.search(q, 10, prune=False).collect(), q
+    @example(q=BooleanQuery.build(should=[TermQuery("tail3")], filter=[TermQuery("mid")]), ex_ranks=[])
+    @example(q=BooleanQuery.build(filter=[TermQuery("tail3")], minimum_should_match=1), ex_ranks=[])
+    # one query on each side of the budget, exclusions in the top 10
+    @example(q=BooleanQuery.build(should=[TermQuery("head"), TermQuery("pad")]), ex_ranks=[0, 3])
+    @example(q=BooleanQuery.build(must=[TermQuery("head")], should=[TermQuery("mid")]), ex_ranks=[1])
+    def check(q, ex_ranks):
+        ranked = zipf_oracle.search(q, 400)
+        ex = sorted({ranked[i][0] for i in ex_ranks if i < len(ranked)})
+
+        def want(dropped):
+            return [r for r in ranked if r[0] not in dropped][:10]
+
+        assert sp.search(q, 10, prune=True, exclude_doc_ids=ex).collect() == want(ex), q
+        assert sp.search(q, 10, prune=False, exclude_doc_ids=ex).collect() == want(ex), q
+        td = sd.search(q, 10, exclude_doc_ids=ex)
+        distributed.add("MapInPandas" in _plan(td.df))
+        assert td.collect() == want(ex), q
+        for ids, s in with_deletes:
+            assert s.search(q, 10).collect() == want(ids), (q, len(ids))
+        lm_want = lm.search(q, 10, prune=False).collect()
+        assert lm.search(q, 10, prune=True).collect() == lm_want, q
+        assert lmd.search(q, 10).collect() == lm_want, q
         drawn[f"q{len(drawn)}"] = q
 
     check()
+    assert distributed == {True, False}  # both sides of the budget were drawn
     got: dict = {}
     for qid, _rank, d, sc in _batch_rows(sp, drawn, 10):
         got.setdefault(qid, []).append((d, sc))
     for qid, q in drawn.items():
         assert got.get(qid, []) == zipf_oracle.search(q, 10), q
+
+
+def _jobs(sc, fn) -> int:
+    """Spark jobs run by ``fn``, counted under a job group with the status
+    tracker."""
+    import uuid
+
+    gid = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_driver_path_budget_and_jobs(spark, zipf_index, monkeypatch):
+    """The driver path's gates and cost.  With the postings budget lowered,
+    a query above it still plans the postings decode and one below it a
+    LocalTableScan; past the 256 cap of k + pending deletes the
+    distributed plan runs again.  A below-budget term search runs at most
+    two Spark jobs (the stats lookup and one postings pull), a query whose
+    required term is absent only the stats job, and the empty frame none.
+    The caller's job description is restored."""
+    import dataclasses
+
+    from lucene_solr_spark.operators import searcher as searcher_mod
+    from lucene_solr_spark.operators.searcher import IndexSearcher
+
+    monkeypatch.setattr(searcher_mod, "_DRIVER_MAX_POSTINGS", 1000)  # head: 1,500; mid: 480
+    s = IndexSearcher(zipf_index)
+    assert "MapInPandas fn(term" in _plan(s.search(TermQuery("head"), 10).df)
+    below = _plan(s.search(TermQuery("mid"), 10).df)
+    assert "LocalTableScan" in below and "MapInPandas" not in below, below
+    for ids, path in ((range(5), "LocalTableScan"), (range(300), "MapInPandas fn(term")):
+        deletes = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+        sdel = IndexSearcher(dataclasses.replace(zipf_index, deletes=deletes))
+        assert path in _plan(sdel.search(TermQuery("mid"), 10).df), len(ids)
+
+    sc = spark.sparkContext
+    assert _jobs(sc, lambda: IndexSearcher(zipf_index).search(TermQuery("mid"), 10).collect()) <= 2
+    absent = BooleanQuery.build(must=[TermQuery("mid"), TermQuery("zzz_not_in_index")])
+    s_abs = IndexSearcher(zipf_index)
+    assert _jobs(sc, lambda: s_abs.search(absent, 10).collect()) == 1
+    assert s_abs.search(absent, 10).collect() == []
+    assert _jobs(sc, lambda: s._empty().collect()) == 0
+    sc.setJobDescription("caller")
+    try:
+        IndexSearcher(zipf_index).search(TermQuery("mid"), 10)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)

@@ -70,6 +70,14 @@ def vocab(oracle):
     return terms + ["zzz_not_in_index"]
 
 
+@pytest.fixture(scope="module")
+def driver_searcher(index8, spark_corpus):
+    """The default cost gate: a small flat term tree takes the driver path."""
+    from lucene_solr_spark.operators.searcher import IndexSearcher
+
+    return IndexSearcher(index8, spark_corpus)
+
+
 @settings(
     max_examples=15,
     deadline=None,
@@ -77,11 +85,17 @@ def vocab(oracle):
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @given(data=st.data())
-def test_random_tree_matches_oracle(data, searcher, oracle, vocab):
+def test_random_tree_matches_oracle(data, searcher, driver_searcher, oracle, vocab):
+    """Every drawn tree, with random ``exclude_doc_ids`` among its top 15,
+    on the gate-0 searcher (θ pre-pass for flat term trees) and, for flat
+    term trees, on the default-gate searcher (driver path)."""
     q = data.draw(_tree(vocab))
-    expect = oracle.search(q, 10)
-    got = searcher.search(q, 10, prune=True).collect()
-    assert [(d, s) for d, s in expect] == got, q
+    ranked = oracle.search(q, 20)
+    ex = sorted({ranked[i][0] for i in data.draw(st.lists(st.integers(0, 14), max_size=3)) if i < len(ranked)})
+    expect = [(d, s) for d, s in ranked if d not in ex][:10]
+    flat = searcher._flat_clauses(q) is not None
+    for s in (searcher, driver_searcher) if flat else (searcher,):
+        assert s.search(q, 10, prune=True, exclude_doc_ids=ex).collect() == expect, (q, ex)
 
 
 def test_must_group_with_mm_matches_nothing(searcher, oracle, vocab):
