@@ -1,13 +1,29 @@
 """Pluggable similarities (reference ``search/similarities/``).
 
-Every similarity, the default BM25 included, reduces to two pieces the
-searcher plumbs through one scoring path:
+Every similarity, the default BM25 included, has two entry points:
 
 - ``term_params(boost, df, ttf, doc_count, sum_ttf) -> tuple`` — per-term
   scalars (``n_params`` of them) resolved once on the driver from global
-  stats (the Weight/SimScorer construction step);
-- ``score(*params, tfs, norms) -> float32`` — the vectorized per-posting
-  kernel run inside the Arrow unpack UDF, each param broadcast per posting.
+  stats (the Weight/SimScorer construction step), and ``score(*params, tfs,
+  norms) -> float32``, the vectorized per-posting kernel run inside the
+  Arrow unpack UDF, each param broadcast per posting.  Term, boolean and
+  θ evaluation score through this pair.
+- ``scorer(boost, term_stats, doc_count, sum_ttf) -> fn(freqs, norms)`` —
+  the multi-stat ``Similarity.scorer(boost, collectionStats,
+  termStats...)`` for a query whose one freq stands for several terms
+  (phrases, multiphrases, synonyms, payload spans, term automata); freqs
+  may be float (the sloppy freq is float32).  Per family:
+
+  - default (the ``SimilarityBase`` family: LM, DFR, IB, DFI, Axiomatic):
+    one ``term_params`` per term, and a float32 running sum of ``score``
+    over the terms (``MultiSimilarity.MultiSimScorer``);
+  - ``BM25Similarity`` (and ``LegacyBM25Similarity``): one weight
+    ``f32(scaled_boost(boost) · f32(Σ_f64 f32 idf))``
+    (``BM25Similarity.idfExplain(termStats[])``);
+  - ``ClassicSimilarity`` (and ``SweetSpotSimilarity``): the same with its
+    own idf (``TFIDFSimilarity.idfExplain(termStats[])``);
+  - ``BooleanSimilarity``: ``boost``;
+  - ``MultiSimilarity``: a float32 running sum of the subs' scorers.
 
 Every kernel is monotone non-decreasing in tf and non-increasing in
 document length, so block-max pruning with per-block ``(max_tf, min_norm)``
@@ -111,6 +127,31 @@ class Similarity:
     def score(self, w1, w2, tfs, norms):
         raise NotImplementedError
 
+    def scorer(self, boost, term_stats, doc_count, sum_ttf):
+        """``fn(freqs, norms) -> float32`` over the ``(df, ttf)`` stats of
+        several terms: the float32 running sum of one per-term scorer each
+        (``SimilarityBase.scorer`` → ``MultiSimilarity.MultiSimScorer``)."""
+
+        def term_scorer(params):
+            return lambda freqs, norms: self.score(*(np.full(len(freqs), w) for w in params), freqs, norms)
+
+        return _running_sum(
+            [term_scorer(self.term_params(boost, df, ttf, doc_count, sum_ttf)) for df, ttf in term_stats]
+        )
+
+
+def _running_sum(scorers):
+    """``fn(freqs, norms)``: the float32 running sum of `scorers`
+    (``MultiSimilarity.MultiSimScorer``)."""
+
+    def fn(freqs, norms):
+        acc = np.zeros(len(freqs), np.float32)
+        for sc in scorers:
+            acc = (acc + sc(freqs, norms)).astype(np.float32)
+        return acc
+
+    return fn
+
 
 class BM25Similarity(Similarity):
     """BM25Similarity (``search/similarities/BM25Similarity.java``), the
@@ -150,6 +191,12 @@ class BM25Similarity(Similarity):
         cache = bm25.norm_cache(np.float32(avgdl[0]), self.k1, self.b)
         return bm25.score_tf_norm(tfs, norms, np.asarray(w, dtype=np.float32), cache)
 
+    def scorer(self, boost, term_stats, doc_count, sum_ttf):
+        idf = np.float32(sum(float(bm25.idf(df, doc_count)) for df, _ in term_stats))
+        w = np.float32(self.scaled_boost(boost) * idf)
+        cache = bm25.norm_cache(bm25.avg_field_length(sum_ttf, doc_count), self.k1, self.b)
+        return lambda freqs, norms: bm25.score_tf_norm(freqs, norms, w, cache)
+
 
 class ClassicSimilarity(Similarity):
     name = "classic"
@@ -161,14 +208,22 @@ class ClassicSimilarity(Similarity):
         nt[0] = np.float32(1.0) / nt[255]
         self._norm_table = nt
 
+    @staticmethod
+    def idf(df, doc_count) -> np.float32:
+        return np.float32(np.log((doc_count + 1) / float(df + 1)) + 1.0)
+
     def term_params(self, boost, df, ttf, doc_count, sum_ttf):
-        idf = np.float32(np.log((doc_count + 1) / float(df + 1)) + 1.0)
-        return (float(np.float32(np.float32(boost) * idf)), 0.0)
+        return (float(np.float32(np.float32(boost) * self.idf(df, doc_count))), 0.0)
 
     def score(self, w1, w2, tfs, norms):
         tf32 = np.sqrt(tfs.astype(np.float64)).astype(np.float32)
         raw = (tf32 * w1.astype(np.float32)).astype(np.float32)
         return (raw * self._norm_table[norms]).astype(np.float32)
+
+    def scorer(self, boost, term_stats, doc_count, sum_ttf):
+        idf = np.float32(sum(float(self.idf(df, doc_count)) for df, _ in term_stats))
+        w = float(np.float32(np.float32(boost) * idf))
+        return lambda freqs, norms: self.score(np.full(len(freqs), w), None, freqs, norms)
 
 
 class BooleanSimilarity(Similarity):
@@ -179,6 +234,9 @@ class BooleanSimilarity(Similarity):
 
     def score(self, w1, w2, tfs, norms):
         return np.broadcast_to(w1.astype(np.float32), tfs.shape).copy()
+
+    def scorer(self, boost, term_stats, doc_count, sum_ttf):
+        return lambda freqs, norms: np.full(len(freqs), boost, dtype=np.float32)
 
 
 class LMDirichletSimilarity(Similarity):
@@ -850,6 +908,9 @@ class MultiSimilarity(Similarity):
             acc = sub if acc is None else (acc + sub).astype(np.float32)
             i += k
         return acc
+
+    def scorer(self, boost, term_stats, doc_count, sum_ttf):
+        return _running_sum([s.scorer(boost, term_stats, doc_count, sum_ttf) for s in self.sims])
 
 
 class SweetSpotSimilarity(ClassicSimilarity):

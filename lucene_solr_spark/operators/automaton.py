@@ -14,10 +14,11 @@ TermAutomatonQuery.java`` + ``TermAutomatonScorer.java``):
   step (``:305-327``), so freq = #{(i, j) : automaton accepts tokens[i..j]};
 - the query is determinized before running (``createWeight`` calls
   ``Operations.determinize``, ``TermAutomatonQuery.java:190-205``);
-- BM25 idf is summed over the automaton's distinct present terms
-  (``TermAutomatonWeight`` hands every ``idToTerm`` TermStatistics to
-  ``similarity.scorer``, ``:346-361``; the multi-stats idf is a double
-  accumulation of float32 per-term idfs, ``BM25Similarity.java:172-181``).
+- the freq is scored by the searcher's similarity over the stats of the
+  automaton's distinct present terms (``TermAutomatonWeight`` hands every
+  ``idToTerm`` TermStatistics to ``similarity.scorer``, ``:346-361``; under
+  BM25 the multi-stats idf is a double accumulation of float32 per-term
+  idfs, ``BM25Similarity.java:172-181``).
 
 Spark plan: one pruned positional-postings scan for the automaton's terms →
 repartition occurrences by ``doc_id`` (the only shuffle; occurrence rows of
@@ -43,7 +44,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import bm25
 from ..plans.query import TermAutomatonQuery
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -167,12 +167,7 @@ def eval_term_automaton(searcher: "IndexSearcher", q: TermAutomatonQuery, boost:
     present = [t for t in alphabet if t in stats]
     if not present:
         return searcher._empty()
-    scorer = searcher._scorer()
-    # double accumulation of f32 per-term idfs, then f32 (idfExplain[]);
-    # weight = f32(boost) * f32(idf)
-    idf_sum = np.float32(sum(float(bm25.idf(stats[t][0], scorer.doc_count)) for t in present))
-    w = np.float32(np.float32(boost * q.boost) * idf_sum)
-    cache = scorer.cache()
+    scorer = searcher._sim_scorer(boost * q.boost, [stats[t] for t in present])
     tmap = {t: i for i, t in enumerate(alphabet)}
 
     occ = (
@@ -194,7 +189,7 @@ def eval_term_automaton(searcher: "IndexSearcher", q: TermAutomatonQuery, boost:
         docs_u, freq, first_row = automaton_freqs(doc_arr, pos_arr, lut[codes], delta, accept)
         if docs_u.size == 0:
             return
-        scores = bm25.score_tf_norm(freq, norm_arr[first_row], w, cache)
+        scores = scorer(freq, norm_arr[first_row])
         yield pd.DataFrame({"doc_id": docs_u, "score": scores})
 
     return occ.mapInPandas(run, schema="doc_id bigint, score float")

@@ -32,7 +32,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import bm25
 from ..functions.codec import unpack_blocks, unpack_payloads
 
 PAYLOAD_FUNCTIONS = ("min", "max", "avg", "sum")
@@ -77,19 +76,15 @@ def payload_score_topk(
     """Top-k ``(doc_id, score)`` of ``PayloadScoreQuery(SpanTermQuery(term),
     function, includeSpanScore)``.
 
-    For a term span the wrapped span score is the term's BM25 score (each
-    span contributes sloppyFreq 1.0, so the accumulated freq equals tf —
-    ``spans/SpanScorer.java`` setFreqCurrentDoc), making the
-    ``includeSpanScore`` product exact here.
+    For a term span the wrapped span score is the term's score under the
+    searcher's similarity (each span contributes sloppyFreq 1.0, so the
+    accumulated freq equals tf — ``spans/SpanScorer.java``
+    setFreqCurrentDoc), making the ``includeSpanScore`` product exact here.
     """
     blocks = _term_blocks(searcher, term)
-    spark = searcher.spark
     if blocks is None:
-        return spark.createDataFrame([], "doc_id bigint, score float")
-    stats = searcher._term_stats({term})
-    df_t, _ = stats[term]
-    weight = np.float32(np.float32(boost) * bm25.idf(df_t, searcher.index.doc_count))
-    cache = searcher._scorer().cache()
+        return searcher._empty()
+    scorer = searcher._sim_scorer(boost, [searcher._term_stats({term})[term]])
     codec = searcher.index.config.codec
 
     def fn(iterator):
@@ -109,8 +104,7 @@ def payload_score_topk(
             pay = _fold_payloads(factors, tfs, function)
             pay = np.maximum(pay, np.float32(0.0))  # negative docScore clamps to 0
             if include_span_score:
-                span = bm25.score_tf_norm(tfs, norms, weight, cache)
-                score = (span.astype(np.float32) * pay).astype(np.float32)
+                score = (scorer(tfs, norms) * pay).astype(np.float32)
             else:
                 score = pay
             yield pd.DataFrame({"doc_id": doc_ids, "score": score})
@@ -128,20 +122,16 @@ def payload_check_topk(
 ) -> DataFrame:
     """Top-k of ``SpanPayloadCheckQuery(SpanTermQuery(term), [payload])``:
     only occurrences whose payload equals the target survive; the surviving
-    count is the span freq fed to the regular BM25 span scorer (term
+    count is the span freq fed to the similarity's span scorer (term
     statistics stay those of the unfiltered term — SpanWeight binds
     TermStates before payload filtering)."""
     if len(payloads_to_match) != 1:
         raise ValueError("term spans collect exactly one payload per span")
     target = int(payloads_to_match[0])
     blocks = _term_blocks(searcher, term)
-    spark = searcher.spark
     if blocks is None:
-        return spark.createDataFrame([], "doc_id bigint, score float")
-    stats = searcher._term_stats({term})
-    df_t, _ = stats[term]
-    weight = np.float32(np.float32(boost) * bm25.idf(df_t, searcher.index.doc_count))
-    cache = searcher._scorer().cache()
+        return searcher._empty()
+    scorer = searcher._sim_scorer(boost, [searcher._term_stats({term})[term]])
     codec = searcher.index.config.codec
 
     def fn(iterator):
@@ -163,7 +153,7 @@ def payload_check_topk(
             keep = accepted > 0
             if not keep.any():
                 continue
-            score = bm25.score_tf_norm(accepted[keep], norms[keep], weight, cache)
+            score = scorer(accepted[keep], norms[keep])
             yield pd.DataFrame({"doc_id": doc_ids[keep], "score": score})
 
     scored = blocks.mapInPandas(fn, schema="doc_id bigint, score float")

@@ -241,9 +241,10 @@ class IndexSearcher:
         # IndexSearcher.setSimilarity analog: None means the default
         # BM25Similarity (``search/IndexSearcher.java:118``).  The similarity
         # resolves per-term params and scores postings for term/boolean/
-        # dismax/synonym/fuzzy evaluation and block-max pruning (all kernels
-        # are monotone, so pruning stays sound). Phrase/span/multiterm
-        # rewrites keep BM25 / constant-score semantics.
+        # dismax/fuzzy evaluation and block-max pruning (all kernels are
+        # monotone, so pruning stays sound), and its multi-term scorer scores
+        # synonyms, phrases, multiphrases, payload spans and term automata.
+        # Span and multiterm rewrites keep constant-score semantics.
         self.similarity = similarity or BM25Similarity()
         # LRUQueryCache / SolrIndexSearcher.filterCache analog: hot FILTER
         # doc-sets persisted, LRU-evicted (SolrIndexSearcher.java:119-120)
@@ -400,9 +401,6 @@ class IndexSearcher:
                 self._stats_cache[t] = found.get(t)
         return {t: self._stats_cache[t] for t in terms if self._stats_cache[t] is not None}
 
-    def _scorer(self) -> bm25.BM25:
-        return bm25.BM25(doc_count=self.index.doc_count, avgdl=self.index.avgdl)
-
     def _leaf_w(self, b: float, term: str, stats: dict) -> tuple:
         """Per-term params under the active similarity — the Weight/SimScorer
         construction step (``Similarity.term_params``)."""
@@ -411,6 +409,21 @@ class IndexSearcher:
 
     def _params(self, b: float, df: int, ttf: int) -> tuple:
         return self.similarity.term_params(b, df, ttf, self.index.doc_count, self.index.sum_ttf)
+
+    def _sim_scorer(self, b: float, term_stats: list):
+        """``fn(freqs, norms)`` of one freq over the ``(df, ttf)`` stats of
+        several terms (``Similarity.scorer``)."""
+        return self.similarity.scorer(b, term_stats, self.index.doc_count, self.index.sum_ttf)
+
+    @staticmethod
+    def _freq_scores(frame: DataFrame, scorer) -> DataFrame:
+        """(doc_id, freq, norm) rows -> (doc_id, score) through `scorer`."""
+
+        @F.pandas_udf(T.FloatType())
+        def freq_score(freq: pd.Series, norm: pd.Series) -> pd.Series:
+            return pd.Series(scorer(freq.to_numpy(), norm.to_numpy(dtype=np.int64)))
+
+        return frame.select("doc_id", freq_score("freq", "norm").alias("score"))
 
     def _require_bm25(self, what: str) -> None:
         """Guard for the paths whose arithmetic holds only for the BM25
@@ -486,19 +499,10 @@ class IndexSearcher:
                     mfac = F.when(F.col("term") == t, F.lit(m)).otherwise(mfac)
             scored = scored.withColumn("tf", F.col("tf") * mfac)
         raw = scored.groupBy("doc_id").agg(
-            F.sum("tf").cast("bigint").alias("tf"), F.first("norm").alias("norm")
+            F.sum("tf").cast("bigint").alias("freq"), F.first("norm").alias("norm")
         )
         blended_ttf = sum(stats[t][1] * m for t, m in mult.items())
-        wps = self._params(boost * q.boost, blended_df, blended_ttf)
-        sim = self.similarity
-
-        @F.pandas_udf(T.FloatType())
-        def syn_score(tf: pd.Series, norm: pd.Series) -> pd.Series:
-            tfs = tf.to_numpy(dtype=np.int64)
-            ws = [np.full(tfs.shape, w) for w in wps]
-            return pd.Series(sim.score(*ws, tfs, norm.to_numpy(dtype=np.int64)))
-
-        return raw.select("doc_id", syn_score("tf", "norm").alias("score"))
+        return self._freq_scores(raw, self._sim_scorer(boost * q.boost, [(blended_df, blended_ttf)]))
 
     @staticmethod
     def _wildcard_to_like(pattern: str) -> str:
@@ -1055,25 +1059,21 @@ class IndexSearcher:
         UnionPostingsEnum, ``MultiPhraseQuery.java:245-258``) exploded to
         (doc_id, pos - slot) rows; the n-way equi-join on (doc_id, base)
         leaves one row per matching start position; count per doc = phrase
-        tf.  Weight: f32(boost) * f32(Σ_f64 f32_idf(term)) over all indexed
-        terms of all slots (``:212-238`` + ``BM25Similarity.idfExplain``)."""
+        tf.  Scored by the similarity's multi-term scorer over the stats of
+        all indexed terms of all slots (``:212-238`` allTermStats)."""
         slots = [tuple(t for t in slot if t in stats) for slot in q.slots]
         if any(not s for s in slots):
             return self._empty()
         if not self.index.config.index_positions:
             raise ValueError("MultiPhraseQuery needs an index built with index_positions=True")
-        scorer = self._scorer()
-        all_terms = [t for slot in q.slots for t in slot if t in stats]
-        idf_sum = np.float32(sum(float(bm25.idf(stats[t][0], scorer.doc_count)) for t in all_terms))
-        w = np.float32(np.float32(boost * q.boost) * idf_sum)
-        cache = scorer.cache()
+        scorer = self._sim_scorer(boost * q.boost, [stats[t] for slot in slots for t in slot])
         uniq = list(dict.fromkeys(t for slot in slots for t in slot))
         occ = self._positional_occurrences(uniq)
         occ = self._persist_span_occ(occ) if len(uniq) > 1 else occ
         positions = list(q.slot_positions())
 
         if q.slop > 0:
-            return self._eval_multiphrase_sloppy(q, slots, positions, occ, w, cache)
+            return self._eval_multiphrase_sloppy(q, slots, positions, occ, scorer)
 
         matched = None
         for m, slot in enumerate(slots):
@@ -1082,18 +1082,11 @@ class IndexSearcher:
             )
             matched = part if matched is None else matched.join(part.select("doc_id", "base"), ["doc_id", "base"])
         ptf = matched.groupBy("doc_id").agg(
-            F.count("*").cast("bigint").alias("ptf"), F.first("norm").alias("norm")
+            F.count("*").cast("bigint").alias("freq"), F.first("norm").alias("norm")
         )
+        return self._freq_scores(ptf, scorer)
 
-        @F.pandas_udf(T.FloatType())
-        def mp_score(ptf_c: pd.Series, norm_c: pd.Series) -> pd.Series:
-            return pd.Series(bm25.score_tf_norm(ptf_c.to_numpy(), norm_c.to_numpy(), w, cache))
-
-        return ptf.select("doc_id", mp_score("ptf", "norm").alias("score"))
-
-    def _eval_multiphrase_sloppy(
-        self, q: MultiPhraseQuery, slots, positions, occ, w, cache
-    ) -> DataFrame:
+    def _eval_multiphrase_sloppy(self, q: MultiPhraseQuery, slots, positions, occ, scorer) -> DataFrame:
         """MultiPhraseQuery with slop (``MultiPhraseQuery.java:76-82`` setSlop
         → ``SloppyPhraseMatcher`` over one union-postings stream per slot,
         ``PhraseQuery.java`` sloppy scorer): per candidate doc, slot k's
@@ -1144,62 +1137,32 @@ class IndexSearcher:
                 keep = freqs > 0
                 if not keep.any():
                     continue
-                s = bm25.score_tf_norm(freqs[keep], pdf["norm"].to_numpy()[keep], w, cache)
+                s = scorer(freqs[keep], pdf["norm"].to_numpy(dtype=np.int64)[keep])
                 yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy()[keep], "score": s})
 
         return rows.mapInPandas(matcher, schema="doc_id bigint, score float")
 
-    def _eval_phrase_positional(self, q: PhraseQuery, boost: float, stats: dict) -> DataFrame:
-        """Exact phrase straight from the positional postings — no stored-text
-        re-analysis (``ExactPhraseMatcher`` over the .pos stream).
-
-        Plan: explode each phrase term's occurrences to (doc_id, pos - m)
-        rows, m = the term's offset in the phrase; an m-way equi-join on
-        (doc_id, base) leaves one row per phrase start; count per doc =
-        phrase_tf.  All joins are Catalyst equi-joins on (doc_id, base) —
-        co-partitioned, no UDF in the match path."""
-        from ..functions.codec import unpack_blocks, unpack_positions
-
-        terms = list(q.phrase_terms)
-        scorer = self._scorer()
-        idf_sum = np.float32(sum(float(bm25.idf(stats[t][0], scorer.doc_count)) for t in terms))
-        w = np.float32(np.float32(boost * q.boost) * idf_sum)
-        cache = scorer.cache()
-        uniq = list(dict.fromkeys(terms))
-        occ = self._positional_occurrences(uniq)
-        occ = self._persist_span_occ(occ) if len(uniq) > 1 else occ
-
-        matched = None
-        for m, t in enumerate(terms):
-            part = occ.filter(F.col("term") == t).select(
-                "doc_id", "norm", (F.col("pos") - F.lit(m)).alias("base")
-            )
-            matched = part if matched is None else matched.join(part.select("doc_id", "base"), ["doc_id", "base"])
-        ptf = matched.groupBy("doc_id").agg(
-            F.count("*").cast("bigint").alias("ptf"), F.first("norm").alias("norm")
-        )
-
-        @F.pandas_udf(T.FloatType())
-        def phrase_score(ptf_c: pd.Series, norm_c: pd.Series) -> pd.Series:
-            return pd.Series(bm25.score_tf_norm(ptf_c.to_numpy(), norm_c.to_numpy(), w, cache))
-
-        return ptf.select("doc_id", phrase_score("ptf", "norm").alias("score"))
-
     def _eval_phrase(self, q: PhraseQuery, boost: float, stats: dict) -> DataFrame:
-        """Exact phrase, two-phase (TwoPhaseIterator analog, SURVEY §4):
-        approximate pass = conjunction of term postings; verify pass =
+        """PhraseQuery.  On an index with positions it is the one-term-per-slot
+        :class:`MultiPhraseQuery` (exact or sloppy, straight from the
+        positional postings — no stored-text access).
+
+        Without positions it runs two-phase (TwoPhaseIterator analog, SURVEY
+        §4): approximate pass = conjunction of term postings; verify pass =
         re-analyze candidate texts with positions and count adjacent runs
-        (ExactPhraseMatcher semantics); score with phrase_tf and summed idf
-        (PhraseWeight uses the sum of per-term idfs)."""
+        (ExactPhraseMatcher) or the sloppy freq (SloppyPhraseMatcher); the
+        freq is scored by the similarity's multi-term scorer over the
+        phrase's term stats (PhraseWeight)."""
         terms = list(q.phrase_terms)
         if any(t not in stats for t in terms):
             return self._empty()
-        if self.index.config.index_positions and q.slop == 0:
-            return self._eval_phrase_positional(q, boost, stats)
+        if self.index.config.index_positions:
+            mp = MultiPhraseQuery(tuple((t,) for t in terms), boost=q.boost, slop=q.slop)
+            return self._eval_multiphrase(mp, boost, stats)
         if self.corpus is None:
             raise ValueError(
-                "PhraseQuery needs IndexSearcher(corpus=...) for the verify pass "
-                "(or an index built with index_positions=True)"
+                "PhraseQuery on an index without positions needs IndexSearcher(corpus=...) "
+                "for the verify pass"
             )
         scored = self._matching_postings(set(terms))
         cand = (
@@ -1213,10 +1176,7 @@ class IndexSearcher:
             self.corpus.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")), "doc_id"
         )
         analyzer = self.index.config.analyzer
-        scorer = self._scorer()
-        idf_sum = np.float32(sum(float(bm25.idf(stats[t][0], scorer.doc_count)) for t in terms))
-        w = np.float32(np.float32(boost * q.boost) * idf_sum)
-        cache = scorer.cache()
+        scorer = self._sim_scorer(boost * q.boost, [stats[t] for t in terms])
         phrase = tuple(terms)
 
         slop = int(q.slop)
@@ -1245,7 +1205,7 @@ class IndexSearcher:
                 if len(pdf) == 0:
                     continue
                 # float freq: the sloppy scorer feeds Σ 1/(1+matchLength) to
-                # BM25 (PhraseScorer.java:71-77); exact match freq is integral
+                # the similarity (PhraseScorer.java:71-77); exact freq is integral
                 freqs = np.zeros(len(pdf), dtype=np.float32)
                 for i, txt in enumerate(pdf["_text"]):
                     toks = analyzer.tokens_with_positions(txt)
@@ -1253,7 +1213,7 @@ class IndexSearcher:
                 keep = freqs > 0
                 if not keep.any():
                     continue
-                s = bm25.score_tf_norm(freqs[keep], pdf["norm"].to_numpy()[keep], w, cache)
+                s = scorer(freqs[keep], pdf["norm"].to_numpy(dtype=np.int64)[keep])
                 yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy()[keep], "score": s})
 
         return cand_text.mapInPandas(verify, schema="doc_id bigint, score float")
@@ -2001,10 +1961,10 @@ class IndexSearcher:
             any_misspelled = True
             sugg = [r["term"] for r in self.spellcheck(w, max_edits, max_suggestions_per_word).collect()]
             if not sugg:
-                return self.spark.createDataFrame([], "collation string, hits long")
+                return self._local_frame([], "collation string, hits long")
             options.append(sugg)
         if not any_misspelled:
-            return self.spark.createDataFrame([], "collation string, hits long")
+            return self._local_frame([], "collation string, hits long")
         candidates = list(itertools.islice(itertools.product(*options), max_tries))
         vocab = sorted({w for c in candidates for w in c})
         scored = self._matching_postings(vocab)
@@ -2174,7 +2134,7 @@ class IndexSearcher:
             t = ids.select(F.lit(name).alias("bucket"), "doc_id")
             tagged = t if tagged is None else tagged.unionByName(t)
         if tagged is None:
-            return self.spark.createDataFrame([], "bucket string, cnt bigint")
+            return self._local_frame([], "bucket string, cnt bigint")
         counts = tagged.groupBy("bucket").agg(F.count("*").cast("bigint").alias("cnt"))
         # zero-count buckets still appear (the reference reports every facet.query)
         names = self.spark.createDataFrame([(n,) for n in queries], "bucket string")
@@ -2651,7 +2611,7 @@ class IndexSearcher:
         if not live:
             # empty result must still carry the documented schema for THIS
             # output mode — intervals callers select (doc_id, start, end)
-            return self.spark.createDataFrame([], schema)
+            return self._local_frame([], schema)
         occ = self._positional_occurrences(live)
 
         def scan(iterator):
@@ -3615,7 +3575,7 @@ class IndexSearcher:
 
         target = soundex(word)
         if not target:
-            return self.spark.createDataFrame([], "term string, df bigint")
+            return self._local_frame([], "term string, df bigint")
 
         @F.pandas_udf("string")
         def code_udf(t: pd.Series) -> pd.Series:
@@ -3646,7 +3606,7 @@ class IndexSearcher:
             if c
         }
         if not targets:
-            return self.spark.createDataFrame([], "term string, df bigint")
+            return self._local_frame([], "term string, df bigint")
 
         @F.pandas_udf("boolean")
         def match_udf(t: pd.Series) -> pd.Series:

@@ -52,3 +52,24 @@ def searcher(index8, spark_corpus):
     # prune_min_postings=0: fixture corpora are tiny; keep the theta
     # pre-pass exercised whenever tests pass prune=True
     return IndexSearcher(index8, spark_corpus, prune_min_postings=0)
+
+
+@pytest.fixture(scope="session")
+def pos_index8(spark_corpus):
+    """index8 with positions, shared by the phrase, span, interval and
+    automaton modules (one build per session)."""
+    from lucene_solr_spark.operators.indexer import IndexConfig, build_index
+
+    return build_index(spark_corpus, IndexConfig(n_partitions=8, index_positions=True)).persist()
+
+
+@pytest.fixture(scope="session")
+def payload_index8(spark_corpus):
+    """Simple-analyzer index with ``pos & 7`` payloads (payload queries)."""
+    from lucene_solr_spark.functions.analysis import simple_analyzer
+    from lucene_solr_spark.operators.indexer import IndexConfig, build_index
+
+    return build_index(
+        spark_corpus,
+        IndexConfig(analyzer=simple_analyzer(), n_partitions=8, payload_mode="pos_mod8"),
+    ).persist()

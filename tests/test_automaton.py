@@ -6,7 +6,6 @@ import pytest
 
 from lucene_solr_spark.functions import bm25
 from lucene_solr_spark.operators.automaton import automaton_freqs, determinize
-from lucene_solr_spark.operators.indexer import IndexConfig, build_index
 from lucene_solr_spark.operators.searcher import IndexSearcher
 from lucene_solr_spark.plans.query import TermAutomatonQuery
 
@@ -88,9 +87,8 @@ def test_automaton_freqs_matches_bruteforce(seed):
 
 
 @pytest.fixture(scope="module")
-def pos_searcher(spark_corpus):
-    idx = build_index(spark_corpus, IndexConfig(n_partitions=8, index_positions=True)).persist()
-    return IndexSearcher(idx, spark_corpus)
+def pos_searcher(pos_index8, spark_corpus):
+    return IndexSearcher(pos_index8, spark_corpus)
 
 
 def test_term_automaton_end_to_end(pos_searcher, oracle):

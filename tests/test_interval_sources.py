@@ -147,12 +147,10 @@ def test_source_terms():
 
 # ------------------------------------------------------- distributed path
 @pytest.fixture(scope="module")
-def pos_searcher(spark_corpus):
-    from lucene_solr_spark.operators.indexer import IndexConfig, build_index
+def pos_searcher(pos_index8, spark_corpus):
     from lucene_solr_spark.operators.searcher import IndexSearcher
 
-    idx = build_index(spark_corpus, IndexConfig(n_partitions=8, index_positions=True)).persist()
-    return IndexSearcher(idx, spark_corpus)
+    return IndexSearcher(pos_index8, spark_corpus)
 
 
 def test_distributed_nested_source_matches_local(pos_searcher, fixture_corpus_pdf, oracle):

@@ -14,9 +14,7 @@ import numpy as np
 import pytest
 
 from lucene_solr_spark.functions import bm25
-from lucene_solr_spark.functions.analysis import simple_analyzer
 from lucene_solr_spark.functions.smallfloat import int_to_byte4
-from lucene_solr_spark.operators.indexer import IndexConfig, build_index
 from lucene_solr_spark.operators.payloads import payload_check_topk, payload_score_topk
 from lucene_solr_spark.operators.searcher import IndexSearcher
 
@@ -26,12 +24,8 @@ def _tok(s):
 
 
 @pytest.fixture(scope="module")
-def payload_searcher(spark_corpus):
-    idx = build_index(
-        spark_corpus,
-        IndexConfig(analyzer=simple_analyzer(), n_partitions=8, payload_mode="pos_mod8"),
-    ).persist()
-    return IndexSearcher(idx, spark_corpus)
+def payload_searcher(payload_index8, spark_corpus):
+    return IndexSearcher(payload_index8, spark_corpus)
 
 
 @pytest.fixture(scope="module")
@@ -128,3 +122,15 @@ def test_payloads_survive_merge(payload_searcher, spark_corpus):
 def test_unbuilt_payloads_rejected(searcher):
     with pytest.raises(ValueError):
         payload_score_topk(searcher, TERM)
+
+
+def test_payload_no_match_is_a_local_frame(spark, payload_searcher):
+    """A term absent from the index answers with a driver-built empty frame:
+    no Spark job at collect, a LocalTableScan in the plan."""
+    from test_batch_search import _jobs
+
+    term = "zzzznotaterm"
+    payload_searcher._term_stats({term})  # the stats lookup is its own job
+    assert _jobs(spark.sparkContext, lambda: payload_score_topk(payload_searcher, term).collect()) == 0
+    plan = payload_check_topk(payload_searcher, term, [3])._jdf.queryExecution().executedPlan()
+    assert "LocalTableScan" in plan.toString()

@@ -152,6 +152,24 @@ def test_boolean_and_dismax_single_scan(spark, index8, tmp_path_factory):
 
 
 
+def test_phrase_plan_is_multiphrase_plan(pos_index8, spark_corpus):
+    """On an index with positions a PhraseQuery, exact or sloppy, IS its
+    one-term-per-slot MultiPhraseQuery: the optimized plans are equal up to
+    expression ids, whether or not the searcher holds a corpus."""
+    from lucene_solr_spark.operators.searcher import IndexSearcher
+    from lucene_solr_spark.plans.query import MultiPhraseQuery, PhraseQuery
+
+    def optimized(s, q):
+        df = s._evaluate(q, 1.0, s._term_stats(q.terms()))
+        return re.sub(r"#\d+L?", "#", df._jdf.queryExecution().optimizedPlan().toString())
+
+    s = IndexSearcher(pos_index8, spark_corpus)
+    for slop in (0, 2):
+        pq = PhraseQuery(("the", "and", "of"), slop=slop, boost=2.0)
+        mq = MultiPhraseQuery((("the",), ("and",), ("of",)), slop=slop, boost=2.0)
+        assert optimized(s, pq) == optimized(s, mq), slop
+
+
 def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 

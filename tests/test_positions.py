@@ -7,7 +7,6 @@ exactly, and positions must survive the salted merge.
 import numpy as np
 import pytest
 
-from lucene_solr_spark.operators.indexer import IndexConfig, build_index
 from lucene_solr_spark.operators.searcher import IndexSearcher
 from lucene_solr_spark.plans.query import PhraseQuery, TermQuery
 
@@ -17,8 +16,8 @@ def _topk(searcher, q, k=10):
 
 
 @pytest.fixture(scope="module")
-def pos_index(spark_corpus):
-    return build_index(spark_corpus, IndexConfig(n_partitions=8, index_positions=True)).persist()
+def pos_index(pos_index8):
+    return pos_index8
 
 
 def test_positional_phrase_equals_two_phase(spark_corpus, pos_index, searcher):
@@ -33,6 +32,17 @@ def test_positional_phrase_without_corpus(pos_index, searcher):
     s_pos = IndexSearcher(pos_index, corpus=None)
     q = PhraseQuery(("the", "and"))
     assert _topk(s_pos, q) == _topk(searcher, q)
+
+
+def test_sloppy_phrase_without_corpus(spark_corpus, pos_index, index8, searcher):
+    """A sloppy phrase on a positional index needs no corpus: it returns the
+    float32 top-k of the same query with a corpus, and of the verify pass
+    over an index without positions; only that index still needs one."""
+    q = PhraseQuery(("the", "and"), slop=3)
+    got = _topk(IndexSearcher(pos_index, corpus=None), q)
+    assert got and got == _topk(IndexSearcher(pos_index, spark_corpus), q) == _topk(searcher, q)
+    with pytest.raises(ValueError, match="without positions"):
+        IndexSearcher(index8, corpus=None).search(q, 10)
 
 
 def test_positions_survive_merge(spark_corpus, pos_index, searcher):

@@ -15,6 +15,7 @@ from lucene_solr_spark.plans.query import (
     BooleanQuery,
     BoostQuery,
     DisjunctionMaxQuery,
+    MultiPhraseQuery,
     SynonymQuery,
     TermQuery,
 )
@@ -126,6 +127,13 @@ def real_phrases(oracle):
     return out[:24]
 
 
+@pytest.fixture(scope="module")
+def pos_searcher(pos_index8, spark_corpus):
+    from lucene_solr_spark.operators.searcher import IndexSearcher
+
+    return IndexSearcher(pos_index8, spark_corpus, prune_min_postings=0)
+
+
 @settings(
     max_examples=10,
     deadline=None,
@@ -133,11 +141,14 @@ def real_phrases(oracle):
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @given(data=st.data())
-def test_random_phrase_trees_match_oracle(data, searcher, oracle, vocab, real_phrases):
-    """Positional leaves (exact phrases from real documents) inside random
-    boolean trees — exercises the index-positions evaluation path under
-    composition."""
-    leaf = st.one_of(st.sampled_from(real_phrases), _leaf(vocab))
+def test_random_phrase_trees_match_oracle(data, searcher, pos_searcher, oracle, vocab, real_phrases):
+    """Phrase leaves (exact phrases from real documents) and their
+    one-term-per-slot MultiPhraseQuery twins inside random boolean trees.
+    The positional index answers every tree through its one phrase path;
+    trees without a multiphrase leaf also run the corpus verify pass of the
+    index without positions."""
+    twins = [MultiPhraseQuery(tuple((t,) for t in p.phrase_terms)) for p in real_phrases]
+    leaf = st.one_of(st.sampled_from(real_phrases + twins), _leaf(vocab))
     q = data.draw(
         st.builds(
             lambda must, should, mm: BooleanQuery.build(must=must, should=should, minimum_should_match=mm),
@@ -146,6 +157,7 @@ def test_random_phrase_trees_match_oracle(data, searcher, oracle, vocab, real_ph
             st.integers(min_value=0, max_value=2),
         )
     )
-    expect = oracle.search(q, 10)
-    got = searcher.search(q, 10, prune=True).collect()
-    assert [(d, s) for d, s in expect] == got, q
+    expect = [(d, s) for d, s in oracle.search(q, 10)]
+    assert pos_searcher.search(q, 10, prune=True).collect() == expect, q
+    if not any(isinstance(c.query, MultiPhraseQuery) for c in q.clauses):
+        assert searcher.search(q, 10, prune=True).collect() == expect, q

@@ -25,6 +25,9 @@ from lucene_solr_spark.functions.similarities import (
     BasicModelIF,
     BasicModelIn,
     BasicModelIne,
+    BM25Similarity,
+    BooleanSimilarity,
+    ClassicSimilarity,
     DFIChiSquaredSimilarity,
     DFISimilarity,
     DFRInL2Similarity,
@@ -38,15 +41,27 @@ from lucene_solr_spark.functions.similarities import (
     IndependenceStandardized,
     LambdaDF,
     LambdaTTF,
+    LMDirichletSimilarity,
+    MultiSimilarity,
     NormalizationH1,
     NormalizationH2,
     NormalizationH3,
     NormalizationZ,
 )
-from lucene_solr_spark.functions.smallfloat import byte4_to_int
+from lucene_solr_spark.functions.smallfloat import byte4_to_int, int_to_byte4
+from lucene_solr_spark.operators.payloads import payload_check_topk, payload_score_topk
 from lucene_solr_spark.operators.searcher import IndexSearcher
-from lucene_solr_spark.plans.query import BooleanQuery, SynonymQuery, TermQuery
+from lucene_solr_spark.plans.query import (
+    BooleanQuery,
+    MultiPhraseQuery,
+    PhraseQuery,
+    SynonymQuery,
+    TermAutomatonQuery,
+    TermQuery,
+)
 
+from test_automaton import _brute_freq
+from test_payloads import TERM, _tok
 from test_similarities import _brute_topk, _hot_terms, corpus_stats  # noqa: F401
 
 LOG2 = math.log(2.0)
@@ -387,3 +402,127 @@ def test_multi_similarity_sum(index8, spark_corpus, corpus_stats):
     _check_term(s2, hot, expect2)
     with pytest.raises(ValueError):
         MultiSimilarity([])
+
+
+# ---------------------------------------- phrase family, non-BM25 similarities
+# Every query whose one freq stands for several terms (phrases, multiphrases,
+# payload spans, term automata) scores through Similarity.scorer.  The
+# reference below is a scalar per-doc computation of each family's
+# multi-term rule; the freq comes from the matcher, the stats from the index.
+K = 5000  # above the fixture's doc count: every match is compared
+PHRASE_SIMS = {
+    "classic": ClassicSimilarity,
+    "lm_dirichlet": LMDirichletSimilarity,
+    "boolean": BooleanSimilarity,
+    "bm25_k1_2": lambda: BM25Similarity(k1=2.0),
+    "multi_bm25_lmd": lambda: MultiSimilarity([BM25Similarity(), LMDirichletSimilarity()]),
+}
+
+
+def _multi_score(name, freq, norm_byte, term_stats, n, sttf, boost=1.0):
+    """One doc's score for a freq over several terms' ``(df, ttf)``."""
+    f, dl = float(freq), _dl(norm_byte)
+    if name == "multi_bm25_lmd":
+        a = _multi_score("bm25", freq, norm_byte, term_stats, n, sttf, boost)
+        b = _multi_score("lm_dirichlet", freq, norm_byte, term_stats, n, sttf, boost)
+        return np.float32(a + b)
+    if name == "boolean":
+        return np.float32(boost)
+    if name == "lm_dirichlet":
+        # SimilarityBase: float32 running sum of one per-term score
+        acc = np.float32(0.0)
+        for _, ttf_t in term_stats:
+            p_c = (ttf_t + 1.0) / (sttf + 1.0)
+            s = boost * (math.log1p(f / (2000.0 * p_c)) + math.log(2000.0 / (dl + 2000.0)))
+            acc = np.float32(acc + np.float32(max(s, 0.0)))
+        return acc
+    if name == "classic":
+        idf = sum(float(np.float32(math.log((n + 1) / (df_t + 1)) + 1.0)) for df_t, _ in term_stats)
+        w = np.float32(np.float32(boost) * np.float32(idf))
+        raw = np.float32(np.float32(math.sqrt(f)) * w)
+        return np.float32(raw * np.float32(1.0 / math.sqrt(dl)))
+    # BM25 (k1 from the name): one weight over the double sum of f32 idfs
+    k1 = np.float32(2.0 if name == "bm25_k1_2" else 1.2)
+    b = np.float32(0.75)
+    idf = sum(float(np.float32(math.log(1.0 + (n - df_t + 0.5) / (df_t + 0.5)))) for df_t, _ in term_stats)
+    w = np.float32(np.float32(boost) * np.float32(idf))
+    avgdl = np.float32(sttf / n)
+    cache = np.float32(k1 * ((np.float32(1.0) - b) + (b * np.float32(dl)) / avgdl))
+    return np.float32(w * np.float32(f / (f + float(cache))))
+
+
+def _phrase_freqs(oracle, slots, slop):
+    """doc -> freq of a (multi)phrase: one alternative tuple per slot, the
+    exact start count or the sloppy matcher's float32 freq."""
+    from lucene_solr_spark.functions.sloppyphrase import sloppy_phrase_freq
+
+    out = {}
+    for d in oracle.texts:
+        pos = [sorted(p for t in slot for p in oracle.positions.get(t, {}).get(d, [])) for slot in slots]
+        if not all(pos):
+            continue
+        if slop:
+            freq = sloppy_phrase_freq([frozenset(s) for s in slots], pos, slop)
+        else:
+            sets = [set(p) for p in pos]
+            freq = sum(all(s + o in ps for o, ps in enumerate(sets)) for s in pos[0])
+        if freq > 0:
+            out[d] = freq
+    return out
+
+
+@pytest.mark.parametrize("sim_name", list(PHRASE_SIMS))
+def test_phrase_family_under_similarity(
+    sim_name, pos_index8, index8, payload_index8, spark_corpus, oracle
+):
+    """Exact and sloppy PhraseQuery (positional path and the corpus verify
+    pass), exact and sloppy MultiPhraseQuery, a TermAutomatonQuery and both
+    payload queries score under the searcher's similarity, on every
+    matching doc (K exceeds every match count)."""
+    sim = PHRASE_SIMS[sim_name]()
+    pos = IndexSearcher(pos_index8, corpus=None, similarity=sim)
+    verify = IndexSearcher(index8, spark_corpus, similarity=sim)
+
+    def expect(freqs, terms, boost=1.0, norms=oracle.norm, s=pos):
+        ts = [s._term_stats({t})[t] for t in terms]
+        n, sttf = s.index.doc_count, s.index.sum_ttf
+        return {d: float(_multi_score(sim_name, f, norms[d], ts, n, sttf, boost)) for d, f in freqs.items()}
+
+    def check(searcher, q, want):
+        got = [(d, sc) for d, sc in searcher.search(q, K).collect()]
+        assert got == _brute_topk(want, K), (sim_name, q)
+        assert got
+
+    # the fixture's head terms, so every shape matches hundreds of docs
+    phrase = ("ge0", "vecodu")
+    one = tuple((t,) for t in phrase)
+    check(pos, PhraseQuery(phrase, boost=2.0), expect(_phrase_freqs(oracle, one, 0), phrase, 2.0))
+    sloppy = expect(_phrase_freqs(oracle, one, 2), phrase)
+    check(pos, PhraseQuery(phrase, slop=2), sloppy)
+    check(verify, PhraseQuery(phrase, slop=2), sloppy)
+
+    for slots, slop in ((("ge0",), ("vecodu", "numa")), 0), ((("wehu", "go"), ("ge0",)), 2):
+        terms = [t for s in slots for t in s]
+        check(pos, MultiPhraseQuery(slots, slop=slop), expect(_phrase_freqs(oracle, slots, slop), terms))
+
+    aq = TermAutomatonQuery.from_phrases(("ge0", "vecodu"), ("numa", "wehu", "ge0"))
+    toks = {d: [t for t, _ in oracle.analyzer.tokens_with_positions(x)] for d, x in oracle.texts.items()}
+    afreq = {d: f for d, f in ((d, _brute_freq(tk, aq)) for d, tk in toks.items()) if f}
+    check(pos, aq, expect(afreq, sorted(aq.terms())))
+
+    # payload spans over the simple-analyzer index (payload = position & 7)
+    ps = IndexSearcher(payload_index8, spark_corpus, similarity=sim)
+    docs = spark_corpus.select("doc_id", "text").orderBy("doc_id").toPandas()
+    ptoks = {int(d): _tok(x) for d, x in zip(docs["doc_id"], docs["text"])}
+    pnorm = {d: int(int_to_byte4(np.array([len(tk)]))[0]) for d, tk in ptoks.items()}
+    occ = {d: [p for p, t in enumerate(tk) if t == TERM] for d, tk in ptoks.items()}
+    occ = {d: o for d, o in occ.items() if o}
+    span = expect({d: len(o) for d, o in occ.items()}, [TERM], norms=pnorm, s=ps)
+    pay_sum = {d: np.float32(sum(np.float32(p & 7) for p in o)) for d, o in occ.items()}
+    want = {d: float(np.float32(np.float32(span[d]) * pay_sum[d])) for d in occ}
+    got = [(r["doc_id"], r["score"]) for r in payload_score_topk(ps, TERM, "sum", k=K).collect()]
+    assert got == _brute_topk(want, K), sim_name
+    accepted = {d: sum(1 for p in o if p & 7 == 3) for d, o in occ.items()}
+    want = expect({d: a for d, a in accepted.items() if a}, [TERM], norms=pnorm, s=ps)
+    got = [(r["doc_id"], r["score"]) for r in payload_check_topk(ps, TERM, [3], k=K).collect()]
+    assert got == _brute_topk(want, K), sim_name
