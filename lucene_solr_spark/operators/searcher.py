@@ -62,7 +62,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions import bm25
-from ..functions.codec import unpack_blocks
+from ..functions.codec import unpack_blocks, unpack_positions
 from ..functions.similarities import BM25Similarity
 from ..plans.query import (
     BlendedTermQuery,
@@ -104,9 +104,10 @@ MAX_CLAUSE_COUNT = 1024  # BooleanQuery.maxClauseCount analog
 # saves (one extra Spark job vs ~ms of bulk decode); at 10^12-turn scale hot
 # terms are far above it and pruning engages exactly where it matters
 _MIN_PRUNE_POSTINGS = 200_000
-# a flat term query below the pre-pass gate whose postings fit this budget
-# is answered on the driver from ONE pull of its blocks (~1-2 MB unpacked):
-# no scoring job, Python hop or exchange
+# a flat term query below the pre-pass gate whose postings (Σdf) fit this
+# budget, and an exact phrase whose occurrences (Σttf) do, is answered on
+# the driver from ONE pull of its blocks (~1-2 MB unpacked): no scoring
+# job, Python hop or exchange
 _DRIVER_MAX_POSTINGS = 1 << 16
 # k + exclusions + pending deletes past this cap: the θ sample would cost
 # more than it saves and the deleted ids stay off the driver, so neither
@@ -140,6 +141,45 @@ def _unpack_postings(pdf: pd.DataFrame, codec: str) -> tuple:
         codec=codec,
     )
     return np.repeat(pdf["term"].to_numpy(dtype=object), counts), doc_ids, tfs, norms
+
+
+_POS_COLS = (*_BLOCK_COLS, "positions")  # plus the .pos stream
+
+
+def _unpack_occurrences(pdf: pd.DataFrame, codec: str) -> tuple:
+    """``(term, doc_id, norm, pos)`` arrays of every occurrence in the
+    positional block rows ``pdf``: :func:`_unpack_postings` repeated tf
+    times beside one numpy positions decode (.pos stream analog)."""
+    terms, doc_ids, tfs, norms = _unpack_postings(pdf, codec)
+    pos = unpack_positions(tfs, list(pdf["positions"]))
+    return np.repeat(terms, tfs), np.repeat(doc_ids, tfs), np.repeat(norms, tfs), pos
+
+
+def _exact_phrase_freqs(terms, doc_ids, norms, pos, slots, offsets) -> tuple:
+    """ExactPhraseMatcher over one union stream per slot
+    (``MultiPhraseQuery.java:245-258``) on :func:`_unpack_occurrences`
+    arrays: slot m counts its alternatives' occurrences per ``(doc, pos -
+    offsets[m])`` key; intersecting the keys across slots and multiplying
+    the counts keeps the multiplicities of the distributed ``(doc_id,
+    base)`` join.  Returns the matching ``(doc_ids, int64 freqs, int64
+    norms)``."""
+    docs, first, dense = np.unique(doc_ids, return_index=True, return_inverse=True)
+    # one int64 key per (dense doc, base); the dense ids stay below the
+    # occurrence count, so dense * width cannot overflow
+    lo = int(pos.min(initial=0)) - max(offsets)
+    width = int(pos.max(initial=0)) - min(offsets) - lo + 1
+    keys = None
+    for slot, off in zip(slots, offsets):
+        on = np.isin(terms, list(slot))
+        slot_keys, slot_counts = np.unique(dense[on] * width + (pos[on] - off - lo), return_counts=True)
+        if keys is None:
+            keys, counts = slot_keys, slot_counts
+        else:
+            keys, i, j = np.intersect1d(keys, slot_keys, assume_unique=True, return_indices=True)
+            counts = counts[i] * slot_counts[j]
+    hit, inv = np.unique(keys // width, return_inverse=True)
+    freqs = np.bincount(inv, weights=counts, minlength=len(hit)).astype(np.int64)
+    return docs[hit], freqs, norms[first[hit]].astype(np.int64)
 
 
 def _flat_group_scores(hits: list, n_req: int, mm: int) -> tuple:
@@ -613,38 +653,25 @@ class IndexSearcher:
 
     def _positional_occurrences(self, uniq_terms: list) -> DataFrame:
         """(term, doc_id, norm, pos) rows for every occurrence of the given
-        terms, bulk-decoded from the positional postings (.pos stream analog)
-        — shared by phrase and span evaluation. No per-row Python."""
-        from ..functions.codec import unpack_blocks, unpack_positions
-
-        blocks = self._postings_for(list(uniq_terms))
+        terms, bulk-decoded from the positional postings by
+        :func:`_unpack_occurrences` — shared by phrase and span evaluation.
+        No per-row Python."""
         codec = self.index.config.codec
 
         def occurrences(iterator):
             for pdf in iterator:
                 if len(pdf) == 0:
                     continue
-                doc_ids, tfs, norms, _ = unpack_blocks(
-                    pdf["doc_id_base"].to_numpy(dtype=np.int64),
-                    pdf["count"].to_numpy(dtype=np.int64),
-                    list(pdf["doc_ids"]),
-                    list(pdf["tfs"]),
-                    list(pdf["norms"]),
-                    codec=codec,
-                )
-                pos = unpack_positions(tfs, list(pdf["positions"]))
-                counts = pdf["count"].to_numpy(dtype=np.int64)
-                term_per_posting = np.repeat(pdf["term"].to_numpy(dtype=object), counts)
+                terms, doc_ids, norms, pos = _unpack_occurrences(pdf, codec)
                 yield pd.DataFrame(
-                    {
-                        "term": np.repeat(term_per_posting, tfs),
-                        "doc_id": np.repeat(doc_ids, tfs),
-                        "norm": np.repeat(norms.astype(np.int32), tfs),
-                        "pos": pos,
-                    }
+                    {"term": terms, "doc_id": doc_ids, "norm": norms.astype(np.int32), "pos": pos}
                 )
 
-        return blocks.mapInPandas(occurrences, schema="term string, doc_id bigint, norm int, pos bigint")
+        return (
+            self._postings_for(list(uniq_terms))
+            .select(*_POS_COLS)
+            .mapInPandas(occurrences, schema="term string, doc_id bigint, norm int, pos bigint")
+        )
 
     def _eval_span_near(self, q, boost: float, stats: dict) -> DataFrame:
         """SpanNearQuery over single-term clauses (``search/spans/
@@ -1062,7 +1089,7 @@ class IndexSearcher:
         tf.  Scored by the similarity's multi-term scorer over the stats of
         all indexed terms of all slots (``:212-238`` allTermStats)."""
         slots = [tuple(t for t in slot if t in stats) for slot in q.slots]
-        if any(not s for s in slots):
+        if not slots or not all(slots):
             return self._empty()
         if not self.index.config.index_positions:
             raise ValueError("MultiPhraseQuery needs an index built with index_positions=True")
@@ -1142,6 +1169,12 @@ class IndexSearcher:
 
         return rows.mapInPandas(matcher, schema="doc_id bigint, score float")
 
+    @staticmethod
+    def _as_multiphrase(q: PhraseQuery) -> MultiPhraseQuery:
+        """The one-term-per-slot MultiPhraseQuery a PhraseQuery runs as on
+        an index with positions."""
+        return MultiPhraseQuery(tuple((t,) for t in q.phrase_terms), boost=q.boost, slop=q.slop)
+
     def _eval_phrase(self, q: PhraseQuery, boost: float, stats: dict) -> DataFrame:
         """PhraseQuery.  On an index with positions it is the one-term-per-slot
         :class:`MultiPhraseQuery` (exact or sloppy, straight from the
@@ -1157,8 +1190,7 @@ class IndexSearcher:
         if any(t not in stats for t in terms):
             return self._empty()
         if self.index.config.index_positions:
-            mp = MultiPhraseQuery(tuple((t,) for t in terms), boost=q.boost, slop=q.slop)
-            return self._eval_multiphrase(mp, boost, stats)
+            return self._eval_multiphrase(self._as_multiphrase(q), boost, stats)
         if self.corpus is None:
             raise ValueError(
                 "PhraseQuery on an index without positions needs IndexSearcher(corpus=...) "
@@ -1717,25 +1749,42 @@ class IndexSearcher:
         rows, meta, params = self._single_clause_group(flat, stats)
         return self._prune_report(rows, meta, stats, k, params)[0]
 
+    def _driver_gate(self, n_post: int, k: int, exclude) -> Optional[tuple]:
+        """The pending-deleted doc ids when a driver path may run: its
+        ``n_post`` postings fit ``_DRIVER_MAX_POSTINGS`` (driver memory is
+        bounded by the budget, never by the corpus) and k + exclusions +
+        pending deletes fit ``_MAX_PRUNE_K``.  None otherwise."""
+        if n_post > _DRIVER_MAX_POSTINGS:
+            return None
+        n_deleted, deleted = self._pending_deletes()
+        if k + len(exclude) + n_deleted > _MAX_PRUNE_K:
+            return None
+        return tuple(deleted)
+
+    def _driver_ranked(self, docs, scores, k: int, exclude, deleted) -> DataFrame:
+        """The tail of both driver paths: drop exclusions and pending
+        deletes, rank the float32 ``scores`` desc, doc_id asc, and return
+        the top k as a :meth:`_local_frame` (no job at collect;
+        ``fetch``/``highlight``/``rescore`` work unchanged)."""
+        live = ~np.isin(docs, [int(d) for d in exclude] + list(deleted))
+        docs, scores = docs[live], scores[live]
+        top = np.lexsort((docs, -scores))[:k]
+        return self._local_frame(
+            list(zip(docs[top].tolist(), scores[top].tolist())), "doc_id bigint, score float"
+        )
+
     def _driver_top_k(self, flat: tuple, stats: dict, k: int, exclude) -> Optional[DataFrame]:
         """The exact top-k of a small flat term query (:meth:`_flat_clauses`
         ``flat``), evaluated on the driver: ONE job pulls the terms' block
         rows, numpy unpacks them, scores each leaf under its own params
-        (every similarity) and applies :func:`_flat_group_scores`;
-        exclusions and pending deletes are dropped here.  The ≤k-row answer
-        is a :meth:`_local_frame`, so ``fetch``/``highlight``/``rescore``
-        work unchanged.  None — run the distributed plan — when the θ
-        pre-pass applies (Σdf at the cost gate), Σdf exceeds
-        ``_DRIVER_MAX_POSTINGS`` (driver memory stays bounded by the
-        budget, never by the corpus), or k + exclusions + pending deletes
-        exceeds ``_MAX_PRUNE_K``."""
+        (every similarity) and applies :func:`_flat_group_scores`.  None —
+        run the distributed plan — when the θ pre-pass applies (Σdf at the
+        cost gate) or :meth:`_driver_gate` refuses Σdf."""
         leaves, n_req, mm = flat
         terms = sorted({t for _, t, _ in leaves if t in stats})
         n_post = sum(stats[t][0] for t in terms)
-        if n_post >= self.prune_min_postings or n_post > _DRIVER_MAX_POSTINGS:
-            return None
-        n_deleted, deleted = self._pending_deletes()
-        if k + len(exclude) + n_deleted > _MAX_PRUNE_K:
+        deleted = None if n_post >= self.prune_min_postings else self._driver_gate(n_post, k, exclude)
+        if deleted is None:
             return None
         if not self._may_match(flat, stats):
             return self._empty()
@@ -1754,31 +1803,59 @@ class IndexSearcher:
                 scores = self.similarity.score(*ws, tf, norm)
             hits.append((_OCC_CODE[occ], doc_ids[on], scores))
         docs, sums = _flat_group_scores(hits, n_req, mm)
-        scores = sums.astype(np.float32)
-        live = ~np.isin(docs, [int(d) for d in exclude] + list(deleted))
-        docs, scores = docs[live], scores[live]
-        top = np.lexsort((docs, -scores))[:k]
-        return self._local_frame(
-            list(zip(docs[top].tolist(), scores[top].tolist())), "doc_id bigint, score float"
+        return self._driver_ranked(docs, sums.astype(np.float32), k, exclude, deleted)
+
+    def _driver_phrase_top_k(self, q: Query, stats: dict, k: int, exclude) -> Optional[DataFrame]:
+        """The top-k of a small exact PhraseQuery or MultiPhraseQuery on an
+        index with positions, matched on the driver: ONE job pulls the
+        terms' positional blocks, :func:`_exact_phrase_freqs` counts the
+        phrase per doc and the similarity scores it as
+        :meth:`_eval_multiphrase` does.  None — run the distributed plan —
+        for other queries, sloppy phrases, or when :meth:`_driver_gate`
+        refuses Σttf (the occurrences decoded)."""
+        if isinstance(q, PhraseQuery):
+            q = self._as_multiphrase(q)
+        if not isinstance(q, MultiPhraseQuery) or q.slop or not self.index.config.index_positions:
+            return None
+        slots = [tuple(t for t in slot if t in stats) for slot in q.slots]
+        terms = sorted({t for slot in slots for t in slot})
+        deleted = self._driver_gate(sum(stats[t][1] for t in terms), k, exclude)
+        if deleted is None:
+            return None
+        if not slots or not all(slots):
+            return self._empty()
+        with self._job_description("search: driver positions pull"):
+            pdf = self._postings_for(terms).select(*_POS_COLS).toPandas()
+        docs, freqs, norms = _exact_phrase_freqs(
+            *_unpack_occurrences(pdf, self.index.config.codec), slots, q.slot_positions()
         )
+        scorer = self._sim_scorer(q.boost, [stats[t] for slot in slots for t in slot])
+        return self._driver_ranked(docs, np.asarray(scorer(freqs, norms), dtype=np.float32), k, exclude, deleted)
 
     # --------------------------------------------------------------- search
     def search(self, query: Query, k: int = 10, prune: bool = True, exclude_doc_ids=()) -> TopDocs:
         """Top-k search; identical results on every path (tested).
 
-        With ``prune``, a term or flat term boolean takes the first path
-        that applies, in this order:
+        With ``prune``, the first path that applies answers:
 
-        1. the θ pre-pass, when its postings reach the cost gate
-           ``prune_min_postings``: the surviving blocks feed the same
-           single-scan evaluator; the exclusions bound k like pending
-           deletes do (an excluded doc sampled into θ could otherwise hold
-           a top-k slot);
-        2. the driver path (:meth:`_driver_top_k`), when its postings fit
-           ``_DRIVER_MAX_POSTINGS``: one pull of the blocks, numpy scoring,
-           no scoring job or exchange;
-        3. the distributed evaluator — every other query, and every query
-           with ``prune=False`` (the reference arm)."""
+        1. the θ pre-pass, for a term or flat term boolean whose postings
+           reach the cost gate ``prune_min_postings``: the surviving blocks
+           feed the same single-scan evaluator; the exclusions bound k like
+           pending deletes do (an excluded doc sampled into θ could
+           otherwise hold a top-k slot);
+        2. the driver path (:meth:`_driver_top_k`), for one whose postings
+           (Σdf) fit ``_DRIVER_MAX_POSTINGS``: one pull of the blocks, numpy
+           scoring, no scoring job or exchange;
+        3. the driver phrase path (:meth:`_driver_phrase_top_k`), for a
+           top-level exact PhraseQuery or MultiPhraseQuery on an index with
+           positions whose occurrences (Σttf) fit the same budget: one pull
+           of the positional blocks and a numpy phrase matcher, no persist,
+           join or scoring UDF;
+        4. the distributed evaluator — every other query, every sloppy
+           phrase, and every query with ``prune=False`` (the reference arm).
+
+        Both driver paths also need k + exclusions + pending deletes ≤
+        ``_MAX_PRUNE_K``."""
         # release positional-occurrence caches persisted by earlier span
         # queries (bounded memory per searcher; see _persist_span_occ)
         self.release_span_caches()
@@ -1786,7 +1863,10 @@ class IndexSearcher:
         with self._job_description("search: term stats"):
             stats = self._term_stats(query.terms())
         flat = self._flat_clauses(query) if prune else None
-        ranked = None if flat is None else self._driver_top_k(flat, stats, k, exclude_doc_ids)
+        if flat is not None:
+            ranked = self._driver_top_k(flat, stats, k, exclude_doc_ids)
+        else:
+            ranked = self._driver_phrase_top_k(query, stats, k, exclude_doc_ids) if prune else None
         if ranked is None:
             blocks = None
             if flat is not None:

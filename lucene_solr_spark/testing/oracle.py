@@ -14,7 +14,8 @@ formula spec (float32 BM25, BM25Similarity.java:188-226) and the analyzer.
 
 from __future__ import annotations
 
-from collections import defaultdict
+import math
+from collections import Counter, defaultdict
 
 import numpy as np
 
@@ -144,16 +145,16 @@ class OracleEngine:
                 sum(float(bm25.idf(len(self.postings[t]), self.doc_count)) for t in all_terms)
             )
             w = np.float32(np.float32(boost * q.boost) * idf_sum)
+            offsets = q.slot_positions()
             out = {}
             for d in cand:
-                toks = self.analyzer.tokens_with_positions(self.texts[d])
-                freq = 0
-                for j in range(len(toks) - len(slots) + 1):
-                    if all(
-                        toks[j + m][0] in slots[m] and toks[j + m][1] == toks[j][1] + m
-                        for m in range(len(slots))
-                    ):
-                        freq += 1
+                # per slot: position -> occurrences of its distinct alternatives;
+                # a start matches when every slot holds one at start + offset
+                # (Builder.add(Term[], position) gaps), counted with multiplicity
+                at = [Counter(p for t in set(slot) for p in self.positions[t].get(d, ())) for slot in slots]
+                freq = sum(
+                    math.prod(c[p - offsets[0] + o] for c, o in zip(at, offsets)) for p in at[0]
+                )
                 if freq:
                     norm = float(self.cache[self.norm[d]])
                     out[d] = np.float32(w * np.float32(float(freq) / (float(freq) + norm)))

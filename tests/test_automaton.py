@@ -92,7 +92,7 @@ def pos_searcher(pos_index8, spark_corpus):
 
 
 def test_term_automaton_end_to_end(pos_searcher, oracle):
-    q = TermAutomatonQuery.from_phrases(("the", "and"), ("of", "to", "and"))
+    q = TermAutomatonQuery.from_phrases(("ge0", "vecodu"), ("vecodu", "ge0", "numa"))
     # brute-force control over the oracle's analyzed docs
     present = sorted(t for t in q.terms() if t in oracle.postings)
     idf_sum = np.float32(sum(float(bm25.idf(len(oracle.postings[t]), oracle.doc_count)) for t in present))

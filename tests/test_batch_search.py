@@ -502,3 +502,43 @@ def test_driver_path_budget_and_jobs(spark, zipf_index, monkeypatch):
         assert sc.getLocalProperty("spark.job.description") == "caller"
     finally:
         sc.setLocalProperty("spark.job.description", None)
+
+
+def test_driver_phrase_path_budget_and_jobs(spark, pos_index8, monkeypatch):
+    """The driver phrase path's gates and cost on the positional fixture
+    index.  Below the postings budget an exact phrase plans a
+    LocalTableScan, and its search + collect runs at most two Spark jobs
+    (the stats lookup and one positions pull); a sloppy phrase plans the
+    distributed matcher.  With 5 pending deletes the driver path drops them
+    and with 300 (past the 256 cap) the distributed plan runs: both equal
+    the ``prune=False`` arm.  With the budget under the phrase's Σttf the
+    plan holds the distributed join and its scoring UDF again."""
+    import dataclasses
+
+    from lucene_solr_spark.operators import searcher as searcher_mod
+    from lucene_solr_spark.operators.searcher import IndexSearcher
+    from lucene_solr_spark.plans.query import MultiPhraseQuery
+
+    q = PhraseQuery(("ge0", "vecodu"))
+    s = IndexSearcher(pos_index8)
+    below = _plan(s.search(q, 10).df)
+    assert "LocalTableScan" in below and "MapInPandas" not in below and "Join" not in below, below
+    sc = spark.sparkContext
+    assert _jobs(sc, lambda: IndexSearcher(pos_index8).search(q, 10).collect()) <= 2
+    for sloppy in (PhraseQuery(q.phrase_terms, slop=1), MultiPhraseQuery((("ge0",), ("vecodu", "numa")), slop=2)):
+        assert "MapInPandas matcher" in _plan(s.search(sloppy, 10).df), sloppy
+
+    top = [d for d, _ in s.search(q, 10, prune=False).collect()]
+    filler = [d for d in range(400) if d not in top][: 300 - 5]
+    for ids, path in ((top[:5], "LocalTableScan"), (top[:5] + filler, "freq_score")):
+        deletes = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+        sdel = IndexSearcher(dataclasses.replace(pos_index8, deletes=deletes))
+        got = sdel.search(q, 10)
+        assert path in _plan(got.df), len(ids)
+        assert got.collect() == sdel.search(q, 10, prune=False).collect(), len(ids)
+        assert not set(top[:5]) & {d for d, _ in got.collect()}
+
+    n_ttf = sum(ttf for _, ttf in s._term_stats(set(q.phrase_terms)).values())
+    monkeypatch.setattr(searcher_mod, "_DRIVER_MAX_POSTINGS", n_ttf - 1)
+    above = _plan(IndexSearcher(pos_index8).search(q, 10).df)
+    assert "Join" in above and "freq_score" in above, above

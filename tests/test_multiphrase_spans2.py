@@ -46,9 +46,9 @@ def _tok_positions(fixture_corpus_pdf):
 @pytest.mark.parametrize(
     "slots",
     [
-        (("the",), ("and", "of")),
-        (("the", "a"), ("of",)),
-        (("the",), ("and",), ("the", "of", "a")),
+        (("ge0",), ("vecodu", "numa")),
+        (("ge0", "wehu"), ("numa",)),
+        (("vecodu",), ("ge0",), ("ge0", "numa", "wehu")),
     ],
 )
 def test_multiphrase_rank_identity(pos_searcher2, oracle, slots):
@@ -63,14 +63,20 @@ def test_multiphrase_rank_identity(pos_searcher2, oracle, slots):
 def test_multiphrase_single_alternatives_equals_phrase(pos_searcher2, oracle):
     from lucene_solr_spark.plans.query import PhraseQuery
 
-    mq = MultiPhraseQuery((("the",), ("and",)))
-    pq = PhraseQuery(("the", "and"))
+    mq = MultiPhraseQuery((("ge0",), ("vecodu",)))
+    pq = PhraseQuery(("ge0", "vecodu"))
     assert pos_searcher2.search(mq, 10).collect() == pos_searcher2.search(pq, 10).collect()
 
 
 def test_multiphrase_missing_slot_is_empty(pos_searcher2):
+    from lucene_solr_spark.plans.query import PhraseQuery
+
     q = MultiPhraseQuery((("the",), ("zzzznotaterm",)))
     assert pos_searcher2.search(q, 10).collect() == []
+    # a phrase with no slots matches nothing on the driver and distributed arms
+    for q in (MultiPhraseQuery(()), PhraseQuery(())):
+        for prune in (True, False):
+            assert pos_searcher2.search(q, 10, prune=prune).collect() == [], (q, prune)
 
 
 # ------------------------------------------------------------- span algebra

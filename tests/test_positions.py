@@ -22,7 +22,8 @@ def pos_index(pos_index8):
 
 def test_positional_phrase_equals_two_phase(spark_corpus, pos_index, searcher):
     s_pos = IndexSearcher(pos_index, spark_corpus)
-    for phrase in [("the", "and"), ("the", "of", "to")]:
+    # the fixture's head terms: hundreds of two-term and 15 three-term matches
+    for phrase in [("ge0", "vecodu"), ("vecodu", "ge0", "numa")]:
         q = PhraseQuery(phrase)
         assert _topk(s_pos, q) == _topk(searcher, q), phrase
 
@@ -30,7 +31,7 @@ def test_positional_phrase_equals_two_phase(spark_corpus, pos_index, searcher):
 def test_positional_phrase_without_corpus(pos_index, searcher):
     # the positional index answers phrases with NO stored-field access
     s_pos = IndexSearcher(pos_index, corpus=None)
-    q = PhraseQuery(("the", "and"))
+    q = PhraseQuery(("ge0", "vecodu"))
     assert _topk(s_pos, q) == _topk(searcher, q)
 
 
@@ -38,7 +39,7 @@ def test_sloppy_phrase_without_corpus(spark_corpus, pos_index, index8, searcher)
     """A sloppy phrase on a positional index needs no corpus: it returns the
     float32 top-k of the same query with a corpus, and of the verify pass
     over an index without positions; only that index still needs one."""
-    q = PhraseQuery(("the", "and"), slop=3)
+    q = PhraseQuery(("ge0", "vecodu"), slop=3)
     got = _topk(IndexSearcher(pos_index, corpus=None), q)
     assert got and got == _topk(IndexSearcher(pos_index, spark_corpus), q) == _topk(searcher, q)
     with pytest.raises(ValueError, match="without positions"):
@@ -52,7 +53,7 @@ def test_positions_survive_merge(spark_corpus, pos_index, searcher):
     assert len(run_manifest(merged)) == 1
     assert merged.postings.filter("positions IS NULL").count() == 0
     s2 = IndexSearcher(merged, corpus=None)
-    q = PhraseQuery(("the", "and"))
+    q = PhraseQuery(("ge0", "vecodu"))
     assert _topk(s2, q) == _topk(searcher, q)
 
 

@@ -16,6 +16,7 @@ from lucene_solr_spark.plans.query import (
     BoostQuery,
     DisjunctionMaxQuery,
     MultiPhraseQuery,
+    PhraseQuery,
     SynonymQuery,
     TermQuery,
 )
@@ -116,8 +117,6 @@ def test_must_group_with_mm_matches_nothing(searcher, oracle, vocab):
 def real_phrases(oracle):
     """Adjacent token n-grams drawn from actual fixture documents, so random
     phrase queries have non-trivial match sets."""
-    from lucene_solr_spark.plans.query import PhraseQuery
-
     out = []
     for d in sorted(oracle.texts)[:40]:
         toks = [t for t, _ in oracle.analyzer.tokens_with_positions(oracle.texts[d])]
@@ -134,6 +133,22 @@ def pos_searcher(pos_index8, spark_corpus):
     return IndexSearcher(pos_index8, spark_corpus, prune_min_postings=0)
 
 
+def _top_phrase(vocab, real_phrases, twins):
+    """A top-level exact phrase leaf: a real phrase or its multiphrase twin,
+    a repeated-term phrase, or a two-slot multiphrase with gapped slot
+    positions (and alternatives in its second slot)."""
+    heads = st.sampled_from(vocab[:4])
+    repeated = st.builds(lambda t, n: PhraseQuery((t,) * n), heads, st.integers(2, 3))
+    gapped = st.builds(
+        lambda a, b, c, gap: MultiPhraseQuery(((a,), (b, c)), positions=(0, gap)),
+        heads,
+        heads,
+        heads,
+        st.integers(2, 3),
+    )
+    return st.one_of(st.sampled_from(real_phrases + twins), repeated, gapped)
+
+
 @settings(
     max_examples=10,
     deadline=None,
@@ -146,7 +161,10 @@ def test_random_phrase_trees_match_oracle(data, searcher, pos_searcher, oracle, 
     one-term-per-slot MultiPhraseQuery twins inside random boolean trees.
     The positional index answers every tree through its one phrase path;
     trees without a multiphrase leaf also run the corpus verify pass of the
-    index without positions."""
+    index without positions.  Each example also draws a top-level exact
+    phrase leaf (:func:`_top_phrase`) with random ``exclude_doc_ids`` among
+    its top 15: the driver phrase path (``prune=True``), the distributed
+    matcher (``prune=False``) and the oracle must agree bit for bit."""
     twins = [MultiPhraseQuery(tuple((t,) for t in p.phrase_terms)) for p in real_phrases]
     leaf = st.one_of(st.sampled_from(real_phrases + twins), _leaf(vocab))
     q = data.draw(
@@ -161,3 +179,10 @@ def test_random_phrase_trees_match_oracle(data, searcher, pos_searcher, oracle, 
     assert pos_searcher.search(q, 10, prune=True).collect() == expect, q
     if not any(isinstance(c.query, MultiPhraseQuery) for c in q.clauses):
         assert searcher.search(q, 10, prune=True).collect() == expect, q
+
+    top = data.draw(_top_phrase(vocab, real_phrases, twins))
+    ranked = oracle.search(top, 20)
+    ex = sorted({ranked[i][0] for i in data.draw(st.lists(st.integers(0, 14), max_size=3)) if i < len(ranked)})
+    expect = [(d, s) for d, s in ranked if d not in ex][:10]
+    for prune in (True, False):
+        assert pos_searcher.search(top, 10, prune=prune, exclude_doc_ids=ex).collect() == expect, (top, ex, prune)

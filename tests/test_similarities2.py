@@ -50,7 +50,7 @@ from lucene_solr_spark.functions.similarities import (
 )
 from lucene_solr_spark.functions.smallfloat import byte4_to_int, int_to_byte4
 from lucene_solr_spark.operators.payloads import payload_check_topk, payload_score_topk
-from lucene_solr_spark.operators.searcher import IndexSearcher
+from lucene_solr_spark.operators.searcher import _MAX_PRUNE_K, IndexSearcher
 from lucene_solr_spark.plans.query import (
     BooleanQuery,
     MultiPhraseQuery,
@@ -478,7 +478,10 @@ def test_phrase_family_under_similarity(
     """Exact and sloppy PhraseQuery (positional path and the corpus verify
     pass), exact and sloppy MultiPhraseQuery, a TermAutomatonQuery and both
     payload queries score under the searcher's similarity, on every
-    matching doc (K exceeds every match count)."""
+    matching doc (K exceeds every match count).  The exact phrase and
+    multiphrase also run the driver phrase path (``prune=True``, top
+    ``_MAX_PRUNE_K``, its cap) and the distributed matcher
+    (``prune=False``)."""
     sim = PHRASE_SIMS[sim_name]()
     pos = IndexSearcher(pos_index8, corpus=None, similarity=sim)
     verify = IndexSearcher(index8, spark_corpus, similarity=sim)
@@ -488,22 +491,29 @@ def test_phrase_family_under_similarity(
         n, sttf = s.index.doc_count, s.index.sum_ttf
         return {d: float(_multi_score(sim_name, f, norms[d], ts, n, sttf, boost)) for d, f in freqs.items()}
 
-    def check(searcher, q, want):
-        got = [(d, sc) for d, sc in searcher.search(q, K).collect()]
-        assert got == _brute_topk(want, K), (sim_name, q)
-        assert got
+    def check(searcher, q, want, arms=((K, True),)):
+        for k, prune in arms:
+            top = searcher.search(q, k, prune=prune)
+            got = [(d, sc) for d, sc in top.collect()]
+            assert got == _brute_topk(want, k), (sim_name, q, prune)
+            assert got
+            if k == _MAX_PRUNE_K:  # the driver phrase path: a local frame
+                assert "LocalTableScan" in top.df._jdf.queryExecution().executedPlan().toString()
+
+    both = ((_MAX_PRUNE_K, True), (K, False))
 
     # the fixture's head terms, so every shape matches hundreds of docs
     phrase = ("ge0", "vecodu")
     one = tuple((t,) for t in phrase)
-    check(pos, PhraseQuery(phrase, boost=2.0), expect(_phrase_freqs(oracle, one, 0), phrase, 2.0))
+    check(pos, PhraseQuery(phrase, boost=2.0), expect(_phrase_freqs(oracle, one, 0), phrase, 2.0), both)
     sloppy = expect(_phrase_freqs(oracle, one, 2), phrase)
     check(pos, PhraseQuery(phrase, slop=2), sloppy)
     check(verify, PhraseQuery(phrase, slop=2), sloppy)
 
     for slots, slop in ((("ge0",), ("vecodu", "numa")), 0), ((("wehu", "go"), ("ge0",)), 2):
         terms = [t for s in slots for t in s]
-        check(pos, MultiPhraseQuery(slots, slop=slop), expect(_phrase_freqs(oracle, slots, slop), terms))
+        want = expect(_phrase_freqs(oracle, slots, slop), terms)
+        check(pos, MultiPhraseQuery(slots, slop=slop), want, both if slop == 0 else ((K, True),))
 
     aq = TermAutomatonQuery.from_phrases(("ge0", "vecodu"), ("numa", "wehu", "ge0"))
     toks = {d: [t for t, _ in oracle.analyzer.tokens_with_positions(x)] for d, x in oracle.texts.items()}

@@ -78,7 +78,7 @@ def test_engine_sloppy_scores_float_freq(searcher, oracle):
     """Integration: engine sloppy phrase scores = BM25(float sloppy freq)."""
     from lucene_solr_spark.plans.query import PhraseQuery
 
-    res = searcher.search(PhraseQuery(("the", "and"), slop=3), 20).collect()
+    res = searcher.search(PhraseQuery(("ge0", "vecodu"), slop=3), 20).collect()
     assert len(res) > 0
     # scores must be valid float32 and strictly positive, ordered desc
     scores = [s for _, s in res]
