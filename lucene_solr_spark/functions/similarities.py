@@ -7,7 +7,9 @@ Every similarity, the default BM25 included, has two entry points:
   stats (the Weight/SimScorer construction step), and ``score(*params, tfs,
   norms) -> float32``, the vectorized per-posting kernel run inside the
   Arrow unpack UDF, each param broadcast per posting.  Term, boolean and
-  θ evaluation score through this pair.
+  θ evaluation score through this pair; ``scan_params(params) ->
+  (scan_params, scale)`` splits a term's params into what its postings
+  scan needs and a float32 factor applied per clause afterwards.
 - ``scorer(boost, term_stats, doc_count, sum_ttf) -> fn(freqs, norms)`` —
   the multi-stat ``Similarity.scorer(boost, collectionStats,
   termStats...)`` for a query whose one freq stands for several terms
@@ -127,6 +129,13 @@ class Similarity:
     def score(self, w1, w2, tfs, norms):
         raise NotImplementedError
 
+    def scan_params(self, params) -> tuple:
+        """``(scan params, scale)`` of one leaf's ``term_params``: its
+        postings are scored under the scan params and each clause score is
+        ``f32(scale · score)``.  Here the params themselves and 1, so a term
+        gets one scan per distinct param set."""
+        return tuple(params), 1.0
+
     def scorer(self, boost, term_stats, doc_count, sum_ttf):
         """``fn(freqs, norms) -> float32`` over the ``(df, ttf)`` stats of
         several terms: the float32 running sum of one per-term scorer each
@@ -160,8 +169,9 @@ class BM25Similarity(Similarity):
     :func:`bm25.norm_cache` ``(avgdl)`` — no state beyond (k1, b).
 
     Every leaf score of this family is ``f32(w·t)`` with the unit score
-    ``t = f32(tf/(tf + cache[norm]))`` independent of the term, which is the
-    factorisation ``batch_search`` relies on."""
+    ``t = f32(tf/(tf + cache[norm]))`` independent of the term, so
+    :meth:`scan_params` scans at unit weight and scales by ``w``: one scan
+    of a term serves every boost and every query of a batch."""
 
     name = "bm25"
 
@@ -184,6 +194,9 @@ class BM25Similarity(Similarity):
     def weight_params(self, weight, doc_count, sum_ttf) -> tuple:
         """Params that score ``f32(weight·t)`` for a precomputed weight."""
         return (float(weight), float(bm25.avg_field_length(sum_ttf, doc_count)))
+
+    def scan_params(self, params) -> tuple:
+        return (1.0, params[1]), float(np.float32(params[0]))
 
     def score(self, w, avgdl, tfs, norms):
         if len(tfs) == 0:

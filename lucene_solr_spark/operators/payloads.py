@@ -32,7 +32,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.codec import unpack_blocks, unpack_payloads
+from ..functions.codec import unpack_payloads
+from .searcher import _BLOCK_COLS, _unpack_postings
 
 PAYLOAD_FUNCTIONS = ("min", "max", "avg", "sum")
 
@@ -62,7 +63,7 @@ def _term_blocks(searcher, term: str) -> Optional[DataFrame]:
     stats = searcher._term_stats({term})
     if term not in stats:
         return None
-    return searcher.index.postings.filter(F.col("term") == term)
+    return searcher.index.postings.filter(F.col("term") == term).select(*_BLOCK_COLS, "payloads")
 
 
 def payload_score_topk(
@@ -91,15 +92,7 @@ def payload_score_topk(
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            counts = pdf["count"].to_numpy(dtype=np.int64)
-            doc_ids, tfs, norms, _ = unpack_blocks(
-                pdf["doc_id_base"].to_numpy(dtype=np.int64),
-                counts,
-                list(pdf["doc_ids"]),
-                list(pdf["tfs"]),
-                list(pdf["norms"]),
-                codec=codec,
-            )
+            _, doc_ids, tfs, norms = _unpack_postings(pdf, codec)
             factors = unpack_payloads(list(pdf["payloads"]))
             pay = _fold_payloads(factors, tfs, function)
             pay = np.maximum(pay, np.float32(0.0))  # negative docScore clamps to 0
@@ -138,15 +131,7 @@ def payload_check_topk(
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            counts = pdf["count"].to_numpy(dtype=np.int64)
-            doc_ids, tfs, norms, _ = unpack_blocks(
-                pdf["doc_id_base"].to_numpy(dtype=np.int64),
-                counts,
-                list(pdf["doc_ids"]),
-                list(pdf["tfs"]),
-                list(pdf["norms"]),
-                codec=codec,
-            )
+            _, doc_ids, tfs, norms = _unpack_postings(pdf, codec)
             payloads = unpack_payloads(list(pdf["payloads"]))
             occ_starts = (np.cumsum(tfs) - tfs).astype(np.int64)
             accepted = np.add.reduceat((payloads == target).astype(np.int64), occ_starts)

@@ -10,19 +10,22 @@ TakeOrderedAndProject — per-partition heap + driver merge, the exact shape of
 java/org/apache/lucene/search/TopDocs.java:75-90``), and stored fields are
 fetched only for winners via a broadcast semi-join (PURPOSE_GET_FIELDS).
 
-Scorer-to-plan mapping (``search/Boolean2ScorerSupplier.java:93-188``): a
-compound query reads all its term leaves in ONE postings scan, tags each row
-with its clause unit, and runs ONE groupBy(doc_id) with a sum and a count
-per unit (``_clause_rows``); the scorers become predicates over those:
+Scorer-to-plan mapping (``search/Boolean2ScorerSupplier.java:93-188``): one
+query or a batch of them is a table of clause units tagged (query, clause)
+(``_clause_table``); all term leaves are read in ONE postings scan, and the
+rows cross ONE exchange on (query, doc_id % 32) into two aggregations
+(``_matches``): per (query, doc, unit) the unit's hit and score, then per
+(query, doc) the clause rules over the unit hits:
 
-- MUST conjunction          -> unit count == clause count
+- MUST conjunction          -> every MUST unit hits
   (BlockMaxConjunctionScorer analog);
 - SHOULD disjunction        -> summed scores (WANDScorer analog; two-pass
   block-max pruning below);
-- MUST_NOT                  -> unit count == 0 (ReqExclScorer analog);
-- FILTER                    -> semi-join on a cached doc set;
-- minimumNumberShouldMatch  -> matched SHOULD count >= mm
-  (MinShouldMatchSumScorer).
+- MUST_NOT                  -> no MUST_NOT unit hits (ReqExclScorer analog);
+- FILTER                    -> a cached doc set unit that must hit, score 0;
+- minimumNumberShouldMatch  -> SHOULD unit hits >= mm
+  (MinShouldMatchSumScorer);
+- DisjunctionMax            -> max + tie * (sum - max) over the unit hits.
 
 Block-max pruning (``search/ImpactsDISI.java:94-126``, ``WANDScorer.java``,
 ``MaxScoreCache.java:64``) is re-expressed shuffle-free as two passes:
@@ -117,14 +120,28 @@ from .indexer import InvertedIndex
 
 _SCORED_SCHEMA = "term string, doc_id bigint, tf int, norm int, score float"
 
-# batch_search ships clause occurs as ints so the per-posting exchange rows
-# stay narrow; MUST/SHOULD sort below FILTER so "scoring clause" is occ <= 1
+# clause occurs travel the broadcast rule table as ints; MUST/SHOULD sort
+# below FILTER so "scoring clause" is occ <= 1
 _OCC_CODE = {"MUST": 0, "SHOULD": 1, "FILTER": 2, "MUST_NOT": 3}
 
 
 # the block columns the unpack kernel reads; selecting them first keeps the
 # positions and payloads binaries off the Arrow hop
 _BLOCK_COLS = ("term", "run_id", "block_id", "doc_id_base", "count", "doc_ids", "tfs", "norms")
+
+
+def _sql_lit(v, kind: str) -> str:
+    """SQL text of one literal of type ``kind``: a string quoted and
+    escaped, an int as is, a float through its ``repr`` as a double (exact
+    for every float32 value).  Plans carry the clause tables as one parsed expression
+    each rather than one Python-built column per value."""
+    if v is None:
+        return f"CAST(NULL AS {kind})"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, int):
+        return str(v)
+    return f"CAST({float(v)!r}D AS {kind})"
 
 
 def _unpack_postings(pdf: pd.DataFrame, codec: str) -> tuple:
@@ -183,8 +200,8 @@ def _exact_phrase_freqs(terms, doc_ids, norms, pos, slots, offsets) -> tuple:
 
 
 def _flat_group_scores(hits: list, n_req: int, mm: int) -> tuple:
-    """The flat clause-group rules of :meth:`IndexSearcher._eval_boolean`
-    in numpy: ``hits`` holds one ``(occur code, doc_ids, scores)`` per
+    """The flat clause-group rules of :meth:`IndexSearcher._matches` in
+    numpy: ``hits`` holds one ``(occur code, doc_ids, scores)`` per
     clause leaf, so a repeated term counts once per clause (FILTER and
     MUST_NOT leaves carry zero scores).  A doc matches when it holds all
     ``n_req`` MUST/FILTER leaves, no MUST_NOT leaf and, for ``mm > 0``,
@@ -468,22 +485,18 @@ class IndexSearcher:
     def _require_bm25(self, what: str) -> None:
         """Guard for the paths whose arithmetic holds only for the BM25
         family: its leaf score factors as ``f32(w·t)`` with a term-free unit
-        score ``t`` (batch unit weights, explain's weight/tf split)."""
+        score ``t`` (explain's weight/tf split, precomputed leaf weights)."""
         if not isinstance(self.similarity, BM25Similarity):
             raise NotImplementedError(f"{what} supports the BM25 similarity family")
 
     def _weight_params(self, weights: dict) -> dict:
         """term -> params scoring ``f32(w·t)`` for precomputed float32 leaf
-        weights (unit weights, NearestFuzzyQuery's df=1 leaves)."""
+        weights (NearestFuzzyQuery's df=1 leaves)."""
         self._require_bm25("precomputed leaf weights")
         return {
             t: self.similarity.weight_params(w, self.index.doc_count, self.index.sum_ttf)
             for t, w in weights.items()
         }
-
-    def _unit_params(self, terms) -> dict:
-        """Weight-1 params: the kernel then emits the unit score ``t``."""
-        return self._weight_params(dict.fromkeys(terms, 1.0))
 
     # ------------------------------------------------------------ leaf plans
     def _empty(self) -> DataFrame:
@@ -629,7 +642,7 @@ class IndexSearcher:
             total_b = float(np.float32(np.float32(boost * q.boost) * np.float32(b_t)))
             weights[t] = self._params(total_b, blended_df, blended_ttf)
         # SHOULD-sum: f32 leaf scores, double accumulation, f32 cast
-        # (DisjunctionSumScorer semantics, as in _eval_boolean)
+        # (DisjunctionSumScorer semantics, as in _matches)
         return (
             self._scored_postings(weights)
             .groupBy("doc_id")
@@ -1286,135 +1299,208 @@ class IndexSearcher:
             return leaves, len(leaves) + 1 if mm > 0 else len(leaves)
         return leaves, max(1, mm)
 
-    def _clause_rows(self, units: list, stats: dict, blocks: Optional[DataFrame] = None) -> DataFrame:
-        """``(doc_id, score, c)`` rows of a compound query's clause units —
-        the one postings read behind :meth:`_eval_boolean`,
-        :meth:`_eval_dismax` and :meth:`_eval_covering`.
+    def _unit(self, q: Query, boost: float, stats: dict) -> tuple:
+        """``(unit, need)`` of one clause: a (boosted) term is one leaf, a
+        one-level term group (:meth:`_term_group`) its leaves, and any other
+        query its evaluated ``(doc_id, score)`` frame."""
+        ft = self._flat_term(q, boost)
+        if ft:
+            return [ft], 1
+        return self._term_group(q, boost) or (self._evaluate(q, boost, stats), 1)
 
-        Unit ``c`` is a list of ``(term, boost)`` leaves or an already
-        evaluated ``(doc_id, score)`` frame, unioned in.  The reference walks
-        one postings iterator per clause in lock-step (``ConjunctionDISI``);
-        here the leaf terms of ALL units share one postings scan (read from
-        ``blocks``, the θ pre-pass survivors, when given) and each posting
-        row fans out to every unit leaf holding its term, so a repeated
-        clause matches once per clause.  A term already in the scan under
-        another weight gets its own scan, unioned in the same way."""
-        scans: list = []  # (term -> params, term -> [unit per leaf])
+    def _query_units(self, q: Query, boost: float, stats: dict) -> tuple:
+        """``(units, mm, tie)``: the clause units ``(occur, unit, need)`` of
+        one query and how :meth:`_matches` combines their hits.
+
+        A boolean gives one unit per clause, its FILTERs as cached doc sets
+        (:meth:`cached_filter`) scoring 0, and ``mm`` at least 1 when no
+        clause is required.  A dismax gives one SHOULD unit per disjunct,
+        ``mm`` 1 and its ``tie``.  Any other query is one MUST unit.  A MUST
+        leaf unit whose present terms cannot reach its ``need`` leaves no
+        units at all: the query matches nothing."""
+        while isinstance(q, BoostQuery):
+            boost *= q.boost
+            q = q.query
+        if isinstance(q, DisjunctionMaxQuery):
+            return [("SHOULD", *self._unit(d, boost, stats)) for d in q.disjuncts], 1, float(q.tie_breaker)
+        if not isinstance(q, BooleanQuery):
+            return [("MUST", *self._unit(q, boost, stats))], 0, None
+        mm = q.minimum_should_match
+        if not q.by_occur("MUST") and not q.by_occur("FILTER"):
+            mm = max(1, mm)
+        units = [
+            (occur, *self._unit(sub, boost if occur != "MUST_NOT" else 1.0, stats))
+            for occur in ("MUST", "SHOULD", "MUST_NOT")
+            for sub in q.by_occur(occur)
+        ]
+        for occur, unit, need in units:
+            if occur == "MUST" and isinstance(unit, list) and sum(t in stats for t, _ in unit) < need:
+                return [], 0, None
+        zero = F.lit(0.0).cast("float").alias("score")
+        units += [("FILTER", self.cached_filter(sub).select("doc_id", zero), 1) for sub in q.by_occur("FILTER")]
+        return units, mm, None
+
+    def _leaf_scan(self, b: float, term: str, stats: dict) -> tuple:
+        """``(scan params, scale)`` of one leaf (``Similarity.scan_params``)."""
+        return self.similarity.scan_params(self._leaf_w(b, term, stats))
+
+    def _clause_table(self, queries: dict, stats: dict, boost: float = 1.0) -> tuple:
+        """The one clause table of :meth:`search`, :meth:`batch_search` and
+        every nested boolean, dismax and covering query: ``(units, rules,
+        clause_rows, meta_rows)``.
+
+        Query ``qc`` (a dense int code; the string ids travel in
+        ``meta_rows``) gets its :meth:`_query_units` as ``units`` ``(qc, c,
+        unit)`` for :meth:`_clause_rows`, with ``c`` a dense unit code over
+        the whole table, and ``rules[c]`` ``(occ, need, n_req, mm, tie)``
+        for :meth:`_matches`.  ``clause_rows`` ``(qc,
+        term, occ, w, scan params)`` and ``meta_rows`` ``(qc, [query ids],
+        n_req, mm)`` are the θ pre-pass input
+        (:meth:`_batch_pruned_postings`): ``w`` is the leaf's scale, or 0
+        (never pruned) for a leaf with boost <= 0 or of a query that is not
+        a flat term boolean, since only those can prove a match from their
+        sampled term rows.
+
+        Identical queries share ONE code: real batches repeat queries (the
+        Solr queryResultCache observation), and every duplicate would
+        multiply the (qc, doc) exchange volume for free — their ids fan back
+        out on the k-row result join."""
+        units, rules, clause_rows, meta_rows = [], [], [], []
+        codes: dict = {}
+        for qid, q in queries.items():
+            key = repr(q)  # value identity, lists inside queries included
+            if key in codes:
+                meta_rows[codes[key]][1].append(str(qid))
+                continue
+            qc = codes[key] = len(meta_rows)
+            q_units, mm, tie = self._query_units(q, boost, stats)
+            n_req = sum(o in ("MUST", "FILTER") for o, _, _ in q_units)
+            flat = tie is None and all(isinstance(u, list) and len(u) == 1 for _, u, _ in q_units)
+            for occur, unit, need in q_units:
+                units.append((qc, len(units), unit))
+                rules.append((_OCC_CODE[occur], need, n_req, mm, tie))
+                for t, b in unit if isinstance(unit, list) else ():
+                    if t in stats:
+                        sp, scale = self._leaf_scan(b, t, stats)
+                        clause_rows.append((qc, t, _OCC_CODE[occur], scale if flat and b > 0 else 0.0, sp))
+            meta_rows.append((qc, [str(qid)], n_req, mm))
+        return units, rules, clause_rows, meta_rows
+
+    def _clause_rows(self, units: list, stats: dict, blocks=None, clause_theta=None) -> DataFrame:
+        """``(qc, doc_id, c, score)`` rows of clause units tagged ``(qc,
+        c)``, query ``qc``'s unit ``c`` — the one postings read behind
+        :meth:`_matches`.
+
+        A unit is a list of ``(term, boost)`` leaves or an already evaluated
+        ``(doc_id, score)`` frame, unioned in.  The reference walks one
+        postings iterator per clause in lock-step (``ConjunctionDISI``);
+        here the leaf terms of ALL units share one postings scan per
+        distinct scan-param set (``Similarity.scan_params``: one for the
+        BM25 family, whatever the boosts), read from ``blocks`` (the θ
+        pre-pass survivors) when given.  A literal ``term -> leaves`` map
+        fans each posting out to every leaf holding its term (no join, no
+        job), scored ``f32(scale · score)``, so a repeated clause matches
+        once per clause; a pair scoring below its ``clause_theta`` ``(qc,
+        term)`` threshold is cut before the exchange."""
+        clause_theta = clause_theta or {}
+        scans: list = []  # (term -> scan params, term -> leaf structs)
         parts = []
-        for c, unit in enumerate(units):
+        for qc, c, unit in units:
             if isinstance(unit, DataFrame):
-                parts.append(unit.select("doc_id", "score", F.lit(c).alias("c")))
+                parts.append(unit.select(F.lit(qc).alias("qc"), "doc_id", F.lit(c).alias("c"), "score"))
                 continue
             for t, b in unit:
                 if t not in stats:
                     continue
-                p = self._leaf_w(b, t, stats)
-                for params, tags in scans:
-                    if params.get(t, p) == p:
+                sp, scale = self._leaf_scan(b, t, stats)
+                for params, fan in scans:
+                    if params.get(t, sp) == sp:
                         break
                 else:
-                    params, tags = {}, {}
-                    scans.append((params, tags))
-                params[t] = p
-                tags.setdefault(t, []).append(c)
-        for params, tags in scans:
-            fan_out = F.create_map(
-                *[x for t, cs in tags.items() for x in (F.lit(t), F.array(*map(F.lit, cs)))]
-            )
-            src = None if blocks is None else blocks.filter(F.col("term").isin(list(params)))
-            parts.append(
-                self._scored_postings(params, src).select(
-                    "doc_id", "score", F.explode(fan_out[F.col("term")]).alias("c")
+                    params, fan = {}, {}
+                    scans.append((params, fan))
+                params[t] = sp
+                fan.setdefault(t, []).append(
+                    f"named_struct('qc', {qc}, 'c', {c}, 'scale', {_sql_lit(scale, 'FLOAT')}, "
+                    f"'theta', {_sql_lit(clause_theta.get((qc, t)), 'DOUBLE')})"
                 )
+        for params, fan in scans:
+            src = None if blocks is None else blocks.filter(F.col("term").isin(list(params)))
+            entries = [f"{_sql_lit(t, 'STRING')}, array({', '.join(leaves)})" for t, leaves in fan.items()]
+            fan_out = F.expr(f"map({', '.join(entries)})")
+            rows = self._scored_postings(params, src).select(
+                "doc_id", "score", F.explode(fan_out[F.col("term")]).alias("leaf")
+            )
+            if clause_theta:
+                theta = F.col("leaf.theta")
+                rows = rows.filter(theta.isNull() | (F.col("score").cast("double") >= theta))
+            parts.append(
+                rows.select("leaf.qc", "doc_id", "leaf.c", (F.col("leaf.scale") * F.col("score")).alias("score"))
             )
         if not parts:
-            return self._local_frame([], "doc_id bigint, score float, c int")
+            return self._local_frame([], "qc int, doc_id bigint, c int, score float")
         out = parts[0]
         for part in parts[1:]:
             out = out.unionByName(part)
         return out
 
-    @staticmethod
-    def _unit_sums(ids) -> list:
-        """Per-unit double sum ``s{i}`` and row count ``n{i}`` aggregates over
-        :meth:`_clause_rows` rows — conditional aggregates, so every unit's
-        totals come out of ONE groupBy(doc_id), one shuffle."""
-        out = []
-        for i in ids:
-            on = F.col("c") == i
-            out.append(F.sum(F.when(on, F.col("score").cast("double"))).alias(f"s{i}"))
-            out.append(F.count(F.when(on, F.lit(1))).alias(f"n{i}"))
-        return out
+    def _matches(self, units: list, rules: list, stats: dict, blocks=None, clause_theta=None) -> DataFrame:
+        """``(qc, _salt, doc_id, ns, score)`` of every doc each query of a
+        :meth:`_clause_table` matches: BooleanWeight
+        (``Boolean2ScorerSupplier.java:93-188``) for one query or a batch,
+        as two aggregations over ONE exchange.
 
-    def _eval_boolean(
-        self, q: BooleanQuery, boost: float, stats: dict, blocks: Optional[DataFrame] = None
-    ) -> DataFrame:
-        """BooleanWeight (``Boolean2ScorerSupplier.java:93-188``) over clause
-        units: ONE :meth:`_clause_rows` read, ONE groupBy(doc_id) with a sum
-        and a count per unit, and the clause rules as column predicates.
+        The :meth:`_clause_rows` rows are hash-partitioned on ``(qc,
+        _salt)`` with ``_salt = doc_id % 32``, a pure function of doc_id,
+        which clusters both aggregations and the batch's salted window:
 
-        A unit is all flat term clauses of one occur (each term one clause;
-        their scores add straight into the top-level double sum), a
-        one-level term group (:meth:`_term_group`, float32-rounded at its
-        boundary) or any other clause's evaluated frame.  The top level sums
-        in double and casts once — bit-identical to evaluating each clause
-        separately.  FILTERs are cached doc-set semi-joins; beside optional
-        SHOULD clauses (no MUST, mm 0) the filter docs join as a zero-score
-        unit, since FILTER is required and SHOULD stays optional
-        (ReqOptSumScorer scores a filter-only doc 0).  ``blocks`` (the θ
-        pre-pass survivors, see :meth:`search`) replaces the full postings
-        scan; nothing else differs."""
-        must, filters = q.by_occur("MUST"), q.by_occur("FILTER")
-        mm = q.minimum_should_match
-        if not must and not filters:
-            mm = max(1, mm)
-        filter_base = bool(filters) and not must and mm <= 0
-        if not (must or q.by_occur("SHOULD") or filter_base):
-            return self._empty()  # pure MUST_NOT, or FILTERs with mm > 0 and no SHOULD
-        filter_ids = [self.cached_filter(sub) for sub in filters]
-        units, rules = [], []  # rules[i] = (occur, need, rounded); rounded None: flat terms
-        for occur in ("MUST", "SHOULD", "MUST_NOT"):
-            b = boost if occur != "MUST_NOT" else 1.0
-            flat = []
-            for sub in q.by_occur(occur):
-                ft = self._flat_term(sub, b)
-                group = None if ft else self._term_group(sub, b)
-                if ft:
-                    flat.append(ft)
-                elif group:
-                    units.append(group[0])
-                    rules.append((occur, group[1], True))
-                else:
-                    units.append(self._evaluate(sub, b, stats))
-                    rules.append((occur, 1, False))
-            if flat:
-                units.append(flat)
-                rules.append((occur, len(flat) if occur == "MUST" else 1, None))
-        if filter_base:
-            units.append(filter_ids[0].select("doc_id", F.lit(0.0).cast("float").alias("score")))
-            rules.append(("FILTER", 1, False))
-        agg = self._clause_rows(units, stats, blocks).groupBy("doc_id").agg(*self._unit_sums(range(len(units))))
+        1. ``groupBy(qc, _salt, doc_id, c)``: unit ``c`` hits a doc holding
+           ``need`` of its rows and scores the float32 round of their double
+           sum (a one-row unit rounds to itself); ``rules[c]`` is read from
+           literal arrays indexed by ``c`` (a broadcast join of the rule
+           table would cost a Spark job per search);
+        2. ``groupBy(qc, _salt, doc_id)``: every MUST and FILTER unit hits
+           (``n_req``), no MUST_NOT unit does, and at least ``mm`` SHOULD
+           units do (``ns``).  The MUST and SHOULD hit scores add in double
+           — for a dismax (``tie`` not null), their max ``m`` plus ``tie·(s
+           − m)`` — with one float32 cast; a FILTER-only match scores 0."""
+        if not rules:
+            return self._local_frame([], "qc int, _salt int, doc_id bigint, ns bigint, score float")
+        M, S, FL, MN = (_OCC_CODE[o] for o in ("MUST", "SHOULD", "FILTER", "MUST_NOT"))
+        rule = {
+            name: F.expr(f"array({', '.join(_sql_lit(v, kind) for v in values)})[c]")
+            for name, kind, values in zip(
+                ("occ", "need", "n_req", "mm", "tie"), ("INT", "INT", "INT", "INT", "DOUBLE"), zip(*rules)
+            )
+        }
+        occ = F.col("occ")
+        unit_score = F.when(occ <= S, F.col("s").cast("float").cast("double"))
+        agg = (
+            self._clause_rows(units, stats, blocks, clause_theta)
+            .withColumn("_salt", F.pmod(F.col("doc_id"), F.lit(32)).cast("int"))
+            .repartition("qc", "_salt")
+            .groupBy("qc", "_salt", "doc_id", "c")
+            .agg(F.sum(F.col("score").cast("double")).alias("s"), F.count("*").alias("n"))
+            .withColumns(rule)
+            .filter(F.col("n") >= F.col("need"))
+            .groupBy("qc", "_salt", "doc_id", "n_req", "mm", "tie")
+            .agg(
+                F.count(F.when(occ.isin(M, FL), 1)).alias("nr"),
+                F.count(F.when(occ == S, 1)).alias("ns"),
+                F.count(F.when(occ == MN, 1)).alias("nn"),
+                F.sum(unit_score).alias("s"),
+                F.max(unit_score).alias("m"),
+            )
+        )
+        s, m, tie = F.coalesce(F.col("s"), F.lit(0.0)), F.col("m"), F.col("tie")
+        score = F.when(tie.isNull(), s).otherwise(m + tie * (s - m)).cast("float")
+        ok = (F.col("nr") == F.col("n_req")) & (F.col("nn") == 0) & (F.col("ns") >= F.col("mm"))
+        return agg.filter(ok).select("qc", "_salt", "doc_id", "ns", score.alias("score"))
 
-        cond, ns, score = F.lit(True), F.lit(0), F.lit(0.0)
-        for i, (occur, need, rounded) in enumerate(rules):
-            n, s = F.col(f"n{i}"), F.col(f"s{i}")
-            hit = n >= need
-            if occur == "MUST":
-                cond = cond & hit
-            elif occur == "MUST_NOT":
-                cond = cond & ~hit
-            elif occur == "SHOULD":
-                # each matching flat SHOULD term is one matched clause
-                ns = ns + (n if rounded is None else F.when(hit, 1).otherwise(0))
-            if occur in ("MUST", "SHOULD"):
-                # group boundary: float32 round of the group's double sum
-                score = score + F.when(hit, s.cast("float").cast("double") if rounded else s).otherwise(0.0)
-        if mm > 0:
-            cond = cond & (ns >= mm)
-        out = agg.filter(cond).select("doc_id", score.cast("float").alias("score"))
-        for ids in filter_ids:
-            out = out.join(ids, "doc_id", "left_semi")
-        return out
+    def _eval_compound(self, q: Query, boost: float, stats: dict) -> DataFrame:
+        """A boolean or dismax query evaluated as a batch of one."""
+        units, rules, _, _ = self._clause_table({0: q}, stats, boost)
+        return self._matches(units, rules, stats).select("doc_id", "score")
 
     def _eval_blended(self, q, boost: float, stats: dict) -> DataFrame:
         """BlendedTermQuery (BlendedTermQuery.java:274-284): every present
@@ -1422,7 +1508,7 @@ class IndexSearcher:
         ttf = Σ ttf_i, then combined per the rewrite — DisjunctionMax with
         tie 0.01f (:183) or boolean SHOULD-sum (:133).  ONE postings scan for
         all terms (the per-term weight differs only by boost), then one
-        groupBy — same physical shape as _eval_dismax."""
+        groupBy."""
         present = [t for t in q.blend_terms if t in stats]
         if not present:
             return self._empty()
@@ -1446,43 +1532,6 @@ class IndexSearcher:
             F.sum(F.col("score").cast("double")).alias("s"),
         )
         return agg.select(
-            "doc_id", (F.col("m") + F.lit(tie) * (F.col("s") - F.col("m"))).cast("float").alias("score")
-        )
-
-    def _disjunct_scores(self, subs, boost: float, stats: dict) -> DataFrame:
-        """``(doc_id, m, s, n)``: the max, double sum and count of a doc's
-        matching clause scores (the DisjunctionMax and Covering scorers)
-        from ONE :meth:`_clause_rows` read and one groupBy(doc_id).  A term
-        or frame clause holds at most one row per doc; a one-level term
-        group (:meth:`_term_group`) gets its own sum and count and joins as
-        its float32-rounded score where it matches."""
-        units, groups = [], {}  # groups: unit -> leaves needed
-        for i, sub in enumerate(subs):
-            ft = self._flat_term(sub, boost)
-            group = None if ft else self._term_group(sub, boost)
-            if ft:
-                units.append([ft])
-            elif group:
-                units.append(group[0])
-                groups[i] = group[1]
-            else:
-                units.append(self._evaluate(sub, boost, stats))
-        single = F.when(~F.col("c").isin(list(groups)), F.col("score").cast("double"))
-        agg = self._clause_rows(units, stats).groupBy("doc_id").agg(
-            F.max(single).alias("m"), F.sum(single).alias("s"), F.count(single).alias("n"),
-            *self._unit_sums(groups),
-        )
-        m, s, n = F.col("m"), F.coalesce(F.col("s"), F.lit(0.0)), F.col("n")
-        for i, need in groups.items():
-            v = F.when(F.col(f"n{i}") >= need, F.col(f"s{i}").cast("float").cast("double"))
-            m, s, n = F.greatest(m, v), s + F.coalesce(v, F.lit(0.0)), n + v.isNotNull().cast("int")
-        return agg.select("doc_id", m.alias("m"), s.alias("s"), n.alias("n")).filter(F.col("n") > 0)
-
-    def _eval_dismax(self, q: DisjunctionMaxQuery, boost: float, stats: dict) -> DataFrame:
-        if not q.disjuncts:
-            return self._empty()
-        tie = float(q.tie_breaker)
-        return self._disjunct_scores(q.disjuncts, boost, stats).select(
             "doc_id", (F.col("m") + F.lit(tie) * (F.col("s") - F.col("m"))).cast("float").alias("score")
         )
 
@@ -1515,8 +1564,8 @@ class IndexSearcher:
             return self._eval_term(q, boost, stats)
         if isinstance(q, (FieldTermQuery, FieldInSetQuery, FieldRangeQuery)):
             return self._eval_field(q, boost)
-        if isinstance(q, BooleanQuery):
-            return self._eval_boolean(q, boost, stats)
+        if isinstance(q, (BooleanQuery, DisjunctionMaxQuery)):
+            return self._eval_compound(q, boost, stats)
         if isinstance(q, SynonymQuery):
             return self._eval_synonym(q, boost, stats)
         if isinstance(q, PhraseQuery):
@@ -1560,8 +1609,6 @@ class IndexSearcher:
             else:
                 child = self._evaluate(q.query, 1.0, stats)
             return child.select("doc_id", F.lit(float(boost * q.boost)).cast("float").alias("score"))
-        if isinstance(q, DisjunctionMaxQuery):
-            return self._eval_dismax(q, boost, stats)
         if isinstance(q, BlendedTermQuery):
             return self._eval_blended(q, boost, stats)
         if isinstance(q, CommonTermsQuery):
@@ -1637,15 +1684,16 @@ class IndexSearcher:
             raise ValueError("too many clauses")
         if self.corpus is None:
             raise ValueError("CoveringQuery requires a searcher bound to a corpus")
-        agg = self._disjunct_scores(q.queries, boost, stats)
+        units, rules, _, _ = self._clause_table({0: BooleanQuery.build(should=q.queries)}, stats, boost)
         mm = self.corpus.select(
             F.col(self.index.config.id_col).cast("long").alias("doc_id"),
             F.expr(q.min_match_expr).cast("long").alias("mm"),
         ).filter(F.col("mm").isNotNull())
         return (
-            agg.join(mm, "doc_id")
-            .filter(F.col("n") >= F.greatest(F.lit(1), F.col("mm")))
-            .select("doc_id", F.col("s").cast("float").alias("score"))
+            self._matches(units, rules, stats)
+            .join(mm, "doc_id")
+            .filter(F.col("ns") >= F.greatest(F.lit(1), F.col("mm")))
+            .select("doc_id", "score")
         )
 
     # -------------------------------------------------------- pruned paths
@@ -1698,33 +1746,12 @@ class IndexSearcher:
         ).first()
         return {name: int(row[name] or 0) for name in row.asDict()}
 
-    def _single_clause_group(self, flat: tuple, stats: dict) -> tuple:
-        """One flat term query (:meth:`_flat_clauses` ``flat``) as a
-        one-group clause table for the shared θ pre-pass
-        (:meth:`_batch_pruned_postings`): ``(clause_rows, meta_rows,
-        params)`` with the query's own leaf params and clause scale 1, so
-        single-search pruning holds for every (monotone) similarity.  A
-        repeated term (one param set per term) yields no rows, i.e. no
-        pruning."""
-        leaves, n_req, mm = flat
-        present = [(o, t, b) for o, t, b in leaves if t in stats]
-        if len({t for _, t, _ in leaves}) < len(leaves):
-            present = []
-        rows = [
-            (0, t, _OCC_CODE[o], 1.0 if o in ("MUST", "SHOULD") and b > 0 else 0.0)
-            for o, t, b in present
-        ]
-        params = {t: self._leaf_w(b, t, stats) for _, t, b in present}
-        return rows, [(0, [], n_req, mm)], params
-
-    def _prune_report(self, clause_rows, meta_rows, stats: dict, k: int, params=None) -> tuple:
+    def _prune_report(self, clause_rows, meta_rows, stats: dict, k: int) -> tuple:
         """The metrics body shared by :meth:`prune_metrics` and
         :meth:`batch_prune_metrics`: runs the θ pre-pass the search would run
         and returns ``(metrics, blocks, clause_theta)``."""
         out: dict = {}
-        blocks, clause_theta = self._batch_pruned_postings(
-            clause_rows, meta_rows, stats, k, params, metrics_out=out
-        )
+        blocks, clause_theta = self._batch_pruned_postings(clause_rows, meta_rows, stats, k, metrics_out=out)
         if blocks is None and not clause_theta:
             return {"pruning_applied": False}, None, {}
         out["pruning_applied"] = True
@@ -1742,12 +1769,11 @@ class IndexSearcher:
         (``ImpactsDISI.java:94-126``).  ``pruning_applied=False`` when
         search() scans exhaustively (cost gate, delete cap, or a query no
         θ can cut)."""
-        flat = self._flat_clauses(query)
-        if flat is None:
+        if self._flat_clauses(query) is None:
             raise ValueError("prune metrics apply to a term or a flat boolean of terms")
         stats = self._term_stats(query.terms())
-        rows, meta, params = self._single_clause_group(flat, stats)
-        return self._prune_report(rows, meta, stats, k, params)[0]
+        _, _, rows, meta = self._clause_table({0: query}, stats)
+        return self._prune_report(rows, meta, stats, k)[0]
 
     def _driver_gate(self, n_post: int, k: int, exclude) -> Optional[tuple]:
         """The pending-deleted doc ids when a driver path may run: its
@@ -1838,11 +1864,11 @@ class IndexSearcher:
 
         With ``prune``, the first path that applies answers:
 
-        1. the θ pre-pass, for a term or flat term boolean whose postings
-           reach the cost gate ``prune_min_postings``: the surviving blocks
-           feed the same single-scan evaluator; the exclusions bound k like
-           pending deletes do (an excluded doc sampled into θ could
-           otherwise hold a top-k slot);
+        1. the θ pre-pass (:meth:`_batch_pruned_postings`), for a term or
+           flat term boolean whose postings reach the cost gate
+           ``prune_min_postings``: the surviving blocks feed path 4; the
+           exclusions bound k like pending deletes do (an excluded doc
+           sampled into θ could otherwise hold a top-k slot);
         2. the driver path (:meth:`_driver_top_k`), for one whose postings
            (Σdf) fit ``_DRIVER_MAX_POSTINGS``: one pull of the blocks, numpy
            scoring, no scoring job or exchange;
@@ -1851,8 +1877,11 @@ class IndexSearcher:
            positions whose occurrences (Σttf) fit the same budget: one pull
            of the positional blocks and a numpy phrase matcher, no persist,
            join or scoring UDF;
-        4. the distributed evaluator — every other query, every sloppy
-           phrase, and every query with ``prune=False`` (the reference arm).
+        4. a batch of one — every other query, every sloppy phrase, and
+           every query with ``prune=False`` (the reference arm, without the
+           pre-pass): the :meth:`batch_search` clause table
+           (:meth:`_clause_table`) and evaluator (:meth:`_matches`), ending
+           in ``orderBy().limit()`` (TakeOrderedAndProject).
 
         Both driver paths also need k + exclusions + pending deletes ≤
         ``_MAX_PRUNE_K``."""
@@ -1868,14 +1897,16 @@ class IndexSearcher:
         else:
             ranked = self._driver_phrase_top_k(query, stats, k, exclude_doc_ids) if prune else None
         if ranked is None:
-            blocks = None
-            if flat is not None:
-                rows, meta, params = self._single_clause_group(flat, stats)
-                blocks, _ = self._batch_pruned_postings(rows, meta, stats, k + len(exclude_doc_ids), params)
-            if blocks is None:
-                scored = self._evaluate(query, 1.0, stats)
+            units, rules, clause_rows, meta_rows = self._clause_table({0: query}, stats)
+            blocks, clause_theta = None, {}
+            if prune:
+                blocks, clause_theta = self._batch_pruned_postings(
+                    clause_rows, meta_rows, stats, k + len(exclude_doc_ids)
+                )
+            if rules == [(_OCC_CODE["MUST"], 1, 1, 0, None)] and isinstance(units[0][2], DataFrame):
+                scored = units[0][2]  # one MUST frame (a phrase, a span, ...) is its own answer
             else:
-                scored = self._eval_boolean(*self._as_boolean(query), stats, blocks)
+                scored = self._matches(units, rules, stats, blocks, clause_theta).select("doc_id", "score")
             if exclude_doc_ids:
                 scored = scored.filter(~F.col("doc_id").isin([int(d) for d in exclude_doc_ids]))
             if self.index.deletes is not None:
@@ -3071,21 +3102,22 @@ class IndexSearcher:
         return self.spark.createDataFrame(rows, "rank int, doc_id long, elevated boolean")
 
     def _batch_pruned_postings(
-        self, clause_rows: list, meta_rows: list, stats: dict, k: int,
-        params: Optional[dict] = None, metrics_out: Optional[dict] = None,
+        self, clause_rows: list, meta_rows: list, stats: dict, k: int, metrics_out: Optional[dict] = None
     ) -> tuple:
         """The block-max θ pre-pass (reference ``ImpactsDISI.java:94-126``)
         of both :meth:`batch_search` and :meth:`search`: without it every
         posting of the query terms is unpacked and scored, the one plan that
         stays linear in corpus postings at scale.
 
-        ``clause_rows`` ``(qc, term, occ, w)`` and ``meta_rows`` ``(qc,
-        qids, n_req, mm)`` are the clause groups; a clause scores
-        ``f32(w)·s`` where ``s`` is the posting's score under ``params``
-        (default: unit params — the batch, whose ``w`` is the leaf weight;
-        a single search passes its own leaf params and ``w`` = 1).  ``k`` is
-        the caller's bound (k plus exclusions); pending deletes widen it
-        here.
+        ``clause_rows`` ``(qc, term, occ, w, sp)`` and ``meta_rows`` ``(qc,
+        qids, n_req, mm)`` are the clause groups of :meth:`_clause_table`; a
+        clause scores ``f32(w)·s`` where ``s`` is the posting's score under
+        its term's scan params ``sp`` (``Similarity.scan_params``: unit
+        params and the leaf weight as ``w`` for the BM25 family, the leaf's
+        own params and ``w`` = 1 otherwise).  A term scanned under more than
+        one param set is never pruned, and no group holding it gets a finite
+        θ.  ``k`` is the caller's bound (k plus exclusions); pending deletes
+        widen it here.
 
         Scheme:
         1. per-block upper bound ``ub`` from (max_tf, min_norm) — sound for
@@ -3135,27 +3167,22 @@ class IndexSearcher:
         scores."""
         from collections import defaultdict
 
-        terms_needed = sorted({t for _, t, _, _ in clause_rows})
+        terms_needed = sorted({t for _, t, _, _, _ in clause_rows})
         if not terms_needed or sum(int(stats[t][0]) for t in terms_needed) < self.prune_min_postings:
-            return None, {}
-        # pending deletes: a deleted doc in the sample inflates θ above the
-        # best LIVE scores and would prune the blocks holding them.  Enlarge
-        # k by the delete count; past the cap the sample would cost more
-        # than it saves — run exhaustive until expunge reclaims them
-        k = k + self._deletes_count()
-        if k > _MAX_PRUNE_K:
             return None, {}
 
         by_q: dict = defaultdict(list)
-        for qc, t, occ, w in clause_rows:
+        scan: dict = defaultdict(set)  # term -> its scan params
+        for qc, t, occ, w, sp in clause_rows:
             by_q[qc].append((t, occ, float(np.float32(w))))
+            scan[t].add(sp)
         meta_by_q = {qc: (n_req, mm) for qc, _, n_req, mm in meta_rows}
         M, S = _OCC_CODE["MUST"], _OCC_CODE["SHOULD"]
         FL, MN = _OCC_CODE["FILTER"], _OCC_CODE["MUST_NOT"]
         proof: dict = {}  # qc -> its scoring clauses, when they prove a match
         for qc, leaves in by_q.items():
             n_req, mm = meta_by_q[qc]
-            if any(o == MN for _, o, _ in leaves):
+            if any(o == MN or len(scan[t]) > 1 for t, o, _ in leaves):
                 continue
             scoring = [(t, o, w) for t, o, w in leaves if o in (M, S) and w > 0]
             if (n_req == 0 and mm <= 1) or (
@@ -3164,10 +3191,17 @@ class IndexSearcher:
                 proof[qc] = scoring
         if not any(proof.values()):
             return None, {}  # no group can get a finite θ: skip the sample
+        # pending deletes: a deleted doc in the sample inflates θ above the
+        # best LIVE scores and would prune the blocks holding them.  Enlarge
+        # k by the delete count; past the cap the sample would cost more
+        # than it saves — run exhaustive until expunge reclaims them
+        k = k + self._deletes_count()
+        if k > _MAX_PRUNE_K:
+            return None, {}
 
         # phases 1-2: top blocks per term (tiny — block summaries only),
         # exact scores from the sampled payloads
-        sampled = self._theta_block_sample(params or self._unit_params(terms_needed), k)
+        sampled = self._theta_block_sample({t: min(sps) for t, sps in scan.items()}, k)
         if sampled is None:
             return None, {}
         with_ub, umax, sample = sampled
@@ -3185,7 +3219,12 @@ class IndexSearcher:
         clause_theta: dict = {}  # (qc, term) -> posting-level threshold
         thetas = []
         for qc, leaves in by_q.items():
-            hits = [(o, by_term[t][0], by_term[t][1] * w) for t, o, w in proof.get(qc, ()) if t in by_term]
+            # leaf scores f32(w·s), as the engine computes them
+            hits = [
+                (o, by_term[t][0], (by_term[t][1] * w).astype(np.float32))
+                for t, o, w in proof.get(qc, ())
+                if t in by_term
+            ]
             _, sums = _flat_group_scores(hits, *meta_by_q[qc])
             theta_q = -math.inf
             if 0 < k <= len(sums):
@@ -3232,7 +3271,7 @@ class IndexSearcher:
         :meth:`prune_metrics` report over the batch's clause table, plus
         the clause-pair cut.  ``pruning_applied=False`` when the cost gate /
         threshold analysis chose the exhaustive scan."""
-        clause_rows, meta_rows, stats = self._batch_clause_table(queries)
+        _, _, clause_rows, meta_rows, stats = self._batch_clause_table(queries)
         out, blocks, clause_theta = self._prune_report(clause_rows, meta_rows, stats, k)
         if not out["pruning_applied"]:
             return out
@@ -3240,11 +3279,10 @@ class IndexSearcher:
         # cut) measured on the actual scored stream × clause fan-out.  One
         # conjunction in the batch can zero the BLOCK skip (every block must
         # unpack) while this filter still removes most exchange rows.
-        terms_needed = sorted({t for _, t, _, _ in clause_rows})
-        scored = self._scored_postings(self._unit_params(terms_needed), blocks).select("term", "score")
+        scan = {t: sp for _, t, _, _, sp in clause_rows}
+        scored = self._scored_postings(scan, blocks).select("term", "score")
         cl = self._local_frame(
-            [(t, clause_theta.get((qc, t))) for qc, t, _occ, _w in clause_rows],
-            "term string, theta double",
+            [(t, clause_theta.get((qc, t))) for qc, t, *_ in clause_rows], "term string, theta double"
         )
         pair_row = (
             scored.join(F.broadcast(cl), "term")
@@ -3266,26 +3304,19 @@ class IndexSearcher:
         )
         return out
 
-    @staticmethod
-    def _as_boolean(q: Query) -> tuple:
-        """``(BooleanQuery, boost)`` view of a (BoostQuery-wrapped) term or
-        boolean — a term is a one-MUST boolean; other shapes give ``(None,
-        boost)``."""
+    def _flat_clauses(self, q: Query) -> Optional[tuple]:
+        """``(leaves, n_req, mm)`` for a term or a flat boolean of (possibly
+        boosted) terms — the shape the clause-table θ analysis covers — with
+        leaves ``(occur, term, boost)`` (FILTER/MUST_NOT boosts are 1) and
+        ``mm`` normalized as in :meth:`_query_units`; None otherwise.  A
+        term is a one-MUST boolean."""
         boost = 1.0
         while isinstance(q, BoostQuery):
             boost *= q.boost
             q = q.query
         if isinstance(q, TermQuery):
             q = BooleanQuery.build(must=[q])
-        return (q if isinstance(q, BooleanQuery) else None), boost
-
-    def _flat_clauses(self, q: Query) -> Optional[tuple]:
-        """``(leaves, n_req, mm)`` for a term or a flat boolean of (possibly
-        boosted) terms — the shape the clause-table θ analysis covers — with
-        leaves ``(occur, term, boost)`` (FILTER/MUST_NOT boosts are 1) and
-        ``mm`` normalized as in :meth:`_eval_boolean`; None otherwise."""
-        q, boost = self._as_boolean(q)
-        if q is None:
+        if not isinstance(q, BooleanQuery):
             return None
         mm = q.minimum_should_match
         if not q.by_occur("MUST") and not q.by_occur("FILTER"):
@@ -3311,162 +3342,57 @@ class IndexSearcher:
         )
 
     def _batch_clause_table(self, queries: dict) -> tuple:
-        """Normalize a batch query dict into the flat clause/meta tables the
-        batch plan ships (shared by batch_search and batch_prune_metrics).
-        Returns (clause_rows, meta_rows, stats) with meta_rows =
-        ``(qc, [query_ids], n_req, mm)``; queries that provably match
-        nothing (absent required term) are dropped here.
-
-        Identical queries share ONE clause group: real batches repeat
-        queries (the Solr queryResultCache observation), and every duplicate
-        multiplies the (qc, doc) exchange volume for free — so queries with
-        the same normalized clause signature are planned once and their
-        query_ids fan back out on the k-row result join.  The clause weights
-        factor the leaf score as ``f32(w·t)``, which holds for the BM25
-        similarity family only."""
-        self._require_bm25("batch_search")
-        all_terms: set = set()
-        for q in queries.values():
-            all_terms |= q.terms()
-        stats = self._term_stats(all_terms)
-
-        clause_rows: list = []  # (qc, term, occur_code, weight)
-        meta_rows: list = []  # (qc, [qids], n_req, mm)
-        sig_to_qc: dict = {}
-        for qid, q in queries.items():
-            flat = self._flat_clauses(q)
-            if flat is None:
-                raise NotImplementedError(f"batch_search: {type(q).__name__} is not flat terms")
-            if not self._may_match(flat, stats):
-                continue
-            leaves, n_req, mm = flat
-            rows = []
-            for occur, t, b in leaves:
-                if t not in stats:
-                    continue
-                w = self._leaf_w(b, t, stats)[0] if occur in ("MUST", "SHOULD") else 0.0
-                rows.append((t, _OCC_CODE[occur], float(w)))
-            sig = (tuple(sorted(rows)), n_req, mm)
-            if sig in sig_to_qc:
-                meta_rows[sig_to_qc[sig]][1].append(str(qid))
-                continue
-            qc = len(meta_rows)  # dense int code; strings restored at the end
-            sig_to_qc[sig] = qc
-            clause_rows.extend((qc, t, occ, w) for t, occ, w in rows)
-            meta_rows.append((qc, [str(qid)], n_req, mm))
-        return clause_rows, meta_rows, stats
+        """``(units, rules, clause_rows, meta_rows, stats)`` of a batch: each
+        query span-rewritten as :meth:`search` does, the term stats of all of
+        them, and their :meth:`_clause_table`."""
+        queries = {qid: self._rewrite_span_multiterm(q) for qid, q in queries.items()}
+        stats = self._term_stats(set().union(*(q.terms() for q in queries.values())))
+        return (*self._clause_table(queries, stats), stats)
 
     def batch_search(self, queries: dict, k: int = 10) -> DataFrame:
         """Batched multi-query retrieval: evaluate MANY queries in ONE
         postings scan (no reference analog — at 10^12 docs this is the
         offline batch-retrieval pattern: N separate searches would read the
-        index N times; here the query set ships as a broadcast clause table
-        and the postings are read once).
+        index N times; here the query set ships inside the plan as literal
+        clause and rule tables and the postings are read once).
 
-        ``queries`` maps query_id -> Query, each a TermQuery or a flat
-        boolean of (possibly boosted) TermQueries (MUST/SHOULD/FILTER/
-        MUST_NOT + minimumNumberShouldMatch).  FILTER clauses are required
-        matches that contribute no score, exactly like the single-query path
-        (BooleanWeight: FILTER counts as a required clause, so SHOULD stays
-        optional when only FILTERs are present).  Returns (query_id, rank,
-        doc_id, score).
+        ``queries`` maps query_id -> any query :meth:`search` accepts, under
+        the searcher's similarity.  Every query is a set of clause units of
+        ONE :meth:`_clause_table` (a boolean one per clause, a dismax one per
+        disjunct, any other query one MUST unit); term leaves of all queries
+        share the scan (one per scan-param set: one for the BM25 family),
+        and other clauses (phrases, spans, FILTER doc sets, ...) join as
+        their evaluated frames.  Returns (query_id, rank, doc_id, score).
 
-        Float chain identical to the single-query path: postings are
-        unpacked once with unit weight (f32(1·t) == t), each clause applies
-        its own float32 weight, clause scores accumulate in double per
-        (query, doc), one float32 cast at the end — so every row is
-        bit-identical to ``search(queries[qid], k)``.  Plan: one scan →
-        broadcast join on term → groupBy(query, doc) → salted two-stage
-        per-query top-k (stage 1 bounds every sort task at top-k per
-        (query, doc_id%32), so one head query can't serialize the batch).
-        Query ids travel the hot exchanges as dense ints; strings are
-        restored on the k·|queries| result rows."""
+        Float chain identical to :meth:`search`, which runs the same
+        evaluator (:meth:`_matches`) as a batch of one: each leaf scores
+        ``f32(scale · s)`` with ``s`` its scan score (``Similarity.
+        scan_params``; for BM25, ``f32(w·t)`` from the unit score ``t``), a
+        unit's rows add in double and round to float32, unit scores add in
+        double per (query, doc), with one float32 cast at the end — so every
+        row is bit-identical to ``search(queries[qid], k)``.  Plan: θ
+        pre-pass, one scan, the fan-out to the leaves, one exchange on ``(qc,
+        _salt)`` feeding both aggregations and the salted two-stage
+        per-query top-k (stage 1 bounds every sort task at top-k per (query,
+        doc_id%32), so one head query can't serialize the batch).  Query ids
+        travel the hot exchange as dense ints; strings are restored on the
+        k·|queries| result rows."""
         from pyspark.sql.window import Window
 
-        clause_rows, meta_rows, stats = self._batch_clause_table(queries)
-        out_schema = "query_id string, rank int, doc_id long, score float"
-        if not clause_rows:
-            return self._local_frame([], out_schema)
-
-        meta = self._local_frame(
-            [(qc, n_req, mm) for qc, _, n_req, mm in meta_rows], "qc int, n_req int, mm int"
-        )
+        self.release_span_caches()
+        units, rules, clause_rows, meta_rows, stats = self._batch_clause_table(queries)
+        if not rules:
+            return self._local_frame([], "query_id string, rank int, doc_id long, score float")
         qid_map = self._local_frame(
-            [(qc, qid) for qc, qids, _, _ in meta_rows for qid in qids],
-            "qc int, query_id string",
+            [(qc, qid) for qc, qids, _, _ in meta_rows for qid in qids], "qc int, query_id string"
         )
-        terms_needed = sorted({t for _, t, _, _ in clause_rows})
-        # unit-weight unpack: emits t = f32(tf/(tf + cache[norm])) per posting.
-        # Block-max θ pruning first (the ImpactsDISI analog, batched): skip
-        # blocks no query in the batch can promote into its top-k; falls back
-        # to the exhaustive scan below the cost gate — bit-identical results
-        # either way (pinned by the prune-identity test).
+        # block-max θ pruning first (the ImpactsDISI analog, batched): skip
+        # blocks no query in the batch can promote into its top-k, and cut
+        # (posting, clause) pairs below their clause's θ before the exchange;
+        # falls back to the exhaustive scan below the cost gate —
+        # bit-identical results either way (pinned by the prune-identity test)
         blocks, clause_theta = self._batch_pruned_postings(clause_rows, meta_rows, stats, k)
-        scored = self._scored_postings(self._unit_params(terms_needed), blocks).select("term", "doc_id", "score")
-        # clause table rides the broadcast with its per-clause posting
-        # threshold: a (posting, clause) pair whose unit score is below the
-        # clause's θ cannot put its doc in THAT query's top-k (see
-        # _batch_pruned_postings), so it is cut map-side, before the
-        # exchange — this is what keeps one conjunction in the batch from
-        # forcing every other query to carry a shared term's full postings
-        clauses = self._local_frame(
-            [
-                (qc, t, occ, w, clause_theta.get((qc, t)))
-                for qc, t, occ, w in clause_rows
-            ],
-            "qc int, term string, occ int, w float, theta double",
-        )
-        joined = scored.join(F.broadcast(clauses), "term")
-        if clause_theta:
-            joined = joined.filter(
-                F.col("theta").isNull() | (F.col("score").cast("double") >= F.col("theta"))
-            )
-        # narrow exchange rows: int query code + int occur (an Arrow-side
-        # partition-local combiner was tried here and measured SLOWER than
-        # the exchanges it saved — Python ser/de of the full match stream is
-        # bandwidth-bound; the JVM shuffle of int-keyed rows is not)
-        per_clause = joined.select(
-            "qc",
-            "doc_id",
-            "occ",
-            (F.col("w") * F.col("score")).cast("float").alias("cscore"),
-        )
-        # ONE exchange for agg + stage-1 top-k: salt is a pure function of
-        # doc_id, so hash-partitioning on (qc, _salt) co-locates every
-        # (qc, doc_id) group (HashPartitioning(qc,_salt) satisfies the
-        # agg's ClusteredDistribution over the superset key (qc,_salt,
-        # doc_id)) AND already matches the stage-1 window's partitioning —
-        # the groupBy and the salted row_number run in the same stage with
-        # no further exchange, where the previous plan shuffled the match
-        # rows twice (hash(qc,doc_id) for the agg, then hash(qc,_salt) for
-        # the window).  Skew stays bounded: a head query spreads over 32
-        # salt groups either way.
-        pre = per_clause.withColumn(
-            "_salt", F.pmod(F.col("doc_id"), F.lit(32)).cast("int")
-        ).repartition("qc", "_salt")
-        agg = pre.groupBy("qc", "_salt", "doc_id").agg(
-            F.sum(F.when(F.col("occ") <= _OCC_CODE["SHOULD"], F.col("cscore").cast("double"))).alias("dscore"),
-            F.sum(F.when(F.col("occ").isin(_OCC_CODE["MUST"], _OCC_CODE["FILTER"]), 1).otherwise(0)).alias("nr"),
-            F.sum(F.when(F.col("occ") == _OCC_CODE["SHOULD"], 1).otherwise(0)).alias("ns"),
-            F.max(F.when(F.col("occ") == _OCC_CODE["MUST_NOT"], 1).otherwise(0)).alias("nn"),
-        )
-        # simple survivor groups pass this too: MUST ⇒ nr=1=n_req & mm<=0,
-        # SHOULD ⇒ nr=0=n_req & ns=1 >= mm (bypass required mm<=1)
-        cond = (
-            (F.col("nr") == F.col("n_req"))
-            & (F.col("nn") == 0)
-            & ((F.col("mm") <= 0) | (F.col("ns") >= F.col("mm")))
-        )
-        # dscore is NULL for FILTER-only matches — score 0.0, like the
-        # single-query path's filter-only branch
-        matched = (
-            agg.join(F.broadcast(meta), "qc")
-            .filter(cond)
-            .select(
-                "qc", "_salt", "doc_id",
-                F.coalesce(F.col("dscore"), F.lit(0.0)).cast("float").alias("score"),
-            )
-        )
+        matched = self._matches(units, rules, stats, blocks, clause_theta)
         if self.index.deletes is not None:  # live-docs filter, as in search()
             matched = matched.join(self.index.deletes.select("doc_id"), "doc_id", "left_anti")
 
@@ -3474,8 +3400,9 @@ class IndexSearcher:
         # the corpus, and a single per-query window would sort all its
         # matches in ONE task (the straggler that caps batch scaling).
         # Stage 1 takes top-k per (query, doc_id%32) — 32 bounded parallel
-        # sorts per query — stage 2 ranks the <= 32k survivors.  Output
-        # identical: every global top-k row is top-k in its salt group.
+        # sorts per query, in the partitions of the match exchange — stage 2
+        # ranks the <= 32k survivors.  Output identical: every global top-k
+        # row is top-k in its salt group.
         w_pre = Window.partitionBy("qc", "_salt").orderBy(F.desc("score"), F.asc("doc_id"))
         w = Window.partitionBy("qc").orderBy(F.desc("score"), F.asc("doc_id"))
         return (

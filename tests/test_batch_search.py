@@ -3,7 +3,7 @@ individual searches."""
 
 import pytest
 
-from lucene_solr_spark.plans.query import BooleanQuery, BoostQuery, PhraseQuery, TermQuery
+from lucene_solr_spark.plans.query import BooleanQuery, BoostQuery, DisjunctionMaxQuery, PhraseQuery, TermQuery
 
 
 def _hot(oracle, n=4):
@@ -46,9 +46,25 @@ def test_batch_matches_individual(searcher, oracle):
     assert "q_missing" not in by_q
 
 
-def test_batch_rejects_unsupported(searcher):
-    with pytest.raises(NotImplementedError):
-        searcher.batch_search({"p": PhraseQuery(("a", "b"))}, k=5)
+def test_batch_mixed_shapes(searcher, oracle):
+    """A batch holds any query search() accepts: a phrase (on this index
+    without positions, through the corpus verify pass), a term and a dismax
+    with a group disjunct run as one batch, each bit-identical to
+    search()."""
+    h = _hot(oracle)
+    queries = {
+        "phrase": PhraseQuery((h[0], h[1])),
+        "term": TermQuery(h[2]),
+        "dismax": DisjunctionMaxQuery(
+            (TermQuery(h[0]), BooleanQuery.build(should=[TermQuery(h[1]), TermQuery(h[3])])), tie_breaker=0.3
+        ),
+    }
+    by_q = {}
+    for r in searcher.batch_search(queries, k=10).collect():
+        by_q.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))
+    for qid, q in queries.items():
+        expect = [(i + 1, d, s) for i, (d, s) in enumerate(searcher.search(q, 10).collect())]
+        assert expect and sorted(by_q.get(qid, [])) == expect, qid
 
 
 def test_batch_single_scan_plan(spark, index8, tmp_path_factory):
@@ -61,6 +77,9 @@ def test_batch_single_scan_plan(spark, index8, tmp_path_factory):
     qs = {
         "a": TermQuery("the"),
         "b": BooleanQuery.build(must=[TermQuery("of")], should=[TermQuery("and")]),
+        # the same terms under other weights ride the same unit-weight scan
+        "c": BooleanQuery.build(should=[TermQuery("the", 2.0), TermQuery("of", 0.5)]),
+        "d": BoostQuery(BooleanQuery.build(must=[TermQuery("and", 3.0)], should=[TermQuery("and")]), 2.0),
     }
     plan = s.batch_search(qs, 10)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas fn(term") == 1, plan
@@ -251,7 +270,7 @@ def test_batch_dedups_identical_queries(zipf_index):
         "b": BooleanQuery.build(should=[TermQuery("mid"), TermQuery("tail3")]),
     }
     queries = {f"{name}_{i}": q for name, q in base.items() for i in range(4)}
-    clause_rows, meta_rows, _stats = s._batch_clause_table(queries)
+    *_, meta_rows, _stats = s._batch_clause_table(queries)
     assert len(meta_rows) == len(base)  # 8 queries -> 2 clause groups
     assert sorted(len(qids) for _, qids, _, _ in meta_rows) == [4, 4]
     by_q = {}
@@ -276,7 +295,7 @@ def test_batch_clause_theta_survives_conjunctions(zipf_index):
         "head": TermQuery("head"),
         "and": BooleanQuery.build(must=[TermQuery("head"), TermQuery("mid")]),
     }
-    clause_rows, meta_rows, stats = sp._batch_clause_table(queries)
+    *_, clause_rows, meta_rows, stats = sp._batch_clause_table(queries)
     survivors, clause_theta = sp._batch_pruned_postings(clause_rows, meta_rows, stats, 10)
     assert survivors is None  # the conjunction needs every block
     head_qc = next(qc for qc, qids, _, _ in meta_rows if qids == ["head"])
@@ -381,7 +400,8 @@ def test_flat_boolean_four_arms(spark, zipf_index, zipf_oracle, monkeypatch):
     (one batch of every query checked) and the scalar oracle — with random
     ``exclude_doc_ids`` on the single searches, and on searchers holding
     pending deletes below and above the 256 cap — and, under LM-Dirichlet,
-    from pruned, driver and exhaustive single search."""
+    from pruned, driver and exhaustive single search and one batch of every
+    query checked (gate 0, so its θ pre-pass runs)."""
     import dataclasses
 
     from hypothesis import HealthCheck, example, given, settings
@@ -407,6 +427,7 @@ def test_flat_boolean_four_arms(spark, zipf_index, zipf_oracle, monkeypatch):
         for ids in (range(0, 60, 12), range(300))
     ]
     drawn: dict = {}
+    lm_expect: dict = {}
     distributed: set = set()  # did the driver-arm query plan a postings decode?
 
     @settings(
@@ -440,6 +461,7 @@ def test_flat_boolean_four_arms(spark, zipf_index, zipf_oracle, monkeypatch):
         lm_want = lm.search(q, 10, prune=False).collect()
         assert lm.search(q, 10, prune=True).collect() == lm_want, q
         assert lmd.search(q, 10).collect() == lm_want, q
+        lm_expect[f"q{len(drawn)}"] = lm_want
         drawn[f"q{len(drawn)}"] = q
 
     check()
@@ -449,6 +471,11 @@ def test_flat_boolean_four_arms(spark, zipf_index, zipf_oracle, monkeypatch):
         got.setdefault(qid, []).append((d, sc))
     for qid, q in drawn.items():
         assert got.get(qid, []) == zipf_oracle.search(q, 10), q
+    got = {}
+    for qid, _rank, d, sc in _batch_rows(lm, drawn, 10):
+        got.setdefault(qid, []).append((d, sc))
+    for qid, q in drawn.items():
+        assert got.get(qid, []) == lm_expect[qid], q
 
 
 def _jobs(sc, fn) -> int:

@@ -77,6 +77,11 @@ def test_collect_only_on_small_relations():
                 raise AssertionError(f"{path}:{i} collects postings rows")
 
 
+def _match_exchanges(plan: str) -> int:
+    """Exchanges of a compound query's match rows (hash on the query code)."""
+    return len(re.findall(r"Exchange hashpartitioning\(qc", plan))
+
+
 def test_covering_single_scan(spark, index8, spark_corpus, tmp_path_factory):
     """All-term CoveringQuery: one postings decode + the tiny mm join."""
     from lucene_solr_spark.operators.indexer import InvertedIndex
@@ -96,6 +101,7 @@ def test_covering_single_scan(spark, index8, spark_corpus, tmp_path_factory):
         # exactly one postings decode; the corpus-side add_ids MapInPandas
         # (the fixture's doc-id assignment) is not a postings scan
         assert plan.count("MapInPandas fn(term") == 1, plan
+        assert _match_exchanges(plan) == 1, plan
 
 
 def test_boolean_and_dismax_single_scan(spark, index8, tmp_path_factory):
@@ -137,18 +143,22 @@ def test_boolean_and_dismax_single_scan(spark, index8, tmp_path_factory):
     assert plan.count("Scan parquet") == 1, plan
 
     # mixed shapes read every term leaf in that same one decode: a clause
-    # with no postings, a repeated term, a group inside a dismax
+    # with no postings, a repeated term (also under another weight), a
+    # group inside a dismax
     mixed = (
         BooleanQuery.build(must=[TermQuery("the"), TermQuery("and")], should=[MatchAllQuery()]),
         BooleanQuery.build(must=[TermQuery("the")], should=[TermQuery("the"), TermQuery("of")]),
+        BooleanQuery.build(must=[TermQuery("the", 2.0)], should=[TermQuery("the")]),
         DisjunctionMaxQuery(
             (BooleanQuery.build(should=[TermQuery("the"), TermQuery("qeli")]), TermQuery("of")),
             tie_breaker=0.5,
         ),
     )
-    for q in mixed:
+    for q in (q, dq, nested, *mixed):
         plan = _plan(s._evaluate(q, 1.0, s._term_stats(q.terms())))
         assert plan.count("MapInPandas fn(term") == 1, plan
+        # the match rows cross ONE exchange, into both aggregations
+        assert _match_exchanges(plan) == 1, plan
 
 
 

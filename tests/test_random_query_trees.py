@@ -80,24 +80,45 @@ def driver_searcher(index8, spark_corpus):
     return IndexSearcher(index8, spark_corpus)
 
 
-@settings(
-    max_examples=15,
-    deadline=None,
-    derandomize=True,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-@given(data=st.data())
-def test_random_tree_matches_oracle(data, searcher, driver_searcher, oracle, vocab):
+def _assert_batch(s, drawn: dict, want: dict) -> None:
+    """Every drawn query, run in ONE ``batch_search`` on ``s``, returns
+    exactly ``want[qid]``: its top 10 ``(doc_id, score)`` in rank order."""
+    got: dict = {}
+    for r in s.batch_search(drawn, k=10).collect():
+        got.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))
+    for qid, q in drawn.items():
+        assert [(d, sc) for _, d, sc in sorted(got.get(qid, []))] == want[qid], q
+
+
+def test_random_tree_matches_oracle(searcher, driver_searcher, oracle, vocab):
     """Every drawn tree, with random ``exclude_doc_ids`` among its top 15,
     on the gate-0 searcher (θ pre-pass for flat term trees) and, for flat
-    term trees, on the default-gate searcher (driver path)."""
-    q = data.draw(_tree(vocab))
-    ranked = oracle.search(q, 20)
-    ex = sorted({ranked[i][0] for i in data.draw(st.lists(st.integers(0, 14), max_size=3)) if i < len(ranked)})
-    expect = [(d, s) for d, s in ranked if d not in ex][:10]
-    flat = searcher._flat_clauses(q) is not None
-    for s in (searcher, driver_searcher) if flat else (searcher,):
-        assert s.search(q, 10, prune=True, exclude_doc_ids=ex).collect() == expect, (q, ex)
+    term trees, on the default-gate searcher (driver path).  Then all drawn
+    trees run as ONE batch on the gate-0 searcher, each equal to its
+    oracle top 10 (the answer search() gives without exclusions)."""
+    drawn: dict = {}
+    want: dict = {}
+
+    @settings(
+        max_examples=15,
+        deadline=None,
+        derandomize=True,
+        suppress_health_check=[HealthCheck.too_slow],
+    )
+    @given(data=st.data())
+    def check(data):
+        q = data.draw(_tree(vocab))
+        ranked = oracle.search(q, 20)
+        ex = sorted({ranked[i][0] for i in data.draw(st.lists(st.integers(0, 14), max_size=3)) if i < len(ranked)})
+        expect = [(d, s) for d, s in ranked if d not in ex][:10]
+        flat = searcher._flat_clauses(q) is not None
+        for s in (searcher, driver_searcher) if flat else (searcher,):
+            assert s.search(q, 10, prune=True, exclude_doc_ids=ex).collect() == expect, (q, ex)
+        want[f"q{len(drawn)}"] = ranked[:10]
+        drawn[f"q{len(drawn)}"] = q
+
+    check()
+    _assert_batch(searcher, drawn, want)
 
 
 def test_must_group_with_mm_matches_nothing(searcher, oracle, vocab):
@@ -149,14 +170,7 @@ def _top_phrase(vocab, real_phrases, twins):
     return st.one_of(st.sampled_from(real_phrases + twins), repeated, gapped)
 
 
-@settings(
-    max_examples=10,
-    deadline=None,
-    derandomize=True,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-@given(data=st.data())
-def test_random_phrase_trees_match_oracle(data, searcher, pos_searcher, oracle, vocab, real_phrases):
+def test_random_phrase_trees_match_oracle(searcher, pos_searcher, oracle, vocab, real_phrases):
     """Phrase leaves (exact phrases from real documents) and their
     one-term-per-slot MultiPhraseQuery twins inside random boolean trees.
     The positional index answers every tree through its one phrase path;
@@ -164,25 +178,45 @@ def test_random_phrase_trees_match_oracle(data, searcher, pos_searcher, oracle, 
     index without positions.  Each example also draws a top-level exact
     phrase leaf (:func:`_top_phrase`) with random ``exclude_doc_ids`` among
     its top 15: the driver phrase path (``prune=True``), the distributed
-    matcher (``prune=False``) and the oracle must agree bit for bit."""
+    matcher (``prune=False``) and the oracle must agree bit for bit.  Then
+    every drawn tree and top-level phrase runs as ONE batch on the
+    positional searcher, each equal to its oracle top 10."""
     twins = [MultiPhraseQuery(tuple((t,) for t in p.phrase_terms)) for p in real_phrases]
     leaf = st.one_of(st.sampled_from(real_phrases + twins), _leaf(vocab))
-    q = data.draw(
-        st.builds(
-            lambda must, should, mm: BooleanQuery.build(must=must, should=should, minimum_should_match=mm),
-            st.lists(leaf, max_size=2),
-            st.lists(leaf, max_size=2),
-            st.integers(min_value=0, max_value=2),
-        )
-    )
-    expect = [(d, s) for d, s in oracle.search(q, 10)]
-    assert pos_searcher.search(q, 10, prune=True).collect() == expect, q
-    if not any(isinstance(c.query, MultiPhraseQuery) for c in q.clauses):
-        assert searcher.search(q, 10, prune=True).collect() == expect, q
+    drawn: dict = {}
+    want: dict = {}
 
-    top = data.draw(_top_phrase(vocab, real_phrases, twins))
-    ranked = oracle.search(top, 20)
-    ex = sorted({ranked[i][0] for i in data.draw(st.lists(st.integers(0, 14), max_size=3)) if i < len(ranked)})
-    expect = [(d, s) for d, s in ranked if d not in ex][:10]
-    for prune in (True, False):
-        assert pos_searcher.search(top, 10, prune=prune, exclude_doc_ids=ex).collect() == expect, (top, ex, prune)
+    @settings(
+        max_examples=10,
+        deadline=None,
+        derandomize=True,
+        suppress_health_check=[HealthCheck.too_slow],
+    )
+    @given(data=st.data())
+    def check(data):
+        q = data.draw(
+            st.builds(
+                lambda must, should, mm: BooleanQuery.build(must=must, should=should, minimum_should_match=mm),
+                st.lists(leaf, max_size=2),
+                st.lists(leaf, max_size=2),
+                st.integers(min_value=0, max_value=2),
+            )
+        )
+        expect = [(d, s) for d, s in oracle.search(q, 10)]
+        assert pos_searcher.search(q, 10, prune=True).collect() == expect, q
+        if not any(isinstance(c.query, MultiPhraseQuery) for c in q.clauses):
+            assert searcher.search(q, 10, prune=True).collect() == expect, q
+        want[f"q{len(drawn)}"] = expect
+        drawn[f"q{len(drawn)}"] = q
+
+        top = data.draw(_top_phrase(vocab, real_phrases, twins))
+        ranked = oracle.search(top, 20)
+        ex = sorted({ranked[i][0] for i in data.draw(st.lists(st.integers(0, 14), max_size=3)) if i < len(ranked)})
+        expect = [(d, s) for d, s in ranked if d not in ex][:10]
+        for prune in (True, False):
+            assert pos_searcher.search(top, 10, prune=prune, exclude_doc_ids=ex).collect() == expect, (top, ex, prune)
+        want[f"q{len(drawn)}"] = ranked[:10]
+        drawn[f"q{len(drawn)}"] = top
+
+    check()
+    _assert_batch(pos_searcher, drawn, want)
