@@ -20,10 +20,10 @@ TermAutomatonQuery.java`` + ``TermAutomatonScorer.java``):
   BM25 the multi-stats idf is a double accumulation of float32 per-term
   idfs, ``BM25Similarity.java:172-181``).
 
-Spark plan: one pruned positional-postings scan for the automaton's terms →
-repartition occurrences by ``doc_id`` (the only shuffle; occurrence rows of
-the query terms only, never the corpus) → a batched DFA run inside one
-``mapInPandas``.  The run is vectorized across documents: occurrences split
+Spark plan: one ``IndexSearcher._doc_scan`` of the automaton's terms (the
+only shuffle is on ``doc_id``, over occurrence rows of the query terms only,
+never the corpus) → a batched DFA run per Arrow batch of whole documents.
+The run is vectorized across documents: occurrences split
 into maximal consecutive-position segments, and one numpy step per *offset
 within segment* advances every live run of every segment at once (fancy
 indexing into the transition table) — iterations = max segment length, not
@@ -42,7 +42,7 @@ from typing import TYPE_CHECKING
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..plans.query import TermAutomatonQuery
 
@@ -170,26 +170,10 @@ def eval_term_automaton(searcher: "IndexSearcher", q: TermAutomatonQuery, boost:
     scorer = searcher._sim_scorer(boost * q.boost, [stats[t] for t in present])
     tmap = {t: i for i, t in enumerate(alphabet)}
 
-    occ = (
-        searcher._positional_occurrences(present)
-        .repartition("doc_id")
-        .sortWithinPartitions("doc_id", "pos")
-    )
-
-    def run(iterator):
-        pdfs = [p for p in iterator if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        doc_arr = pdf["doc_id"].to_numpy(dtype=np.int64)
-        pos_arr = pdf["pos"].to_numpy(dtype=np.int64)
-        norm_arr = pdf["norm"].to_numpy(dtype=np.int64)
-        codes, uniq = pd.factorize(pdf["term"])
+    def run(terms, doc_ids, norms, pos):
+        codes, uniq = pd.factorize(terms)
         lut = np.asarray([tmap[u] for u in uniq], dtype=np.int64)
-        docs_u, freq, first_row = automaton_freqs(doc_arr, pos_arr, lut[codes], delta, accept)
-        if docs_u.size == 0:
-            return
-        scores = scorer(freq, norm_arr[first_row])
-        yield pd.DataFrame({"doc_id": docs_u, "score": scores})
+        docs_u, freq, first_row = automaton_freqs(doc_ids, pos, lut[codes], delta, accept)
+        return pd.DataFrame({"doc_id": docs_u, "score": scorer(freq, norms[first_row])})
 
-    return occ.mapInPandas(run, schema="doc_id bigint, score float")
+    return searcher._doc_scan(present, run, "doc_id bigint, score float")

@@ -108,7 +108,7 @@ MAX_CLAUSE_COUNT = 1024  # BooleanQuery.maxClauseCount analog
 # terms are far above it and pruning engages exactly where it matters
 _MIN_PRUNE_POSTINGS = 200_000
 # a flat term query below the pre-pass gate whose postings (Σdf) fit this
-# budget, and an exact phrase whose occurrences (Σttf) do, is answered on
+# budget, and a phrase whose occurrences (Σttf) do, is answered on
 # the driver from ONE pull of its blocks (~1-2 MB unpacked): no scoring
 # job, Python hop or exchange
 _DRIVER_MAX_POSTINGS = 1 << 16
@@ -177,8 +177,8 @@ def _exact_phrase_freqs(terms, doc_ids, norms, pos, slots, offsets) -> tuple:
     (``MultiPhraseQuery.java:245-258``) on :func:`_unpack_occurrences`
     arrays: slot m counts its alternatives' occurrences per ``(doc, pos -
     offsets[m])`` key; intersecting the keys across slots and multiplying
-    the counts keeps the multiplicities of the distributed ``(doc_id,
-    base)`` join.  Returns the matching ``(doc_ids, int64 freqs, int64
+    the counts counts each start once per combination of matching
+    alternatives.  Returns the matching ``(doc_ids, int64 freqs, int64
     norms)``."""
     docs, first, dense = np.unique(doc_ids, return_index=True, return_inverse=True)
     # one int64 key per (dense doc, base); the dense ids stay below the
@@ -197,6 +197,53 @@ def _exact_phrase_freqs(terms, doc_ids, norms, pos, slots, offsets) -> tuple:
     hit, inv = np.unique(keys // width, return_inverse=True)
     freqs = np.bincount(inv, weights=counts, minlength=len(hit)).astype(np.int64)
     return docs[hit], freqs, norms[first[hit]].astype(np.int64)
+
+
+def _doc_slices(doc_ids) -> list:
+    """``(doc, lo, hi)`` of every document's run in ``doc_ids`` sorted by
+    doc."""
+    if doc_ids.size == 0:
+        return []
+    starts = np.r_[0, np.flatnonzero(np.diff(doc_ids)) + 1]
+    return list(zip(doc_ids[starts].tolist(), starts.tolist(), np.r_[starts[1:], doc_ids.size].tolist()))
+
+
+def _sloppy_phrase_freqs(terms, doc_ids, norms, pos, slots, offsets, slop: int) -> tuple:
+    """SloppyPhraseMatcher (``functions/sloppyphrase.py``) over one union
+    stream per slot (``MultiPhraseQuery.java:76-82``) on the same arrays as
+    :func:`_exact_phrase_freqs`: each doc holding some alternative of every
+    slot gets ``sloppy_phrase_freq`` of its ascending slot positions, the
+    slot's phrase position as its offset.  Returns the matching
+    ``(doc_ids, float32 freqs, int64 norms)``."""
+    from ..functions.sloppyphrase import sloppy_phrase_freq
+
+    order = np.lexsort((pos, doc_ids))
+    doc_ids, norms, pos = doc_ids[order], norms[order], pos[order]
+    on = [np.isin(terms[order], list(slot)) for slot in slots]
+    slot_sets = [frozenset(slot) for slot in slots]
+    docs, freqs, first = [], [], []
+    for doc, lo, hi in _doc_slices(doc_ids):
+        pos_lists = [pos[lo:hi][m[lo:hi]].tolist() for m in on]
+        if all(pos_lists):
+            f = sloppy_phrase_freq(slot_sets, pos_lists, slop, offsets=list(offsets))
+            if f > 0:
+                docs.append(doc)
+                freqs.append(f)
+                first.append(lo)
+    return (
+        np.asarray(docs, dtype=np.int64),
+        np.asarray(freqs, dtype=np.float32),
+        norms[np.asarray(first, dtype=np.int64)].astype(np.int64),
+    )
+
+
+def _phrase_freqs(terms, doc_ids, norms, pos, slots, offsets, slop: int) -> tuple:
+    """The phrase matcher of every phrase plan (``PhraseScorer.java:71-77``
+    over an exact or a sloppy ``PhraseMatcher``): :func:`_exact_phrase_freqs`
+    at slop 0, else :func:`_sloppy_phrase_freqs`."""
+    if slop > 0:
+        return _sloppy_phrase_freqs(terms, doc_ids, norms, pos, slots, offsets, slop)
+    return _exact_phrase_freqs(terms, doc_ids, norms, pos, slots, offsets)
 
 
 def _flat_group_scores(hits: list, n_req: int, mm: int) -> tuple:
@@ -686,136 +733,73 @@ class IndexSearcher:
             .mapInPandas(occurrences, schema="term string, doc_id bigint, norm int, pos bigint")
         )
 
-    def _eval_span_near(self, q, boost: float, stats: dict) -> DataFrame:
-        """SpanNearQuery over single-term clauses (``search/spans/
-        SpanNearQuery.java``, ``NearSpansOrdered.java:?`` ordered chain /
-        ``NearSpansUnordered.java`` two-clause window).
+    def _doc_scan(self, terms: list, kernel, schema: str) -> DataFrame:
+        """``kernel(terms, doc_ids, norms, pos)`` over the occurrences of
+        ``terms``, whole documents at a time, sorted by ``(doc_id, pos)``;
+        its frames make up the ``schema`` result.
 
-        Plan: occurrence rows from the positional postings, then an n-way
-        chain of doc_id equi-joins with position range conditions — all
-        Catalyst joins, the position inequality rides along the co-partitioned
-        doc_id key.  Ordered total-gap identity:
-        ``sum(p_{i+1}-p_i-1) = p_last - p_first - (n-1)`` for an increasing
-        chain, so one filter at the end suffices.  Constant score (documented
-        deviation — see plans.query.SpanNearQuery)."""
-        # nested span clauses (surround `a W b W c` trees, or-of-nears,
-        # first/posrange/not sub-spans, or a tuple whose elements are
-        # themselves span clauses — an inline SpanOr over clauses): evaluate
-        # via the recursive span enumerator — same join machinery, (s, e)
-        # streams.  The fast path below assumes every tuple element is a
-        # plain term string, so mixed tuples must route here too.
-        if any(
-            isinstance(c, Query)
-            or (isinstance(c, tuple) and any(not isinstance(t, str) for t in c))
-            for c in q.span_terms
-        ):
-            if not self.index.config.index_positions:
-                raise ValueError("SpanNearQuery needs an index built with index_positions=True")
-            uniq = sorted(t for t in q.terms() if t in stats)
-            if not uniq:
-                return self._empty()
-            occ = self._persist_span_occ(self._positional_occurrences(uniq))
-            st = self._span_enum(q, occ, stats)
-            if st is None:
-                return self._empty()
-            docs = st.select("doc_id").distinct()
-            return docs.select("doc_id", F.lit(float(boost * q.boost)).cast("float").alias("score"))
-        # normalize clauses: a tuple element is an inline single-term SpanOr
-        # (SpanOrQuery.java — union of the alternatives' span streams); a
-        # clause with no indexed alternative yields no spans at all
-        clauses = [tuple(c) if isinstance(c, tuple) else (c,) for c in q.span_terms]
-        clauses = [tuple(t for t in c if t in stats) for c in clauses]
-        if any(not c for c in clauses):
-            return self._empty()
+        Plan: :meth:`_positional_occurrences`, ONE shuffle on doc_id, a
+        ``(doc_id, pos)`` sort within partitions, then one kernel call per
+        Arrow batch (a per-document ``applyInPandas`` pays the Python hop per
+        group and was the slowest operator in the bench).  A document's rows
+        can straddle two batches, so the trailing document is carried over
+        to the next batch and flushed at the end of the partition."""
+
+        def arrays(pdf: pd.DataFrame) -> tuple:
+            return (
+                pdf["term"].to_numpy(),
+                pdf["doc_id"].to_numpy(dtype=np.int64),
+                pdf["norm"].to_numpy(dtype=np.int64),
+                pdf["pos"].to_numpy(dtype=np.int64),
+            )
+
+        def scan(iterator):
+            carry = None
+            for pdf in iterator:
+                if carry is not None:
+                    pdf = pd.concat([carry, pdf], ignore_index=True)
+                if len(pdf) == 0:
+                    continue
+                d = pdf["doc_id"].to_numpy(dtype=np.int64)
+                cut = int(np.searchsorted(d, d[-1]))
+                carry = pdf.iloc[cut:]
+                out = kernel(*arrays(pdf.iloc[:cut])) if cut else None
+                if out is not None and len(out):
+                    yield out
+            if carry is not None:
+                out = kernel(*arrays(carry))
+                if len(out):
+                    yield out
+
+        return (
+            self._positional_occurrences(terms)
+            .repartition("doc_id")
+            .sortWithinPartitions("doc_id", "pos")
+            .mapInPandas(scan, schema)
+        )
+
+    def _eval_span_clause_docs(self, q, boost: float, stats: dict) -> DataFrame:
+        """Standalone SpanNearQuery (``search/spans/SpanNearQuery.java``,
+        ``NearSpansOrdered``/``NearSpansUnordered``), SpanFirstQuery
+        (``SpanFirstQuery.java``: the span ends within the first ``end``
+        positions) or SpanPositionRangeQuery (``SpanPositionRangeQuery.java``:
+        ``start <= s`` and ``e <= end``), whatever their inner clauses: one
+        positional scan, persisted when it holds more than one term, feeds
+        the recursive span enumerator (:meth:`_span_enum`), then distinct
+        docs at a constant score (documented deviation — see
+        plans.query.SpanNearQuery)."""
         if not self.index.config.index_positions:
-            raise ValueError("SpanNearQuery needs an index built with index_positions=True")
-        uniq = list(dict.fromkeys(t for c in clauses for t in c))
-        occ = self._positional_occurrences(uniq)
-        occ = self._persist_span_occ(occ) if len(uniq) > 1 else occ
-
-        parts = [
-            occ.filter(F.col("term").isin(list(c))).select("doc_id", F.col("pos").alias(f"p{i}"))
-            for i, c in enumerate(clauses)
-        ]
-        if q.in_order:
-            m = parts[0]
-            for i in range(1, len(parts)):
-                m = m.join(parts[i], "doc_id").filter(F.col(f"p{i}") > F.col(f"p{i-1}"))
-            m = m.filter(
-                (F.col(f"p{len(clauses)-1}") - F.col("p0") - F.lit(len(clauses) - 1)) <= F.lit(int(q.slop))
-            )
-        elif len(clauses) == 2:
-            m = parts[0].join(parts[1], "doc_id").filter(
-                (F.abs(F.col("p1") - F.col("p0")) - 1 <= F.lit(int(q.slop))) & (F.col("p1") != F.col("p0"))
-            )
-        else:
-            # n-ary NearSpansUnordered window over unit-width spans:
-            # (max(p)+1 - min(p)) - n <= slop (NearSpansUnordered.java:44-95)
-            pcols = [F.col(f"p{i}") for i in range(len(clauses))]
-            m = parts[0]
-            for i in range(1, len(parts)):
-                m = m.join(parts[i], "doc_id")
-            m = m.filter(
-                (F.greatest(*pcols) + 1 - F.least(*pcols)) - F.lit(len(clauses))
-                <= F.lit(int(q.slop))
-            )
-        docs = m.select("doc_id").distinct()
-        return docs.select("doc_id", F.lit(float(boost * q.boost)).cast("float").alias("score"))
-
-    def _eval_span_clause_docs(self, q, boost: float, stats: dict, kind: str) -> DataFrame:
-        """Standalone evaluation of a span query whose inner clause is a
-        composed span clause (not a plain term): one persisted positional
-        scan feeds the recursive enumerator, distinct docs, constant score —
-        the same path _eval_span_or takes for span-clause unions."""
-        if not self.index.config.index_positions:
-            raise ValueError(f"{kind} needs an index built with index_positions=True")
+            raise ValueError(f"{type(q).__name__} needs an index built with index_positions=True")
         from ..plans.query import _span_clause_terms
 
         uniq = [t for t in sorted(_span_clause_terms(q)) if t in stats]
         if not uniq:
             return self._empty()
-        occ = self._persist_span_occ(self._positional_occurrences(uniq))
-        st = self._span_enum(q, occ, stats)
+        occ = self._positional_occurrences(uniq)
+        st = self._span_enum(q, self._persist_span_occ(occ) if len(uniq) > 1 else occ, stats)
         if st is None:
             return self._empty()
         docs = st.select("doc_id").distinct()
-        return docs.select("doc_id", F.lit(float(boost * q.boost)).cast("float").alias("score"))
-
-    def _eval_span_first(self, q: SpanFirstQuery, boost: float, stats: dict) -> DataFrame:
-        """SpanFirstQuery (``search/spans/SpanFirstQuery.java``): the inner
-        span must end within the first ``end`` positions.  A plain-term inner
-        clause is a single predicate on the decoded positions, no join; a
-        composed inner clause (tuple / SpanNear / SpanOr / SpanNot / nested
-        first-posrange — the reference's full composability) routes through
-        the recursive span enumerator."""
-        if not isinstance(q.term, str):
-            return self._eval_span_clause_docs(q, boost, stats, "SpanFirstQuery")
-        if q.term not in stats:
-            return self._empty()
-        if not self.index.config.index_positions:
-            raise ValueError("SpanFirstQuery needs an index built with index_positions=True")
-        occ = self._positional_occurrences([q.term])
-        docs = occ.filter(F.col("pos") + 1 <= F.lit(int(q.end))).select("doc_id").distinct()
-        return docs.select("doc_id", F.lit(float(boost * q.boost)).cast("float").alias("score"))
-
-    def _eval_span_posrange(self, q, boost: float, stats: dict) -> DataFrame:
-        """SpanPositionRangeQuery (``search/spans/SpanPositionRangeQuery.
-        java``): spans with ``start <= s`` and ``e <= end``.  Plain-term
-        inner clause: one predicate over the decoded positions, no join;
-        composed inner clause: the recursive span enumerator (same
-        composability as SpanFirstQuery)."""
-        if not isinstance(q.term, str):
-            return self._eval_span_clause_docs(q, boost, stats, "SpanPositionRangeQuery")
-        if q.term not in stats:
-            return self._empty()
-        if not self.index.config.index_positions:
-            raise ValueError("SpanPositionRangeQuery needs index_positions=True")
-        occ = self._positional_occurrences([q.term])
-        docs = (
-            occ.filter((F.col("pos") >= F.lit(int(q.start))) & (F.col("pos") + 1 <= F.lit(int(q.end))))
-            .select("doc_id")
-            .distinct()
-        )
         return docs.select("doc_id", F.lit(float(boost * q.boost)).cast("float").alias("score"))
 
     def _expand_span_multiterm(self, w) -> tuple:
@@ -1091,96 +1075,29 @@ class IndexSearcher:
         return docs.select("doc_id", F.lit(float(boost * q.boost)).cast("float").alias("score"))
 
     def _eval_multiphrase(self, q: MultiPhraseQuery, boost: float, stats: dict) -> DataFrame:
-        """MultiPhraseQuery (``search/MultiPhraseQuery.java``): exact phrase
-        with per-slot term alternatives, straight from the positional
-        postings.
+        """MultiPhraseQuery (``search/MultiPhraseQuery.java``): a phrase with
+        per-slot term alternatives, exact or sloppy (``setSlop``,
+        ``:76-82``), straight from the positional postings.
 
-        Plan: per slot, the union of its alternatives' occurrences (the
-        UnionPostingsEnum, ``MultiPhraseQuery.java:245-258``) exploded to
-        (doc_id, pos - slot) rows; the n-way equi-join on (doc_id, base)
-        leaves one row per matching start position; count per doc = phrase
-        tf.  Scored by the similarity's multi-term scorer over the stats of
-        all indexed terms of all slots (``:212-238`` allTermStats)."""
+        Plan: one :meth:`_doc_scan` over the occurrences of every slot's
+        alternatives; per batch :func:`_phrase_freqs` matches each slot's
+        union stream (UnionPostingsEnum, ``:245-258``), and the similarity's
+        multi-term scorer scores the freq over the stats of all indexed
+        terms of all slots (``:212-238`` allTermStats)."""
         slots = [tuple(t for t in slot if t in stats) for slot in q.slots]
         if not slots or not all(slots):
             return self._empty()
         if not self.index.config.index_positions:
             raise ValueError("MultiPhraseQuery needs an index built with index_positions=True")
         scorer = self._sim_scorer(boost * q.boost, [stats[t] for slot in slots for t in slot])
+        offsets, slop = q.slot_positions(), int(q.slop)
+
+        def kernel(terms, doc_ids, norms, pos):
+            docs, freqs, doc_norms = _phrase_freqs(terms, doc_ids, norms, pos, slots, offsets, slop)
+            return pd.DataFrame({"doc_id": docs, "score": scorer(freqs, doc_norms)})
+
         uniq = list(dict.fromkeys(t for slot in slots for t in slot))
-        occ = self._positional_occurrences(uniq)
-        occ = self._persist_span_occ(occ) if len(uniq) > 1 else occ
-        positions = list(q.slot_positions())
-
-        if q.slop > 0:
-            return self._eval_multiphrase_sloppy(q, slots, positions, occ, scorer)
-
-        matched = None
-        for m, slot in enumerate(slots):
-            part = occ.filter(F.col("term").isin(list(slot))).select(
-                "doc_id", "norm", (F.col("pos") - F.lit(positions[m])).alias("base")
-            )
-            matched = part if matched is None else matched.join(part.select("doc_id", "base"), ["doc_id", "base"])
-        ptf = matched.groupBy("doc_id").agg(
-            F.count("*").cast("bigint").alias("freq"), F.first("norm").alias("norm")
-        )
-        return self._freq_scores(ptf, scorer)
-
-    def _eval_multiphrase_sloppy(self, q: MultiPhraseQuery, slots, positions, occ, scorer) -> DataFrame:
-        """MultiPhraseQuery with slop (``MultiPhraseQuery.java:76-82`` setSlop
-        → ``SloppyPhraseMatcher`` over one union-postings stream per slot,
-        ``PhraseQuery.java`` sloppy scorer): per candidate doc, slot k's
-        stream is the merged ascending positions of its alternatives
-        (UnionPostingsEnum), fed to the exact repeat-aware matcher with the
-        slot's explicit phrase position as its offset; float32 freq =
-        Σ 1/(1+matchLength) scored like the exact path.
-
-        Plan: slot-presence semi-joins narrow to docs holding some
-        alternative of EVERY slot (conjunction approximation — same shape as
-        the two-phase phrase verify), then ONE shuffle groups each candidate doc's
-        (term, pos) rows for the Arrow-batched matcher UDF.  Postings volume
-        is bounded by the query's term union, never the corpus."""
-        from ..functions.sloppyphrase import sloppy_phrase_freq
-
-        slot_sets = [frozenset(s) for s in slots]
-        slop = int(q.slop)
-        pres = occ.select("doc_id", "term").distinct()
-        cand = None
-        for slot in slot_sets:
-            d = pres.filter(F.col("term").isin(list(slot))).select("doc_id").distinct()
-            cand = d if cand is None else cand.join(d, "doc_id", "left_semi")
-        rows = (
-            occ.join(cand, "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(
-                F.first("norm").alias("norm"),
-                F.collect_list(F.struct("term", "pos")).alias("tp"),
-            )
-        )
-
-        def matcher(iterator):
-            for pdf in iterator:
-                if len(pdf) == 0:
-                    continue
-                freqs = np.zeros(len(pdf), dtype=np.float32)
-                for i, tp in enumerate(pdf["tp"]):
-                    by_term: dict = {}
-                    for r in tp:
-                        by_term.setdefault(r["term"], []).append(r["pos"])
-                    pos_lists = [
-                        sorted(p for t in slot for p in by_term.get(t, []))
-                        for slot in slot_sets
-                    ]
-                    freqs[i] = sloppy_phrase_freq(
-                        list(slot_sets), pos_lists, slop, offsets=positions
-                    )
-                keep = freqs > 0
-                if not keep.any():
-                    continue
-                s = scorer(freqs[keep], pdf["norm"].to_numpy(dtype=np.int64)[keep])
-                yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy()[keep], "score": s})
-
-        return rows.mapInPandas(matcher, schema="doc_id bigint, score float")
+        return self._doc_scan(uniq, kernel, "doc_id bigint, score float")
 
     @staticmethod
     def _as_multiphrase(q: PhraseQuery) -> MultiPhraseQuery:
@@ -1195,10 +1112,10 @@ class IndexSearcher:
 
         Without positions it runs two-phase (TwoPhaseIterator analog, SURVEY
         §4): approximate pass = conjunction of term postings; verify pass =
-        re-analyze candidate texts with positions and count adjacent runs
-        (ExactPhraseMatcher) or the sloppy freq (SloppyPhraseMatcher); the
-        freq is scored by the similarity's multi-term scorer over the
-        phrase's term stats (PhraseWeight)."""
+        re-analyze candidate texts with positions and match their tokens
+        with :func:`_phrase_freqs`, as every phrase plan does; the freq is
+        scored by the similarity's multi-term scorer over the phrase's term
+        stats (PhraseWeight)."""
         terms = list(q.phrase_terms)
         if any(t not in stats for t in terms):
             return self._empty()
@@ -1222,44 +1139,32 @@ class IndexSearcher:
         )
         analyzer = self.index.config.analyzer
         scorer = self._sim_scorer(boost * q.boost, [stats[t] for t in terms])
-        phrase = tuple(terms)
-
-        slop = int(q.slop)
-
-        def _exact_freq(toks) -> int:
-            n = 0
-            for j in range(len(toks) - len(phrase) + 1):
-                if all(
-                    toks[j + m][0] == phrase[m] and toks[j + m][1] == toks[j][1] + m
-                    for m in range(len(phrase))
-                ):
-                    n += 1
-            return n
-
-        def _sloppy_freq(toks) -> np.float32:
-            """Exact SloppyPhraseMatcher semantics (order-insensitive slack,
-            repeat-collision resolution, float32 freq = Σ 1/(1+matchLength)
-            per match) — see functions/sloppyphrase.py."""
-            from ..functions.sloppyphrase import sloppy_phrase_freq
-
-            pos_lists = [[p for t, p in toks if t == ph] for ph in phrase]
-            return sloppy_phrase_freq(list(phrase), pos_lists, slop)
+        slots, offsets, slop = [(t,) for t in terms], range(len(terms)), int(q.slop)
+        wanted = set(terms)
 
         def verify(iterator):
             for pdf in iterator:
                 if len(pdf) == 0:
                     continue
-                # float freq: the sloppy scorer feeds Σ 1/(1+matchLength) to
-                # the similarity (PhraseScorer.java:71-77); exact freq is integral
-                freqs = np.zeros(len(pdf), dtype=np.float32)
-                for i, txt in enumerate(pdf["_text"]):
-                    toks = analyzer.tokens_with_positions(txt)
-                    freqs[i] = _sloppy_freq(toks) if slop > 0 else np.float32(_exact_freq(toks))
-                keep = freqs > 0
-                if not keep.any():
-                    continue
-                s = scorer(freqs[keep], pdf["norm"].to_numpy(dtype=np.int64)[keep])
-                yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy()[keep], "score": s})
+                # the candidates' re-analysed phrase-term tokens as the
+                # occurrence arrays every phrase plan matches
+                toks = [
+                    [tp for tp in analyzer.tokens_with_positions(txt) if tp[0] in wanted]
+                    for txt in pdf["_text"]
+                ]
+                flat = [tp for doc_toks in toks for tp in doc_toks]
+                lens = [len(doc_toks) for doc_toks in toks]
+                docs, freqs, norms = _phrase_freqs(
+                    np.asarray([t for t, _ in flat], dtype=object),
+                    np.repeat(pdf["doc_id"].to_numpy(dtype=np.int64), lens),
+                    np.repeat(pdf["norm"].to_numpy(dtype=np.int64), lens),
+                    np.asarray([p for _, p in flat], dtype=np.int64),
+                    slots,
+                    offsets,
+                    slop,
+                )
+                if len(docs):
+                    yield pd.DataFrame({"doc_id": docs, "score": scorer(freqs, norms)})
 
         return cand_text.mapInPandas(verify, schema="doc_id bigint, score float")
 
@@ -1576,15 +1481,10 @@ class IndexSearcher:
             return self._eval_fuzzy_scored(q, boost)
         if isinstance(q, (PrefixQuery, WildcardQuery, RegexpQuery, TermRangeQuery, TermInSetQuery)):
             return self._eval_multiterm(q, boost)
-        if isinstance(q, SpanNearQuery):
-            return self._eval_span_near(q, boost, stats)
-        if isinstance(q, SpanFirstQuery):
-            return self._eval_span_first(q, boost, stats)
+        if isinstance(q, (SpanNearQuery, SpanFirstQuery, SpanPositionRangeQuery)):
+            return self._eval_span_clause_docs(q, boost, stats)
         from ..plans.query import SpanMultiTermWrapper as _SMW
-        from ..plans.query import SpanPositionRangeQuery as _SPR
 
-        if isinstance(q, _SPR):
-            return self._eval_span_posrange(q, boost, stats)
         if isinstance(q, _SMW):
             return self._evaluate(self._rewrite_span_multiterm(q), boost, stats)
         if isinstance(q, SpanOrQuery):
@@ -1832,16 +1732,16 @@ class IndexSearcher:
         return self._driver_ranked(docs, sums.astype(np.float32), k, exclude, deleted)
 
     def _driver_phrase_top_k(self, q: Query, stats: dict, k: int, exclude) -> Optional[DataFrame]:
-        """The top-k of a small exact PhraseQuery or MultiPhraseQuery on an
-        index with positions, matched on the driver: ONE job pulls the
-        terms' positional blocks, :func:`_exact_phrase_freqs` counts the
-        phrase per doc and the similarity scores it as
+        """The top-k of a small PhraseQuery or MultiPhraseQuery, exact or
+        sloppy, on an index with positions, matched on the driver: ONE job
+        pulls the terms' positional blocks, :func:`_phrase_freqs` matches
+        the phrase per doc and the similarity scores it as
         :meth:`_eval_multiphrase` does.  None — run the distributed plan —
-        for other queries, sloppy phrases, or when :meth:`_driver_gate`
-        refuses Σttf (the occurrences decoded)."""
+        for other queries, or when :meth:`_driver_gate` refuses Σttf (the
+        occurrences decoded)."""
         if isinstance(q, PhraseQuery):
             q = self._as_multiphrase(q)
-        if not isinstance(q, MultiPhraseQuery) or q.slop or not self.index.config.index_positions:
+        if not isinstance(q, MultiPhraseQuery) or not self.index.config.index_positions:
             return None
         slots = [tuple(t for t in slot if t in stats) for slot in q.slots]
         terms = sorted({t for slot in slots for t in slot})
@@ -1852,8 +1752,8 @@ class IndexSearcher:
             return self._empty()
         with self._job_description("search: driver positions pull"):
             pdf = self._postings_for(terms).select(*_POS_COLS).toPandas()
-        docs, freqs, norms = _exact_phrase_freqs(
-            *_unpack_occurrences(pdf, self.index.config.codec), slots, q.slot_positions()
+        docs, freqs, norms = _phrase_freqs(
+            *_unpack_occurrences(pdf, self.index.config.codec), slots, q.slot_positions(), int(q.slop)
         )
         scorer = self._sim_scorer(q.boost, [stats[t] for slot in slots for t in slot])
         return self._driver_ranked(docs, np.asarray(scorer(freqs, norms), dtype=np.float32), k, exclude, deleted)
@@ -1873,13 +1773,13 @@ class IndexSearcher:
            (Σdf) fit ``_DRIVER_MAX_POSTINGS``: one pull of the blocks, numpy
            scoring, no scoring job or exchange;
         3. the driver phrase path (:meth:`_driver_phrase_top_k`), for a
-           top-level exact PhraseQuery or MultiPhraseQuery on an index with
-           positions whose occurrences (Σttf) fit the same budget: one pull
-           of the positional blocks and a numpy phrase matcher, no persist,
-           join or scoring UDF;
-        4. a batch of one — every other query, every sloppy phrase, and
-           every query with ``prune=False`` (the reference arm, without the
-           pre-pass): the :meth:`batch_search` clause table
+           top-level PhraseQuery or MultiPhraseQuery, exact or sloppy, on an
+           index with positions whose occurrences (Σttf) fit the same
+           budget: one pull of the positional blocks and the phrase matcher
+           on the driver, no shuffle or Python hop;
+        4. a batch of one — every other query and every query with
+           ``prune=False`` (the reference arm, without the pre-pass): the
+           :meth:`batch_search` clause table
            (:meth:`_clause_table`) and evaluator (:meth:`_matches`), ending
            in ``orderBy().limit()`` (TakeOrderedAndProject).
 
@@ -2573,10 +2473,9 @@ class IndexSearcher:
         fixed-point contract path (saturation is strictly monotone in freq,
         so both outputs induce the same ranking up to quantization).
 
-        Plan shape: occurrence rows are bulk-decoded from the .pos stream
-        (no per-row Python), shuffled once on doc_id; each group is one
-        document's occurrences of the query terms (tiny), minimized with the
-        reference's iterator algorithms inside an Arrow batch.
+        Plan: one :meth:`_doc_scan`; each document's occurrences of the
+        query terms (tiny) are minimized with the reference's iterator
+        algorithms.
         """
         from ..functions.intervals import (
             interval_freq,
@@ -2593,86 +2492,29 @@ class IndexSearcher:
         stats = self._term_stats(set(uniq))
         if any(t not in stats for t in uniq):
             return self._empty() if output == "score" else self._empty().withColumnRenamed("score", "freq_q")
-        occ = self._positional_occurrences(uniq)
         n = len(terms)
         minimize = minimal_ordered_intervals if ordered else minimal_unordered_intervals
         quantized = output == "freq_q"
-        schema = "doc_id bigint, freq_q bigint" if quantized else "doc_id bigint, score float"
-
         val_col = "freq_q" if quantized else "score"
-        val_dtype = "int64" if quantized else "float32"
+        schema = "doc_id bigint, freq_q bigint" if quantized else "doc_id bigint, score float"
+        term_order = [uniq.index(t) for t in terms]
 
-        # One shuffle on doc_id, then a sorted partition scan that walks every
-        # document in the Arrow batch with numpy slices.  groupBy(doc_id).
-        # applyInPandas here would invoke the Python group machinery once per
-        # matching DOCUMENT (~ms each) — thousands of matching docs made that
-        # the slowest operator in the bench; this shape pays per BATCH instead.
-        # A document's rows can straddle two Arrow batches inside a task, so
-        # the scan carries the trailing (possibly incomplete) document over to
-        # the next batch and flushes it at end of partition.
-        uniq_code = {t: i for i, t in enumerate(uniq)}
-        term_order = [uniq_code[t] for t in terms]
-
-        def scan(iterator):
-            carry = None
-            out_docs: list = []
-            out_vals: list = []
-
-            def run_doc(doc: int, codes: np.ndarray, pos: np.ndarray) -> None:
-                by_code = []
-                for c in range(len(uniq)):
-                    p = pos[codes == c]
-                    if p.size == 0:
-                        return
-                    by_code.append(np.sort(p))
-                iv = minimize([by_code[c] for c in term_order])
-                if quantized:
-                    v = interval_freq_quantized(iv, n, max_gaps)
-                    if v:
-                        out_docs.append(doc)
-                        out_vals.append(v)
-                else:
-                    v = interval_freq(iv, n, max_gaps)
-                    if v:
-                        out_docs.append(doc)
-                        out_vals.append(saturation_score(v, boost, pivot))
-
-            def run_range(d: np.ndarray, codes: np.ndarray, pos: np.ndarray) -> None:
-                bounds = np.flatnonzero(np.diff(d)) + 1
-                for lo, hi in zip(np.r_[0, bounds], np.r_[bounds, d.size]):
-                    run_doc(int(d[lo]), codes[lo:hi], pos[lo:hi])
-
-            def flush() -> pd.DataFrame:
-                pdf_out = pd.DataFrame(
-                    {
-                        "doc_id": np.asarray(out_docs, dtype=np.int64),
-                        val_col: np.asarray(out_vals, dtype=val_dtype),
-                    }
-                )
-                out_docs.clear()
-                out_vals.clear()
-                return pdf_out
-
-            for pdf in iterator:
-                if carry is not None:
-                    pdf = pd.concat([carry, pdf], ignore_index=True)
-                d = pdf["doc_id"].to_numpy(dtype=np.int64)
-                if d.size == 0:
+        def kernel(terms_arr, doc_ids, norms, pos):
+            rows = []
+            for doc, lo, hi in _doc_slices(doc_ids):
+                doc_terms, doc_pos = terms_arr[lo:hi], pos[lo:hi]
+                by_term = [doc_pos[doc_terms == t] for t in uniq]
+                if any(p.size == 0 for p in by_term):
                     continue
-                # last doc may continue in the next batch — hold it back
-                cut = np.searchsorted(d, d[-1], side="left")
-                carry = pdf.iloc[cut:].copy()
-                if cut:
-                    codes = pdf["term"].iloc[:cut].map(uniq_code).to_numpy(dtype=np.int64)
-                    run_range(d[:cut], codes, pdf["pos"].to_numpy(dtype=np.int64)[:cut])
-                    yield flush()
-            if carry is not None and len(carry):
-                d = carry["doc_id"].to_numpy(dtype=np.int64)
-                codes = carry["term"].map(uniq_code).to_numpy(dtype=np.int64)
-                run_range(d, codes, carry["pos"].to_numpy(dtype=np.int64))
-                yield flush()
+                iv = minimize([by_term[c] for c in term_order])
+                v = interval_freq_quantized(iv, n, max_gaps) if quantized else interval_freq(iv, n, max_gaps)
+                if v:
+                    rows.append((doc, v if quantized else saturation_score(v, boost, pivot)))
+            return pd.DataFrame(rows, columns=["doc_id", val_col]).astype(
+                {"doc_id": np.int64, val_col: np.int64 if quantized else np.float32}
+            )
 
-        scored = occ.repartition("doc_id").sortWithinPartitions("doc_id").mapInPandas(scan, schema)
+        scored = self._doc_scan(uniq, kernel, schema)
         if self.index.deletes is not None:
             scored = scored.join(self.index.deletes.select("doc_id"), "doc_id", "left_anti")
         return scored.orderBy(F.desc(val_col), F.asc("doc_id")).limit(k)
@@ -2696,8 +2538,8 @@ class IndexSearcher:
         analog; pinned against the reference's TestIntervals expected
         interval arrays by the ft_golden_intervals contract row).
 
-        Same plan shape as :meth:`interval_query`: bulk .pos decode, ONE
-        doc_id shuffle, per-doc evaluation inside Arrow batches."""
+        Same plan as :meth:`interval_query`: one :meth:`_doc_scan`, the
+        source tree evaluated per document."""
         from ..functions.interval_sources import (
             evaluate,
             source_freq,
@@ -2714,96 +2556,31 @@ class IndexSearcher:
         quantized = output == "freq_q"
         intervals_out = output == "intervals"
         val_col = "freq_q" if quantized else "score"
-        val_dtype = np.int64 if quantized else np.float32
         if intervals_out:
             schema = "doc_id long, start int, end int"
+            dtypes = {"doc_id": np.int64, "start": np.int32, "end": np.int32}
         else:
             schema = f"doc_id long, {val_col} {'long' if quantized else 'float'}"
+            dtypes = {"doc_id": np.int64, val_col: np.int64 if quantized else np.float32}
         if not live:
             # empty result must still carry the documented schema for THIS
             # output mode — intervals callers select (doc_id, start, end)
             return self._local_frame([], schema)
-        occ = self._positional_occurrences(live)
 
-        def scan(iterator):
-            carry = None
-            out_docs: list = []
-            out_vals: list = []
-            out_starts: list = []
-            out_ends: list = []
-
-            def run_doc(doc: int, terms_arr: np.ndarray, pos: np.ndarray) -> None:
-                positions = {}
-                for t in np.unique(terms_arr):
-                    positions[t] = np.sort(pos[terms_arr == t]).tolist()
+        def kernel(terms_arr, doc_ids, norms, pos):
+            rows = []
+            for doc, lo, hi in _doc_slices(doc_ids):
+                doc_terms, doc_pos = terms_arr[lo:hi], pos[lo:hi]
+                positions = {t: doc_pos[doc_terms == t].tolist() for t in np.unique(doc_terms)}
                 if intervals_out:
-                    for s_, e_, _g in evaluate(source, positions):
-                        out_docs.append(doc)
-                        out_starts.append(s_)
-                        out_ends.append(e_)
-                elif quantized:
-                    v = source_freq_quantized(source, positions)
-                    if v:
-                        out_docs.append(doc)
-                        out_vals.append(v)
-                else:
-                    v = source_freq(source, positions)
-                    if v:
-                        out_docs.append(doc)
-                        out_vals.append(saturation_score(v, boost, pivot))
-
-            def run_range(d: np.ndarray, terms_arr, pos: np.ndarray) -> None:
-                bounds = np.flatnonzero(np.diff(d)) + 1
-                for lo, hi in zip(np.r_[0, bounds], np.r_[bounds, d.size]):
-                    run_doc(int(d[lo]), terms_arr[lo:hi], pos[lo:hi])
-
-            def flush() -> pd.DataFrame:
-                if intervals_out:
-                    pdf_out = pd.DataFrame(
-                        {
-                            "doc_id": np.asarray(out_docs, dtype=np.int64),
-                            "start": np.asarray(out_starts, dtype=np.int32),
-                            "end": np.asarray(out_ends, dtype=np.int32),
-                        }
-                    )
-                    out_docs.clear()
-                    out_starts.clear()
-                    out_ends.clear()
-                    return pdf_out
-                pdf_out = pd.DataFrame(
-                    {
-                        "doc_id": np.asarray(out_docs, dtype=np.int64),
-                        val_col: np.asarray(out_vals, dtype=val_dtype),
-                    }
-                )
-                out_docs.clear()
-                out_vals.clear()
-                return pdf_out
-
-            for pdf in iterator:
-                if carry is not None:
-                    pdf = pd.concat([carry, pdf], ignore_index=True)
-                d = pdf["doc_id"].to_numpy(dtype=np.int64)
-                if d.size == 0:
+                    rows.extend((doc, s_, e_) for s_, e_, _g in evaluate(source, positions))
                     continue
-                cut = np.searchsorted(d, d[-1], side="left")
-                carry = pdf.iloc[cut:].copy()
-                if cut:
-                    run_range(
-                        d[:cut],
-                        pdf["term"].to_numpy()[:cut],
-                        pdf["pos"].to_numpy(dtype=np.int64)[:cut],
-                    )
-                    yield flush()
-            if carry is not None and len(carry):
-                run_range(
-                    carry["doc_id"].to_numpy(dtype=np.int64),
-                    carry["term"].to_numpy(),
-                    carry["pos"].to_numpy(dtype=np.int64),
-                )
-                yield flush()
+                v = source_freq_quantized(source, positions) if quantized else source_freq(source, positions)
+                if v:
+                    rows.append((doc, v if quantized else saturation_score(v, boost, pivot)))
+            return pd.DataFrame(rows, columns=list(dtypes)).astype(dtypes)
 
-        scored = occ.repartition("doc_id").sortWithinPartitions("doc_id").mapInPandas(scan, schema)
+        scored = self._doc_scan(live, kernel, schema)
         if self.index.deletes is not None:
             scored = scored.join(self.index.deletes.select("doc_id"), "doc_id", "left_anti")
         if intervals_out:

@@ -111,6 +111,8 @@ class OracleEngine:
                 norm = float(self.cache[self.norm[d]])
                 out[d] = np.float32(w * np.float32(float(tf) / (float(tf) + norm)))
             return out
+        if isinstance(q, (PhraseQuery, MultiPhraseQuery)) and q.slop > 0:
+            raise NotImplementedError("OracleEngine scores exact phrases only")
         if isinstance(q, PhraseQuery):
             terms = list(q.phrase_terms)
             if any(t not in self.postings for t in terms):

@@ -535,11 +535,12 @@ def test_driver_phrase_path_budget_and_jobs(spark, pos_index8, monkeypatch):
     """The driver phrase path's gates and cost on the positional fixture
     index.  Below the postings budget an exact phrase plans a
     LocalTableScan, and its search + collect runs at most two Spark jobs
-    (the stats lookup and one positions pull); a sloppy phrase plans the
-    distributed matcher.  With 5 pending deletes the driver path drops them
-    and with 300 (past the 256 cap) the distributed plan runs: both equal
-    the ``prune=False`` arm.  With the budget under the phrase's Σttf the
-    plan holds the distributed join and its scoring UDF again."""
+    (the stats lookup and one positions pull); so do sloppy phrases, equal
+    to the ``prune=False`` arm.  With 5 pending deletes the driver path
+    drops them and with 300 (past the 256 cap) the distributed doc scan
+    runs: both equal the ``prune=False`` arm.  With the budget under the
+    phrase's Σttf the plan holds the doc scan again: one exchange on doc_id
+    and no join."""
     import dataclasses
 
     from lucene_solr_spark.operators import searcher as searcher_mod
@@ -553,11 +554,12 @@ def test_driver_phrase_path_budget_and_jobs(spark, pos_index8, monkeypatch):
     sc = spark.sparkContext
     assert _jobs(sc, lambda: IndexSearcher(pos_index8).search(q, 10).collect()) <= 2
     for sloppy in (PhraseQuery(q.phrase_terms, slop=1), MultiPhraseQuery((("ge0",), ("vecodu", "numa")), slop=2)):
-        assert "MapInPandas matcher" in _plan(s.search(sloppy, 10).df), sloppy
+        assert "LocalTableScan" in _plan(s.search(sloppy, 10).df), sloppy
+        assert s.search(sloppy, 10).collect() == s.search(sloppy, 10, prune=False).collect(), sloppy
 
     top = [d for d, _ in s.search(q, 10, prune=False).collect()]
     filler = [d for d in range(400) if d not in top][: 300 - 5]
-    for ids, path in ((top[:5], "LocalTableScan"), (top[:5] + filler, "freq_score")):
+    for ids, path in ((top[:5], "LocalTableScan"), (top[:5] + filler, "Exchange hashpartitioning(doc_id")):
         deletes = spark.createDataFrame([(i,) for i in ids], "doc_id long")
         sdel = IndexSearcher(dataclasses.replace(pos_index8, deletes=deletes))
         got = sdel.search(q, 10)
@@ -568,4 +570,4 @@ def test_driver_phrase_path_budget_and_jobs(spark, pos_index8, monkeypatch):
     n_ttf = sum(ttf for _, ttf in s._term_stats(set(q.phrase_terms)).values())
     monkeypatch.setattr(searcher_mod, "_DRIVER_MAX_POSTINGS", n_ttf - 1)
     above = _plan(IndexSearcher(pos_index8).search(q, 10).df)
-    assert "Join" in above and "freq_score" in above, above
+    assert above.count("Exchange hashpartitioning(doc_id") == 1 and "Join" not in above, above

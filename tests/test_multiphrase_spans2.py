@@ -15,6 +15,7 @@ from lucene_solr_spark.operators.searcher import IndexSearcher
 from lucene_solr_spark.plans.query import (
     ConstantScoreQuery,
     MultiPhraseQuery,
+    PhraseQuery,
     SpanFirstQuery,
     SpanNearQuery,
     SpanNotQuery,
@@ -66,6 +67,12 @@ def test_multiphrase_single_alternatives_equals_phrase(pos_searcher2, oracle):
     mq = MultiPhraseQuery((("ge0",), ("vecodu",)))
     pq = PhraseQuery(("ge0", "vecodu"))
     assert pos_searcher2.search(mq, 10).collect() == pos_searcher2.search(pq, 10).collect()
+
+
+def test_oracle_refuses_sloppy_phrases(oracle):
+    for q in (PhraseQuery(("ge0", "vecodu"), slop=1), MultiPhraseQuery((("ge0",), ("vecodu",)), slop=1)):
+        with pytest.raises(NotImplementedError):
+            oracle.search(q, 10)
 
 
 def test_multiphrase_missing_slot_is_empty(pos_searcher2):

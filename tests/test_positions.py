@@ -59,3 +59,32 @@ def test_positions_survive_merge(spark_corpus, pos_index, searcher):
 
 def test_non_positional_index_has_null_positions(index8):
     assert index8.postings.filter("positions IS NOT NULL").count() == 0
+
+
+def test_doc_scan_with_documents_straddling_arrow_batches(spark, pos_index):
+    """Under 16-record Arrow batches the occurrence scan splits documents
+    across batches; the carried-over document keeps every positional scorer
+    equal to its default-batch result."""
+    from lucene_solr_spark.functions.interval_sources import IOr, IOrdered, ITerm
+    from lucene_solr_spark.plans.query import TermAutomatonQuery
+
+    s = IndexSearcher(pos_index)
+    src = IOrdered((IOr((ITerm("vecodu"), ITerm("numa"))), ITerm("ge0")))
+    queries = {
+        "exact": PhraseQuery(("ge0", "vecodu")),
+        "sloppy": PhraseQuery(("ge0", "vecodu"), slop=2),
+        "automaton": TermAutomatonQuery.from_phrases(("ge0", "vecodu"), ("numa", "ge0")),
+    }
+    runs = {name: (lambda q=q: s.search(q, 50, prune=False).collect()) for name, q in queries.items()}
+    runs["interval"] = lambda: s.interval_query(["ge0", "vecodu"], k=50).collect()
+    runs["intervals"] = lambda: s.interval_source_query(src, output="intervals").collect()
+    want = {name: run() for name, run in runs.items()}
+    assert all(want.values()), want
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        got = {name: run() for name, run in runs.items()}
+    finally:
+        spark.conf.set(key, prev)
+    assert got == want

@@ -7,6 +7,8 @@ fixture vocabulary (including absent terms, duplicate clauses, nested groups,
 FILTER clauses, MUST_NOT subtrees, minShouldMatch edge cases); the distributed engine with pruning ON must match
 the scalar oracle on doc ids AND float32 scores for every tree."""
 
+import dataclasses
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -155,8 +157,8 @@ def pos_searcher(pos_index8, spark_corpus):
 
 
 def _top_phrase(vocab, real_phrases, twins):
-    """A top-level exact phrase leaf: a real phrase or its multiphrase twin,
-    a repeated-term phrase, or a two-slot multiphrase with gapped slot
+    """A top-level phrase leaf at slop 0-2: a real phrase or its multiphrase
+    twin, a repeated-term phrase, or a two-slot multiphrase with gapped slot
     positions (and alternatives in its second slot)."""
     heads = st.sampled_from(vocab[:4])
     repeated = st.builds(lambda t, n: PhraseQuery((t,) * n), heads, st.integers(2, 3))
@@ -167,7 +169,11 @@ def _top_phrase(vocab, real_phrases, twins):
         heads,
         st.integers(2, 3),
     )
-    return st.one_of(st.sampled_from(real_phrases + twins), repeated, gapped)
+    return st.builds(
+        lambda q, slop: dataclasses.replace(q, slop=slop),
+        st.one_of(st.sampled_from(real_phrases + twins), repeated, gapped),
+        st.integers(0, 2),
+    )
 
 
 def test_random_phrase_trees_match_oracle(searcher, pos_searcher, oracle, vocab, real_phrases):
@@ -175,12 +181,14 @@ def test_random_phrase_trees_match_oracle(searcher, pos_searcher, oracle, vocab,
     one-term-per-slot MultiPhraseQuery twins inside random boolean trees.
     The positional index answers every tree through its one phrase path;
     trees without a multiphrase leaf also run the corpus verify pass of the
-    index without positions.  Each example also draws a top-level exact
-    phrase leaf (:func:`_top_phrase`) with random ``exclude_doc_ids`` among
-    its top 15: the driver phrase path (``prune=True``), the distributed
-    matcher (``prune=False``) and the oracle must agree bit for bit.  Then
-    every drawn tree and top-level phrase runs as ONE batch on the
-    positional searcher, each equal to its oracle top 10."""
+    index without positions.  Each example also draws a top-level phrase
+    leaf (:func:`_top_phrase`) with random ``exclude_doc_ids`` among its top
+    15: the driver phrase path (``prune=True``), the distributed doc scan
+    (``prune=False``) and, for a PhraseQuery, the verify pass must agree bit
+    for bit, with the oracle at slop 0 and with the unexcluded
+    ``prune=False`` ranking at slop > 0 (the oracle scores exact phrases
+    only).  Then every drawn tree and top-level phrase runs as ONE batch on
+    the positional searcher, each equal to its reference top 10."""
     twins = [MultiPhraseQuery(tuple((t,) for t in p.phrase_terms)) for p in real_phrases]
     leaf = st.one_of(st.sampled_from(real_phrases + twins), _leaf(vocab))
     drawn: dict = {}
@@ -210,11 +218,13 @@ def test_random_phrase_trees_match_oracle(searcher, pos_searcher, oracle, vocab,
         drawn[f"q{len(drawn)}"] = q
 
         top = data.draw(_top_phrase(vocab, real_phrases, twins))
-        ranked = oracle.search(top, 20)
+        ranked = pos_searcher.search(top, 20, prune=False).collect() if top.slop else oracle.search(top, 20)
         ex = sorted({ranked[i][0] for i in data.draw(st.lists(st.integers(0, 14), max_size=3)) if i < len(ranked)})
         expect = [(d, s) for d, s in ranked if d not in ex][:10]
         for prune in (True, False):
             assert pos_searcher.search(top, 10, prune=prune, exclude_doc_ids=ex).collect() == expect, (top, ex, prune)
+        if isinstance(top, PhraseQuery):
+            assert searcher.search(top, 10, exclude_doc_ids=ex).collect() == expect, (top, ex)
         want[f"q{len(drawn)}"] = ranked[:10]
         drawn[f"q{len(drawn)}"] = top
 

@@ -13,7 +13,6 @@ analyzer's token positions.
 
 import pytest
 
-from lucene_solr_spark.operators.indexer import IndexConfig, build_index
 from lucene_solr_spark.operators.searcher import IndexSearcher
 from lucene_solr_spark.plans.query import (
     SpanFirstQuery,
@@ -26,9 +25,8 @@ from lucene_solr_spark.plans.query import (
 
 
 @pytest.fixture(scope="module")
-def pos_searcher3(spark_corpus):
-    idx = build_index(spark_corpus, IndexConfig(n_partitions=8, index_positions=True)).persist()
-    return IndexSearcher(idx, spark_corpus)
+def pos_searcher3(pos_index8, spark_corpus):
+    return IndexSearcher(pos_index8, spark_corpus)
 
 
 def _tok_positions(fixture_corpus_pdf):

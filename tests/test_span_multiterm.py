@@ -3,7 +3,6 @@ and SpanPositionRangeQuery, brute-forced against python position scans."""
 
 import pytest
 
-from lucene_solr_spark.operators.indexer import IndexConfig, build_index
 from lucene_solr_spark.operators.searcher import IndexSearcher
 from lucene_solr_spark.plans.query import (
     MatchNoDocsQuery,
@@ -17,9 +16,8 @@ from lucene_solr_spark.plans.query import (
 
 
 @pytest.fixture(scope="module")
-def pos_searcher(spark_corpus):
-    idx = build_index(spark_corpus, IndexConfig(n_partitions=8, index_positions=True)).persist()
-    return IndexSearcher(idx, spark_corpus)
+def pos_searcher(pos_index8, spark_corpus):
+    return IndexSearcher(pos_index8, spark_corpus)
 
 
 @pytest.fixture(scope="module")

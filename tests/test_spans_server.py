@@ -11,15 +11,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.operators.indexer import IndexConfig, build_index
 from lucene_solr_spark.operators.searcher import IndexSearcher
 from lucene_solr_spark.plans.query import ConstantScoreQuery, SpanNearQuery, TermQuery
 
 
 @pytest.fixture(scope="module")
-def pos_searcher(spark_corpus):
-    idx = build_index(spark_corpus, IndexConfig(n_partitions=8, index_positions=True)).persist()
-    return IndexSearcher(idx, spark_corpus)
+def pos_searcher(pos_index8, spark_corpus):
+    return IndexSearcher(pos_index8, spark_corpus)
 
 
 def _brute_span_docs(corpus_pdf, analyzer, terms, slop, in_order):

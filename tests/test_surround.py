@@ -80,13 +80,8 @@ def test_parse_errors(bad):
 
 # ------------------------------------------------------------- end to end
 @pytest.fixture(scope="module")
-def pos_searcher(spark, fixture_corpus_pdf):
-    from lucene_solr_spark.operators.indexer import IndexConfig, assign_doc_ids, build_index
-
-    df = spark.createDataFrame(fixture_corpus_pdf)
-    corpus = assign_doc_ids(df, ("conv_id", "turn_idx"), n_partitions=8)
-    idx = build_index(corpus, IndexConfig(n_partitions=8, index_positions=True)).persist()
-    return IndexSearcher(idx, corpus)
+def pos_searcher(pos_index8, spark_corpus):
+    return IndexSearcher(pos_index8, spark_corpus)
 
 
 def _brute_spans(tokens, node):
